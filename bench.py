@@ -19,12 +19,7 @@ Instrumentation: every query line carries {wall, n_jobs, n_stages}
 (Spark job/stage counts for the best timed round, via per-round job
 groups + the status tracker) in the "detail" key, so a wall-clock
 regression can be attributed — same plan under JVM/GC pressure keeps
-its counts; plan drift changes them. Known limitation: setJobGroup is
-thread-local, so prelude jobs that fit()/fit_grouped() launch from
-their own ThreadPoolExecutor driver threads do not inherit the group
-— n_jobs/n_stages UNDERCOUNT for the fit queries by the racing
-prelude jobs (wall-clock is unaffected; attribution for those queries
-should lean on the wall + the plan assertions in tests/test_plans.py).
+its counts; plan drift changes them.
 
 Output contract: the LAST stdout line is a compact JSON headline
 {metric, value, unit, queries, sf} with no per-query detail, sized to

@@ -8,20 +8,23 @@ Query lifecycle per fit (all columns batched):
 4. prefilter + interleave distribution list     — driver
 5. parallel_fit fan-out (mapInPandas) + cache   — wave 3
 
-Waves 1 and 2 each run two independent Spark jobs from driver threads,
-so the prelude costs two job latencies, not four. Everything the
-executors need is broadcast (~KBs), so the fit cost is independent of
-table size beyond the scan.
+Waves 1 and 2 each run two independent Spark jobs, one of them from a
+helper driver thread (``_start``), so the prelude costs two job
+latencies, not four. The helper thread inherits the caller's job group,
+description and tags, so the racing jobs are attributed to the caller
+like inline ones. Everything the executors need is broadcast (~KBs), so
+the fit cost is independent of table size beyond the scan.
 """
 
 from __future__ import annotations
 
 import warnings
 import zlib
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 
 import numpy as np
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import NumericType
 
@@ -43,7 +46,11 @@ from spark_bestfit_spark.operators.sampling import (
     build_censored_sample,
     build_fitting_samples_multi,
 )
-from spark_bestfit_spark.operators.stats import column_stats, multi_column_stats
+from spark_bestfit_spark.operators.stats import (
+    column_stats,
+    multi_column_stats,
+    valid_column,
+)
 from spark_bestfit_spark.plans.config import FitterConfig
 from spark_bestfit_spark.results import FitResults
 
@@ -140,11 +147,96 @@ def _truncate_group_sample(
     return rng.choice(np.sort(arr), size=target, replace=False)
 
 
-class DistributionFitter:
-    """Fits a library of continuous distributions to numeric columns.
+def _start(spark: SparkSession, fn, *args, **kwargs) -> Future:
+    """Run ``fn(*args, **kwargs)`` on its own driver thread and return
+    its Future — the one way the fitters race two prelude jobs (Spark
+    schedules jobs from separate driver threads in parallel). The
+    thread inherits the caller's local properties (job group,
+    description, tags), so its jobs are attributed to the caller's
+    group exactly like jobs submitted inline. Exceptions surface from
+    ``.result()``."""
+    inherit = inheritable_thread_target(spark)
+    # pyspark hands back the session itself when pinned-thread mode is
+    # off: there are then no per-thread properties to carry over
+    target = fn if inherit is spark else inherit(fn)
+    pool = ThreadPoolExecutor(max_workers=1)
+    future = pool.submit(target, *args, **kwargs)
+    pool.shutdown(wait=False)
+    return future
 
-    Accepts Spark DataFrames natively and pandas DataFrames by
-    conversion (the reference's duck-typed input contract)."""
+
+def _merge_config(config: FitterConfig | None, overrides: dict):
+    """The caller's config (or the defaults) with keyword overrides."""
+    return (config or FitterConfig()).with_(**overrides)
+
+
+def _check_numeric(df: DataFrame, columns: list) -> dict:
+    """Raise unless every column exists and is numeric; returns the
+    ``{name: dataType}`` schema map."""
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    for c in columns:
+        if c not in schema:
+            raise ValueError(f"column {c!r} not found in DataFrame")
+        if not isinstance(schema[c], NumericType):
+            raise TypeError(
+                f"column {c!r} has non-numeric type {schema[c].simpleString()}"
+            )
+    return schema
+
+
+def _grouped_counts(
+    df: DataFrame, column: str, group_col: str, max_groups: int, *aggs
+):
+    """Grouped-fit prelude head: valid values of ``column`` in non-null
+    groups (a null key names no group), and ONE groupBy collecting
+    ``aggs`` plus the row count ``n`` per group. Returns (clean rows,
+    collected group rows); raises past ``max_groups``, because the
+    per-group samples and histograms/PMFs are driver-resident."""
+    clean = valid_column(df, column).filter(F.col(group_col).isNotNull())
+    rows = (
+        clean.groupBy(group_col)
+        .agg(*aggs, F.count("*").alias("n"))
+        .collect()
+    )
+    if len(rows) > max_groups:
+        raise ValueError(
+            f"fit_grouped: {len(rows)} groups exceed "
+            f"max_groups={max_groups}; the per-group histograms/PMFs and "
+            "samples are driver-resident — aggregate or bucket the "
+            "key first, or raise max_groups deliberately"
+        )
+    return clean, rows
+
+
+def _grouped_samples(
+    clean: DataFrame, column: str, group_col: str, counts: dict, config
+) -> dict:
+    """Per-group fitting samples from ONE stratified ``sampleBy`` pass:
+    keep fractions sized to ~1.3x the fitting sample (the
+    oversample-then-truncate convention of build_fitting_sample), then
+    the deterministic per-group truncation."""
+    target = config.fitting_sample_size
+    fractions = {
+        g: min(1.0, (target * 1.3) / n) for g, n in counts.items()
+    }
+    pdf = (
+        clean.select(group_col, column)
+        .sampleBy(group_col, fractions, seed=config.random_seed)
+        .toPandas()
+    )
+    samples: dict = {}
+    for g, sub in pdf.groupby(group_col, sort=False):
+        arr = sub[column].to_numpy(dtype=np.float64)
+        samples[g] = _truncate_group_sample(
+            arr[np.isfinite(arr)], target, config.random_seed, g
+        )
+    return samples
+
+
+class _Fitter:
+    """What the continuous and discrete fitters share: the session and
+    registry, name validation, the empty result and the cached-sample
+    plot data."""
 
     def __init__(
         self,
@@ -153,34 +245,6 @@ class DistributionFitter:
     ):
         self.spark = spark
         self.registry = registry or DistributionRegistry()
-
-    # ------------------------------------------------------------ plumbing
-    def register_distribution(self, name: str, dist, overwrite: bool = False):
-        return self.registry.register_distribution(name, dist, overwrite)
-
-    def _validate(self, df: DataFrame, columns: list, config: FitterConfig):
-        config.validate()
-        schema = {f.name: f.dataType for f in df.schema.fields}
-        for c in columns:
-            if c not in schema:
-                raise ValueError(f"column {c!r} not found in DataFrame")
-            if not isinstance(schema[c], NumericType):
-                raise TypeError(
-                    f"column {c!r} has non-numeric type {schema[c].simpleString()}"
-                )
-        if config.censoring_column is not None:
-            cc = config.censoring_column
-            if cc not in schema:
-                raise ValueError(f"censoring column {cc!r} not found")
-            from pyspark.sql.types import BooleanType, IntegerType, LongType
-
-            if not isinstance(
-                schema[cc], (BooleanType, IntegerType, LongType)
-            ):
-                raise TypeError(
-                    f"censoring column {cc!r} must be boolean/int/long, "
-                    f"got {schema[cc].simpleString()}"
-                )
 
     def _validate_names(self, names: list) -> None:
         """Fail fast on unknown distribution names: a typo'd name would
@@ -198,6 +262,82 @@ class DistributionFitter:
                 "DistributionRegistry.get_distributions() / "
                 "register_distribution() for the available set"
             )
+
+    def _empty_results(self) -> FitResults:
+        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
+
+        empty = self.spark.createDataFrame([], schema=FIT_RESULT_SCHEMA)
+        return FitResults(empty, registry=self.registry, cache=False)
+
+    @staticmethod
+    def _cached_sample(result, df, force_recompute: bool):
+        """Cache-first plot data (reference 'instant plotting' v2.10,
+        continuous_fitter.py:648-757): the result's cached fitting
+        sample — zero Spark jobs — unless ``force_recompute=True``;
+        None when ``df`` must be read instead. Passing ``df`` while a
+        cached sample exists emits a FutureWarning and still uses the
+        cache (reference v3.0.3 CHANGELOG). The warning points at the
+        public plot method's caller."""
+        if force_recompute or getattr(result, "_sample", None) is None:
+            if df is None:
+                raise ValueError(
+                    "result has no cached sample (or force_recompute=True)"
+                    ": pass the source df (and column if it differs from "
+                    "result.column_name)"
+                )
+            return None
+        if df is not None:
+            warnings.warn(
+                "a cached fitting sample is available; df is ignored "
+                "— pass force_recompute=True to re-evaluate the "
+                "DataFrame",
+                FutureWarning,
+                stacklevel=4,
+            )
+        return result._sample
+
+    def _plot_sample(self, result, df, column, force_recompute: bool):
+        """Raw-sample resolution for the point-wise plots (Q-Q / P-P /
+        comparison / discrete PMF need actual observations, not a
+        histogram): the cached sample, else up to 100k non-null rows of
+        ``df``."""
+        data = self._cached_sample(result, df, force_recompute)
+        if data is not None:
+            return data
+        df = _ensure_spark_df(self.spark, df)
+        col = column or result.column_name
+        return (
+            df.select(col).dropna().limit(100_000).toPandas()[col]
+            .to_numpy(dtype=np.float64)
+        )
+
+
+class DistributionFitter(_Fitter):
+    """Fits a library of continuous distributions to numeric columns.
+
+    Accepts Spark DataFrames natively and pandas DataFrames by
+    conversion (the reference's duck-typed input contract)."""
+
+    # ------------------------------------------------------------ plumbing
+    def register_distribution(self, name: str, dist, overwrite: bool = False):
+        return self.registry.register_distribution(name, dist, overwrite)
+
+    def _validate(self, df: DataFrame, columns: list, config: FitterConfig):
+        config.validate()
+        schema = _check_numeric(df, columns)
+        if config.censoring_column is not None:
+            cc = config.censoring_column
+            if cc not in schema:
+                raise ValueError(f"censoring column {cc!r} not found")
+            from pyspark.sql.types import BooleanType, IntegerType, LongType
+
+            if not isinstance(
+                schema[cc], (BooleanType, IntegerType, LongType)
+            ):
+                raise TypeError(
+                    f"censoring column {cc!r} must be boolean/int/long, "
+                    f"got {schema[cc].simpleString()}"
+                )
 
     def _select_distributions(
         self, config: FitterConfig, data: np.ndarray
@@ -230,9 +370,7 @@ class DistributionFitter:
             raise ValueError("provide column= or columns=")
         df = _ensure_spark_df(self.spark, df)
         cols = list(columns) if columns else [column]
-        config = (config or FitterConfig()).with_(**kwargs) if kwargs else (
-            config or FitterConfig()
-        )
+        config = _merge_config(config, kwargs)
         self._validate(df, cols, config)
         if distributions:
             self._validate_names(distributions)
@@ -263,8 +401,7 @@ class DistributionFitter:
         # the complete data — stats, histograms, and samples all derive
         # from it driver-side and the fit needs no further scan.
         #
-        # prelude jobs run CONCURRENTLY (Spark schedules jobs from
-        # separate driver threads in parallel): probe races the stats
+        # prelude jobs run CONCURRENTLY (_start): probe races the stats
         # aggregation, then the sample collect races the histogram —
         # 5 sequential job latencies become 3. The stats job is wasted
         # only when the probe comes back small, i.e. when the relation
@@ -273,13 +410,9 @@ class DistributionFitter:
         # early is pure wall-clock win. Results are unchanged (same
         # seeds, same plans) — only the submission order differs.
         probe_rows = config.fitting_sample_size + 1
-        pool = ThreadPoolExecutor(max_workers=2)
-        stats_future = pool.submit(multi_column_stats, src, cols)
+        stats_future = _start(self.spark, multi_column_stats, src, cols)
         probe = src.select(*cols).limit(probe_rows).toPandas()
-        threaded_stats = (
-            stats_future.result() if len(probe) >= probe_rows else None
-        )
-        pool.shutdown(wait=False, cancel_futures=True)
+        sample_map = None
         if len(probe) < probe_rows:
             all_stats, sample_map = {}, {}
             import pandas as pd
@@ -296,41 +429,35 @@ class DistributionFitter:
                     "count": int(vals.size),
                 }
                 sample_map[c] = vals
-            live_cols = [c for c in cols if all_stats[c]["count"] > 0]
-            if not live_cols:
-                return self._empty_results()
-            all_small = True
-            histograms = {}
         else:
-            all_stats = threaded_stats
-            live_cols = [c for c in cols if all_stats[c]["count"] > 0]
-            if not live_cols:
-                return self._empty_results()
-            # small-data shortcut: when every column's valid count fits
-            # in the fitting sample, the sample IS the complete data —
-            # the histogram can be built driver-side from it with
-            # identical semantics (same edges, left-closed bins, +eps
-            # top edge), saving one cluster job per fit
-            all_small = all(
-                all_stats[c]["count"] <= config.fitting_sample_size
-                for c in live_cols
-            )
+            all_stats = stats_future.result()
+        live_cols = [c for c in cols if all_stats[c]["count"] > 0]
+        if not live_cols:
+            return self._empty_results()
+        # small-data shortcut: when every column's valid count fits in
+        # the fitting sample (always true for a complete probe), the
+        # sample IS the complete data — the histogram can be built
+        # driver-side from it with identical semantics (same edges,
+        # left-closed bins, +eps top edge), saving one cluster job
+        all_small = all(
+            all_stats[c]["count"] <= config.fitting_sample_size
+            for c in live_cols
+        )
+        histograms = {}
+        if sample_map is None:
             # sample collect and histogram agg are independent given the
             # stats — run them as concurrent Spark jobs (second prelude
             # fusion; wall-clock = max of the two, not the sum)
-            pool = ThreadPoolExecutor(max_workers=2)
-            hist_future = None
-            if not all_small:
-                hist_future = pool.submit(
-                    compute_histograms_multi, src, live_cols, all_stats,
-                    config.bins, config.use_rice_rule,
-                )
+            hist_future = None if all_small else _start(
+                self.spark, compute_histograms_multi, src, live_cols,
+                all_stats, config.bins, config.use_rice_rule,
+            )
             sample_map = build_fitting_samples_multi(
                 src, live_cols, config,
                 {c: int(all_stats[c]["count"]) for c in live_cols},
             )
-            histograms = hist_future.result() if hist_future else {}
-            pool.shutdown(wait=False)
+            if hist_future is not None:
+                histograms = hist_future.result()
         if all_small:
             for c in live_cols:
                 sample = sample_map.get(c)
@@ -347,27 +474,55 @@ class DistributionFitter:
             if sample is None or sample.size < 2 or c not in histograms:
                 continue
             samples[c] = sample
-            method = config.estimation_method
-            if method == "auto":
-                method = "mse" if detect_heavy_tail(sample) else "mle"
-                if method == "mse":
-                    warnings.warn(
-                        f"column {c!r} looks heavy-tailed; using "
-                        "maximum-spacing estimation", stacklevel=2
-                    )
-            density, edges = histograms[c]
-            plans[c] = {
-                "names": (
-                    list(distributions) if distributions
-                    else self._select_distributions(config, sample)
-                ),
-                "sample": sample,
-                "density": density,
-                "edges": edges,
-                "method": method,
-            }
+            plans[c] = self._plan(
+                sample, histograms[c], distributions, config
+            )
+            if (
+                config.estimation_method == "auto"
+                and plans[c]["method"] == "mse"
+            ):
+                warnings.warn(
+                    f"column {c!r} looks heavy-tailed; using "
+                    "maximum-spacing estimation", stacklevel=2
+                )
         if not plans:
             return self._empty_results()
+        results = self._fan_out(plans, samples, config, bounds, (src, config))
+        if config.progress_callback is not None:
+            # materialize the fan-out under a tracked job group so the
+            # callback sees task completion (reference progress.py role)
+            from spark_bestfit_spark.progress import ProgressTracker
+
+            tracker = ProgressTracker(
+                self.spark, callback=config.progress_callback
+            )
+            with tracker.track(f"fitting {sum(len(p['names']) for p in plans.values())} distributions"):
+                results.count()
+        return results
+
+    def _plan(self, sample, histogram, distributions, config) -> dict:
+        """One column's fan-out plan: its distribution list, sample,
+        histogram and estimation method ('auto' resolved per sample)."""
+        method = config.estimation_method
+        if method == "auto":
+            method = "mse" if detect_heavy_tail(sample) else "mle"
+        density, edges = histogram
+        return {
+            "names": (
+                list(distributions) if distributions
+                else self._select_distributions(config, sample)
+            ),
+            "sample": sample,
+            "density": density,
+            "edges": edges,
+            "method": method,
+        }
+
+    def _fan_out(
+        self, plans: dict, samples: dict, config, bounds, source=None
+    ) -> FitResults:
+        """ONE (column, distribution) fan-out over the planned columns,
+        wrapped as the cached result relation."""
         broadcasts: list = []
         effective = sum(
             self.registry.effective_count(p["names"]) for p in plans.values()
@@ -386,60 +541,27 @@ class DistributionFitter:
                 self.spark, plans, config, self.registry, bounds=bounds,
                 broadcast_registry=broadcasts,
             )
-        results = FitResults(
+        return FitResults(
             result_df, registry=self.registry, samples=samples,
-            broadcasts=broadcasts, source=(src, config),
+            broadcasts=broadcasts, source=source,
             # lazy fits are KNOWN deferred -> best() skips the probe
             # job; eager fits stay on the cached probe (censored fits
             # legitimately carry all-null KS and must keep behaving as
             # deferred there)
             deferred_metrics=True if config.lazy_metrics else None,
         )
-        if config.progress_callback is not None:
-            # materialize the fan-out under a tracked job group so the
-            # callback sees task completion (reference progress.py role)
-            from spark_bestfit_spark.progress import ProgressTracker
-
-            tracker = ProgressTracker(
-                self.spark, callback=config.progress_callback
-            )
-            with tracker.track(f"fitting {sum(len(p['names']) for p in plans.values())} distributions"):
-                results.count()
-        return results
 
     # ------------------------------------------------------ instant plotting
     def _plot_data(
         self, result, df, column, bins: int, force_recompute: bool
     ):
-        """Cache-first plot-data resolution (reference 'instant
-        plotting' v2.10, continuous_fitter.py:648-757): the result's
-        cached fitting sample is used when present — zero Spark jobs —
-        unless ``force_recompute=True``, in which case (or when no
-        sample is cached) the distributed histogram is computed from
-        ``df``. Passing ``df`` while a cached sample exists emits a
-        FutureWarning and still uses the cache (reference v3.0.3
-        CHANGELOG: plots use the cached sample even when df is passed;
-        ``force_recompute=True`` opts into re-evaluation). Returns
-        (data, hist_density, bin_edges) with exactly one side
-        populated."""
-        if not force_recompute and getattr(result, "_sample", None) is not None:
-            if df is not None:
-                warnings.warn(
-                    "a cached fitting sample is available; df is ignored "
-                    "— pass force_recompute=True to re-evaluate the "
-                    "DataFrame",
-                    FutureWarning,
-                    stacklevel=3,
-                )
-            return result._sample, None, None
-        if df is None:
-            raise ValueError(
-                "result has no cached sample (or force_recompute=True): "
-                "pass the source df (and column if it differs from "
-                "result.column_name)"
-            )
-        from spark_bestfit_spark.operators.histogram import compute_histogram
-
+        """Cache-first plot data for the histogram plot: the cached
+        fitting sample (see ``_cached_sample``), else the distributed
+        histogram of ``df``. Returns (data, hist_density, bin_edges)
+        with exactly one side populated."""
+        data = self._cached_sample(result, df, force_recompute)
+        if data is not None:
+            return data, None, None
         df = _ensure_spark_df(self.spark, df)
         density, edges = compute_histogram(
             df, column or result.column_name, bins=bins
@@ -473,27 +595,7 @@ class DistributionFitter:
 
         if not results:
             raise ValueError("plot_comparison needs at least one result")
-        lead = results[0]
-        if not force_recompute and getattr(lead, "_sample", None) is not None:
-            if df is not None:
-                warnings.warn(
-                    "a cached fitting sample is available; df is ignored "
-                    "— pass force_recompute=True to re-evaluate the "
-                    "DataFrame",
-                    FutureWarning,
-                    stacklevel=2,
-                )
-            return P.plot_comparison(results, lead._sample, bins=bins, ax=ax)
-        if df is None:
-            raise ValueError(
-                "results carry no cached sample: pass the source df"
-            )
-        df = _ensure_spark_df(self.spark, df)
-        col = column or lead.column_name
-        data = (
-            df.select(col).dropna().limit(100_000).toPandas()[col]
-            .to_numpy(dtype=np.float64)
-        )
+        data = self._plot_sample(results[0], df, column, force_recompute)
         return P.plot_comparison(results, data, bins=bins, ax=ax)
 
     def plot_qq(
@@ -517,32 +619,6 @@ class DistributionFitter:
 
         data = self._plot_sample(result, df, column, force_recompute)
         return P.plot_pp(result, data, ax=ax)
-
-    def _plot_sample(self, result, df, column, force_recompute: bool):
-        """Raw-sample resolution for the point-wise plots (Q-Q / P-P
-        need actual observations, not a histogram). Same cached-first +
-        FutureWarning contract as _plot_data."""
-        if not force_recompute and getattr(result, "_sample", None) is not None:
-            if df is not None:
-                warnings.warn(
-                    "a cached fitting sample is available; df is ignored "
-                    "— pass force_recompute=True to re-evaluate the "
-                    "DataFrame",
-                    FutureWarning,
-                    stacklevel=3,
-                )
-            return result._sample
-        if df is None:
-            raise ValueError(
-                "result has no cached sample (or force_recompute=True): "
-                "pass the source df"
-            )
-        df = _ensure_spark_df(self.spark, df)
-        col = column or result.column_name
-        return (
-            df.select(col).dropna().limit(100_000).toPandas()[col]
-            .to_numpy(dtype=np.float64)
-        )
 
     def fit_grouped(
         self,
@@ -583,9 +659,7 @@ class DistributionFitter:
         sample pass, all shuffles carrying <= G x bins rows.
         """
         df = _ensure_spark_df(self.spark, df)
-        config = (config or FitterConfig()).with_(**kwargs) if kwargs else (
-            config or FitterConfig()
-        )
+        config = _merge_config(config, kwargs)
         if config.censoring_column is not None:
             raise NotImplementedError(
                 "fit_grouped does not support censoring_column: the "
@@ -598,29 +672,12 @@ class DistributionFitter:
             raise ValueError(f"group column {group_col!r} not found")
         if distributions:
             self._validate_names(distributions)
-        from spark_bestfit_spark.operators.stats import valid_column
-
-        clean = valid_column(df, column).filter(
-            F.col(group_col).isNotNull()
-        )
-        stats_rows = (
-            clean.groupBy(group_col)
-            .agg(
-                F.min(column).alias("lo"),
-                F.max(column).alias("hi"),
-                F.count("*").alias("n"),
-            )
-            .collect()
+        clean, stats_rows = _grouped_counts(
+            df, column, group_col, max_groups,
+            F.min(column).alias("lo"), F.max(column).alias("hi"),
         )
         if not stats_rows:
             return self._empty_results()
-        if len(stats_rows) > max_groups:
-            raise ValueError(
-                f"fit_grouped: {len(stats_rows)} groups exceed "
-                f"max_groups={max_groups}; the per-group histograms and "
-                "samples are driver-resident — aggregate or bucket the "
-                "key first, or raise max_groups deliberately"
-            )
         gstats = {
             r[group_col]: {
                 "min": float(r["lo"]), "max": float(r["hi"]),
@@ -628,27 +685,10 @@ class DistributionFitter:
             }
             for r in stats_rows
         }
-        target = config.fitting_sample_size
         # the sample pass and the histogram scan are independent given
-        # the stats — run them as concurrent Spark jobs from driver
-        # threads (same prelude fusion as fit(): wall-clock = max of
-        # the two job latencies, not the sum)
+        # the stats — race them (same prelude fusion as fit():
+        # wall-clock = max of the two job latencies, not the sum)
         #
-        # sample: ONE stratified sampleBy pass, per-group keep
-        # fractions sized to ~1.3x the fitting sample (same
-        # oversample-then-truncate convention as build_fitting_sample)
-        fractions = {
-            g: min(1.0, (target * 1.3) / s["count"])
-            for g, s in gstats.items()
-        }
-
-        def _collect_samples():
-            return (
-                clean.select(group_col, column)
-                .sampleBy(group_col, fractions, seed=config.random_seed)
-                .toPandas()
-            )
-
         # histogram: ONE scan for all non-degenerate groups — broadcast
         # the per-group bounds, bucket each row against ITS group's
         # edges, aggregate (group, bin)
@@ -700,25 +740,18 @@ class DistributionFitter:
                 .collect()
             )
 
-        pool = ThreadPoolExecutor(max_workers=2)
         counts_future = (
-            pool.submit(_collect_counts) if bounds_rows else None
+            _start(self.spark, _collect_counts) if bounds_rows else None
         )
-        pdf = _collect_samples()
-        counts = counts_future.result() if counts_future else None
-        pool.shutdown(wait=False)
-        samples_by_group: dict = {}
-        for g, sub in pdf.groupby(group_col, sort=False):
-            arr = sub[column].to_numpy(dtype=np.float64)
-            arr = arr[np.isfinite(arr)]
-            samples_by_group[g] = _truncate_group_sample(
-                arr, target, config.random_seed, g
-            )
-        if counts is not None:
+        samples_by_group = _grouped_samples(
+            clean, column, group_col,
+            {g: s["count"] for g, s in gstats.items()}, config,
+        )
+        if counts_future is not None:
             acc: dict = {
                 g: np.zeros(len(e) - 1) for g, e in edges_by_group.items()
             }
-            for r in counts:
+            for r in counts_future.result():
                 arr = acc[r["_g"]]
                 b = int(r["_bin"])
                 if 1 <= b <= arr.size:
@@ -739,43 +772,13 @@ class DistributionFitter:
                 continue
             label = f"{column}[{g}]"
             samples[label] = sample
-            method = config.estimation_method
-            if method == "auto":
-                method = "mse" if detect_heavy_tail(sample) else "mle"
-            density, edges = hist_by_group[g]
-            plans[label] = {
-                "names": (
-                    list(distributions) if distributions
-                    else self._select_distributions(config, sample)
-                ),
-                "sample": sample,
-                "density": density,
-                "edges": edges,
-                "method": method,
-            }
+            plans[label] = self._plan(
+                sample, hist_by_group[g], distributions, config
+            )
         if not plans:
             return self._empty_results()
-        broadcasts: list = []
-        bounds = (config.lower_bound, config.upper_bound)
-        effective = sum(
-            self.registry.effective_count(p["names"]) for p in plans.values()
-        )
-        if (
-            0 < effective <= config.local_fit_threshold
-            and config.progress_callback is None
-        ):
-            result_df = local_fit_columns(
-                self.spark, plans, config, self.registry, bounds=bounds
-            )
-        else:
-            result_df = parallel_fit_columns(
-                self.spark, plans, config, self.registry, bounds=bounds,
-                broadcast_registry=broadcasts,
-            )
-        return FitResults(
-            result_df, registry=self.registry, samples=samples,
-            broadcasts=broadcasts,
-            deferred_metrics=True if config.lazy_metrics else None,
+        return self._fan_out(
+            plans, samples, config, (config.lower_bound, config.upper_bound)
         )
 
     @staticmethod
@@ -799,12 +802,6 @@ class DistributionFitter:
         )
         return density, edges
 
-    def _empty_results(self) -> FitResults:
-        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
-
-        empty = self.spark.createDataFrame([], schema=FIT_RESULT_SCHEMA)
-        return FitResults(empty, registry=self.registry, cache=False)
-
     def _fit_censored(
         self, src: DataFrame, cols: list, distributions, config, bounds
     ) -> FitResults:
@@ -819,16 +816,14 @@ class DistributionFitter:
                 continue
             # histogram agg and sample collect are independent given the
             # stats — race them (same fusion as the uncensored prelude)
-            pool = ThreadPoolExecutor(max_workers=2)
-            hist_future = pool.submit(
-                compute_histogram, src, c, bins=config.bins,
+            hist_future = _start(
+                self.spark, compute_histogram, src, c, bins=config.bins,
                 use_rice_rule=config.use_rice_rule, stats=stats,
             )
             sample, censor_mask = build_censored_sample(
                 src, c, config.censoring_column, config, int(stats["count"])
             )
             density, edges = hist_future.result()
-            pool.shutdown(wait=False)
             if sample.size < 2:
                 continue
             samples[c] = sample
@@ -850,17 +845,17 @@ class DistributionFitter:
         )
 
 
-class DiscreteDistributionFitter:
+class DiscreteDistributionFitter(_Fitter):
     """Fits the discrete distribution library to integer-valued columns
     (reference DiscreteFitter capability, same engine spine)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        registry: DistributionRegistry | None = None,
-    ):
-        self.spark = spark
-        self.registry = registry or DistributionRegistry()
+    def _select_distributions(self, config: FitterConfig) -> list:
+        names = self.registry.get_discrete_distributions(
+            additional_exclusions=list(config.additional_exclusions)
+        )
+        if config.max_distributions is not None:
+            names = names[: config.max_distributions]
+        return names
 
     def fit(
         self,
@@ -880,41 +875,29 @@ class DiscreteDistributionFitter:
             raise ValueError("provide column= or columns=")
         df = _ensure_spark_df(self.spark, df)
         cols = list(columns) if columns else [column]
-        config = (config or FitterConfig()).with_(**kwargs) if kwargs else (
-            config or FitterConfig()
-        )
-        schema = {f.name: f.dataType for f in df.schema.fields}
-        for c in cols:
-            if c not in schema:
-                raise ValueError(f"column {c!r} not found in DataFrame")
-            if not isinstance(schema[c], NumericType):
-                raise TypeError(
-                    f"column {c!r} has non-numeric type "
-                    f"{schema[c].simpleString()}"
-                )
+        config = _merge_config(config, kwargs)
+        _check_numeric(df, cols)
         if distributions:
-            DistributionFitter._validate_names(self, distributions)
+            self._validate_names(distributions)
 
         # batched planning, mirroring the continuous fitter: stats for
         # all columns in one scan, PMFs in one stacked groupBy, samples
         # in one collect, one (column, distribution) fan-out. The PMF
-        # groupBy doesn't depend on the stats, so the two jobs race from
-        # driver threads (same prelude fusion as the continuous path);
-        # only the sample collect needs the counts.
-        pool = ThreadPoolExecutor(max_workers=2)
-        pmfs_future = pool.submit(empirical_pmfs_multi, df, cols)
+        # groupBy doesn't depend on the stats, so the two jobs race
+        # (_start, same prelude fusion as the continuous path); only
+        # the sample collect needs the counts.
+        pmfs_future = _start(self.spark, empirical_pmfs_multi, df, cols)
         all_stats = multi_column_stats(df, cols)
         live_cols = [c for c in cols if all_stats[c]["count"] > 0]
         if not live_cols:
-            pool.shutdown(wait=False, cancel_futures=True)
             return self._empty_results()
         sample_map = build_fitting_samples_multi(
             df, live_cols, config,
             {c: int(all_stats[c]["count"]) for c in live_cols},
         )
         pmfs = pmfs_future.result()
-        pool.shutdown(wait=False)
 
+        names = distributions or self._select_distributions(config)
         plans: dict = {}
         samples: dict = {}
         for c in live_cols:
@@ -926,11 +909,6 @@ class DiscreteDistributionFitter:
             if sample.size < 2:
                 continue
             samples[c] = sample
-            names = distributions or self.registry.get_discrete_distributions(
-                additional_exclusions=list(config.additional_exclusions)
-            )
-            if config.max_distributions is not None:
-                names = names[: config.max_distributions]
             plans[c] = {
                 "names": list(names),
                 "sample": sample,
@@ -967,48 +945,27 @@ class DiscreteDistributionFitter:
           aggregation — map-side combined, the shuffle carries one row
           per (group, support point);
         - per-group samples: ONE ``sampleBy`` pass, truncated with the
-          same value-based per-group-seeded convention;
+          same value-based per-group-seeded convention, then floored
+          (floor is monotone and the truncation picks positions by
+          length only, so flooring after truncating is identical);
         - ONE (group, distribution) fan-out; results address as
           ``column[group]``.
         """
         df = _ensure_spark_df(self.spark, df)
-        cols_types = {f.name: f.dataType for f in df.schema.fields}
-        if column not in cols_types:
-            raise ValueError(f"column {column!r} not found in DataFrame")
-        if not isinstance(cols_types[column], NumericType):
-            raise TypeError(
-                f"column {column!r} has non-numeric type "
-                f"{cols_types[column].simpleString()}"
-            )
+        _check_numeric(df, [column])
         if group_col not in df.columns:
             raise ValueError(f"group column {group_col!r} not found")
-        config = (config or FitterConfig()).with_(**kwargs) if kwargs else (
-            config or FitterConfig()
-        )
+        config = _merge_config(config, kwargs)
         if distributions:
-            DistributionFitter._validate_names(self, distributions)
+            self._validate_names(distributions)
         from spark_bestfit_spark.operators.discrete_fit import (
             parallel_fit_discrete_columns,
         )
-        from spark_bestfit_spark.operators.stats import valid_column
 
-        clean = valid_column(df, column).filter(
-            F.col(group_col).isNotNull()
-        )
-        counts = (
-            clean.groupBy(group_col).agg(F.count("*").alias("n")).collect()
-        )
+        clean, counts = _grouped_counts(df, column, group_col, max_groups)
         if not counts:
             return self._empty_results()
-        if len(counts) > max_groups:
-            raise ValueError(
-                f"fit_grouped: {len(counts)} groups exceed "
-                f"max_groups={max_groups}; the per-group PMFs and "
-                "samples are driver-resident — aggregate or bucket the "
-                "key first, or raise max_groups deliberately"
-            )
         gcounts = {r[group_col]: int(r["n"]) for r in counts}
-        target = config.fitting_sample_size
         # ONE stacked PMF pass over (group, floored value)
         pmf_rows = (
             clean.groupBy(group_col, F.floor(column).alias("_k"))
@@ -1020,27 +977,10 @@ class DiscreteDistributionFitter:
             pmf_pairs[r[group_col]].append(
                 (float(r["_k"]), float(r["cnt"]))
             )
-        # ONE sampleBy pass for the fitting samples
-        fractions = {
-            g: min(1.0, (target * 1.3) / n) for g, n in gcounts.items()
-        }
-        pdf = (
-            clean.select(group_col, column)
-            .sampleBy(group_col, fractions, seed=config.random_seed)
-            .toPandas()
+        samples_by_group = _grouped_samples(
+            clean, column, group_col, gcounts, config
         )
-        samples_by_group: dict = {}
-        for g, sub in pdf.groupby(group_col, sort=False):
-            arr = np.floor(sub[column].to_numpy(dtype=np.float64))
-            arr = arr[np.isfinite(arr)]
-            samples_by_group[g] = _truncate_group_sample(
-                arr, target, config.random_seed, g
-            )
-        names = distributions or self.registry.get_discrete_distributions(
-            additional_exclusions=list(config.additional_exclusions)
-        )
-        if config.max_distributions is not None:
-            names = names[: config.max_distributions]
+        names = distributions or self._select_distributions(config)
         plans: dict = {}
         samples: dict = {}
         for g in gcounts:
@@ -1048,6 +988,7 @@ class DiscreteDistributionFitter:
             sample = samples_by_group.get(g)
             if not pairs or sample is None or sample.size < 2:
                 continue
+            sample = np.floor(sample)
             x = np.array([p[0] for p in pairs])
             cnts = np.array([p[1] for p in pairs])
             label = f"{column}[{g}]"
@@ -1075,33 +1016,5 @@ class DiscreteDistributionFitter:
         (reference discrete_fitter.py:518 / plotting.py:735)."""
         from spark_bestfit_spark import plotting as P
 
-        if not force_recompute and getattr(result, "_sample", None) is not None:
-            if df is not None:
-                warnings.warn(
-                    "a cached fitting sample is available; df is ignored "
-                    "— pass force_recompute=True to re-evaluate the "
-                    "DataFrame",
-                    FutureWarning,
-                    stacklevel=2,
-                )
-            return P.plot_discrete_distribution(
-                result, result._sample, ax=ax
-            )
-        if df is None:
-            raise ValueError(
-                "result has no cached sample (or force_recompute=True): "
-                "pass the source df"
-            )
-        df = _ensure_spark_df(self.spark, df)
-        col = column or result.column_name
-        data = (
-            df.select(col).dropna().limit(100_000).toPandas()[col]
-            .to_numpy(dtype=np.float64)
-        )
+        data = self._plot_sample(result, df, column, force_recompute)
         return P.plot_discrete_distribution(result, data, ax=ax)
-
-    def _empty_results(self) -> FitResults:
-        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
-
-        empty = self.spark.createDataFrame([], schema=FIT_RESULT_SCHEMA)
-        return FitResults(empty, registry=self.registry, cache=False)

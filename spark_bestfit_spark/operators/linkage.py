@@ -710,8 +710,6 @@ def _jaro_winkler_chunk(A, B, l1, l2):
     S2[rows, r2[rows, cols]] = B[rows, cols]
     t = (S1 != S2).sum(axis=1) // 2
     mf = m.astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        j_sim = (mf / l1 + mf / l2 + (mf - t) / mf) / 3.0
     P = min(4, L1, L2)
     if P > 0:
         # mask prefix positions by TRUE length, not by char value —
@@ -722,9 +720,13 @@ def _jaro_winkler_chunk(A, B, l1, l2):
         ell = np.cumprod(eq, axis=1).sum(axis=1)
     else:
         ell = np.zeros(n, dtype=np.int64)
-    out = np.where(
-        j_sim <= 0.7, j_sim, j_sim + ell * 0.1 * (1.0 - j_sim)
-    )
+    # empty / no-match rows divide by zero here (NaN/inf, also through
+    # the boost); the final where sets them to 0.0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        j_sim = (mf / l1 + mf / l2 + (mf - t) / mf) / 3.0
+        out = np.where(
+            j_sim <= 0.7, j_sim, j_sim + ell * 0.1 * (1.0 - j_sim)
+        )
     return np.where((m == 0) | (l1 == 0) | (l2 == 0), 0.0, out)
 
 

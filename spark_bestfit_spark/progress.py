@@ -13,6 +13,13 @@ import uuid
 
 __all__ = ["ProgressTracker", "console_progress"]
 
+# the local properties SparkContext.setJobGroup writes
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
 
 class ProgressTracker:
     """Polls active Spark stages for a job group at ``poll_interval`` and
@@ -23,6 +30,9 @@ class ProgressTracker:
         tracker = ProgressTracker(spark, callback=console_progress)
         with tracker.track("fitting 90 distributions"):
             results.count()   # any action inside runs under the group
+
+    On exit the caller's own job group, description and interrupt flag
+    are restored, not cleared.
     """
 
     def __init__(
@@ -37,11 +47,13 @@ class ProgressTracker:
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
         self._group: str | None = None
+        self._saved: dict | None = None
         self._t0 = 0.0
 
     # ------------------------------------------------------------- lifecycle
     def start(self, description: str = "") -> None:
         sc = self.spark.sparkContext
+        self._saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS}
         self._group = f"bestfit-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(self._group, description or "spark-bestfit job")
         self._stop.clear()
@@ -54,8 +66,11 @@ class ProgressTracker:
         if self._thread is not None:
             self._thread.join(timeout=2.0)
             self._thread = None
+        # restore the caller's job group (None unsets a property)
+        saved, self._saved = self._saved, None
         try:
-            self.spark.sparkContext.setJobGroup(None, None)
+            for key, value in (saved or {}).items():
+                self.spark.sparkContext.setLocalProperty(key, value)
         except Exception:  # noqa: BLE001 — context may already be gone
             pass
 

@@ -99,6 +99,28 @@ class TestProgressTracker:
         t.stop()
         t.stop()  # second stop is a no-op
 
+    def test_fit_with_progress_keeps_callers_job_group(self, spark):
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        sc = spark.sparkContext
+        df = spark.createDataFrame(
+            pd.DataFrame({"v": np.random.default_rng(3).normal(size=2000)})
+        )
+        sc.setJobGroup("caller-progress", "caller job")
+        try:
+            DistributionFitter(spark).fit(
+                df, column="v", distributions=["norm", "expon"],
+                progress_callback=lambda *a: None,
+            ).unpersist()
+            assert sc.getLocalProperty("spark.jobGroup.id") == (
+                "caller-progress"
+            )
+            assert sc.getLocalProperty("spark.job.description") == (
+                "caller job"
+            )
+        finally:
+            sc.setJobGroup(None, None)
+
 
 class TestPlottingHelpers:
     @pytest.fixture(scope="class")

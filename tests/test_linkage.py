@@ -472,6 +472,17 @@ class TestJaroWinklerKernel:
         got = _jaro_winkler_batch(a, b, chunk=1024)
         for i in range(len(a)):
             assert got[i] == _jaro_winkler(a[i], b[i]), (a[i], b[i])
+        # the no-match and empty pairs (empty vs a NUL-bearing string
+        # matches padding, so it divides by a zero length) must score
+        # without leaking a numpy RuntimeWarning
+        import warnings
+
+        ea = ["", "", "abc", "a", "ab", "", ""]
+        eb = ["", "abc", "", "b", "cd", "\x00b", "b\x00a"]
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            edge = _jaro_winkler_batch(ea, eb)
+        assert edge.tolist() == [_jaro_winkler(x, y) for x, y in zip(ea, eb)]
 
 
 class TestJaroWinklerJoin:

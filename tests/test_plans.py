@@ -242,6 +242,62 @@ class TestJobCount:
         assert j1 <= 12, j1
         df.unpersist()
 
+    def test_prelude_jobs_stay_in_callers_job_group(self, spark):
+        """Every job a fit launches — including the prelude jobs raced
+        from helper driver threads — is attributed to the caller's job
+        group: the group's job list equals the jobs between markers."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        rng = np.random.default_rng(11)
+        n = 20_000  # > fitting_sample_size: both race waves run
+        pdf = pd.DataFrame(
+            {"a": rng.gamma(2.0, 3.0, n), "g": rng.integers(0, 3, n)}
+        )
+        df = spark.createDataFrame(pdf).repartition(4).cache()
+        df.count()
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        fitter = DistributionFitter(spark)
+        dists = ["norm", "gamma", "expon"]
+        calls = {
+            "caller-fit": lambda: fitter.fit(
+                df, column="a", distributions=dists, lazy_metrics=True
+            ),
+            "caller-fit-grouped": lambda: fitter.fit_grouped(
+                df, "a", "g", distributions=dists, lazy_metrics=True
+            ),
+        }
+        # the closing marker's count can itself run more than one job
+        # under AQE; an empty measurement calibrates that overhead out
+        overhead = self._jobs_during(spark, lambda: None)
+        for group, call in calls.items():
+
+            def run():
+                sc.setJobGroup(group, "caller")
+                try:
+                    r = call()
+                    r.count()
+                    r.unpersist()
+                finally:
+                    sc.setJobGroup(None, None)
+
+            jobs = self._jobs_during(spark, run) - overhead
+            assert jobs > 0
+            assert jobs == len(tracker.getJobIdsForGroup(group)), group
+        df.unpersist()
+
+    def test_start_reraises_from_result(self, spark):
+        from spark_bestfit_spark.fitter import _start
+
+        def boom(x):
+            raise RuntimeError(f"boom {x}")
+
+        with pytest.raises(RuntimeError, match="boom 7"):
+            _start(spark, boom, 7).result()
+
 
 class TestRound5PlanShapes:
     def test_bloom_probe_is_map_only_until_flagged_distinct(self, spark):
