@@ -1,1 +1,3 @@
-"""Numeric kernel library (pure NumPy — no SciPy in this environment)."""
+"""Kernel library: the numeric kernels (pure NumPy, no SciPy dependency)
+and the shared text kernel (Spark column expressions,
+:mod:`spark_bestfit_spark.functions.text`)."""

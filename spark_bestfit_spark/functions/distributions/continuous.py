@@ -21,8 +21,11 @@ _SQRT2 = np.sqrt(2.0)
 
 
 def _std_moments(data):
-    m = float(np.mean(data))
-    s = float(np.std(data))
+    # same declared-overflow policy as compute_data_stats: at |x|~1e300
+    # the variance square overflows and the scale is inf, silently
+    with np.errstate(over="ignore", invalid="ignore"):
+        m = float(np.mean(data))
+        s = float(np.std(data))
     return m, (s if s > 0 else 1.0)
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 from spark_bestfit_spark.functions.distributions.registry import (
     DistributionRegistry,
 )
+from spark_bestfit_spark.functions.text import portable_hash64
 
 __all__ = ["bootstrap_ci", "bootstrap_ci_local",
            "poisson_bootstrap_means", "poisson_bootstrap_ci"]
@@ -233,8 +234,6 @@ def poisson_bootstrap_means(
     replicate, only possible at tiny n). Feed it to
     :func:`poisson_bootstrap_ci` for the percentile interval.
     """
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
     if n_replicates < 2:
         raise ValueError("n_replicates must be >= 2")
     valid = df.filter(

@@ -27,7 +27,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from spark_bestfit_spark.operators.dedup import _normalized, word_shingles
+from spark_bestfit_spark.functions.text import (
+    normalized,
+    portable_hash64,
+    tokens,
+    word_shingles,
+)
 
 __all__ = [
     "assign_training_shards",
@@ -97,7 +102,7 @@ def flag_contamination(
     (case-insensitive substring)."""
     if not probes:
         return df.withColumn("contaminated", F.lit(False))
-    norm = _normalized(text_col)
+    norm = normalized(text_col)
     probe_arr = F.array(*[F.lit(str(p).lower()) for p in probes])
     return df.withColumn(
         "contaminated",
@@ -464,10 +469,6 @@ def stratified_quota_sample(
     )
 
 
-def _whitespace_tokens(text_col: str):
-    return F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-
-
 def domain_mixture_weights(
     df: DataFrame,
     domain_col: str = "source",
@@ -497,7 +498,7 @@ def domain_mixture_weights(
         raise ValueError("temperature must be in (0, 1]")
     per_domain = df.groupBy(domain_col).agg(
         F.count("*").alias("n_docs"),
-        F.sum(_whitespace_tokens(text_col)).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens(text_col))).cast("long").alias("n_tokens"),
     )
     everything = Window.partitionBy()
     p = F.col("n_tokens") / F.sum("n_tokens").over(everything)
@@ -725,9 +726,7 @@ def _cumulative_tokens(
     if length_col is not None:
         toks = F.col(length_col)
     else:
-        toks = F.size(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        )
+        toks = F.size(tokens(text_col))
     base = df.select(
         F.col(id_col),
         ord_expr.alias("_ord"),
@@ -1042,8 +1041,11 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("overlap must satisfy 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    text = F.trim(F.col(text_col))
-    toks = F.split(text if preserve_case else F.lower(text), r"\s+")
+    toks = (
+        F.split(F.trim(F.col(text_col)), r"\s+")
+        if preserve_case
+        else tokens(text_col)
+    )
     base = df.select(
         F.col(id_col), toks.alias("_toks")
     ).withColumn(
@@ -1111,8 +1113,6 @@ def ngram_novelty(
     Output: ``(id_col, n_ngrams, n_novel, novelty)`` for every input
     document, novelty rounded to 6.
     """
-    from spark_bestfit_spark.operators.dedup import word_shingles
-
     if n < 1:
         raise ValueError("n must be >= 1")
     grams = df.select(
@@ -1165,10 +1165,7 @@ def leakage_check(
     Returns one row per split: ``(split_col, n_docs, n_leaked,
     leak_frac)`` with leak_frac rounded to 6.
     """
-    from spark_bestfit_spark.operators.dedup import (
-        _normalized,
-        ensure_parallelism,
-    )
+    from spark_bestfit_spark.operators.dedup import ensure_parallelism
 
     base = ensure_parallelism(
         df.filter(
@@ -1176,7 +1173,7 @@ def leakage_check(
         )
     ).select(
         F.col(split_col).alias("_split"),
-        (key if key is not None else _normalized(text_col)).alias(
+        (key if key is not None else normalized(text_col)).alias(
             "_key"
         ),
     )
@@ -1227,8 +1224,6 @@ def group_split(
     to the weight intervals. Map-only: no shuffle, engine- and
     partitioning-independent, ANSI-safe.
     """
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
     key = (
         F.col(group_key) if isinstance(group_key, str) else group_key
     )
@@ -1259,8 +1254,6 @@ def kfold_assign(
 
     Appends ``fold_col`` (int in [0, k)).
     """
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
     if k < 2:
         raise ValueError("k must be >= 2")
     if group_key is not None:
@@ -1408,20 +1401,14 @@ def stratified_split(
 def _dsir_doc_features(
     df: DataFrame,
     text_col: str,
-    id_col,
+    keep: list,
     n_buckets: int,
 ) -> DataFrame:
-    """Per-doc hashed-ngram bag features ``(id, _bk, _n)``: unigrams
-    plus adjacent bigrams of the whitespace tokens, each hashed into
+    """Hashed-ngram bag features ``(*keep, _bk, _n)``: unigrams plus
+    adjacent bigrams of the whitespace tokens, each hashed into
     ``n_buckets`` with the portable md5 hash (DuckDB-replayable).
-    One scan, one map-combinable (id, bucket) groupBy."""
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
-    keep = [id_col] if id_col else []
-    arr = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda w: w != "",
-    )
+    One scan, one map-combinable (keep..., bucket) groupBy."""
+    arr = F.filter(tokens(text_col), lambda w: w != "")
     toks = df.select(*keep, arr.alias("_a")).filter(
         F.size("_a") >= 1
     )
@@ -1441,13 +1428,9 @@ def _dsir_doc_features(
         ).alias("_g"),
     )
     bk = portable_hash64(F.col("_g")) % F.lit(int(n_buckets))
-    if id_col:
-        return grams.select(*keep, bk.alias("_bk")).groupBy(
-            *keep, "_bk"
-        ).agg(F.count(F.lit(1)).cast("long").alias("_n"))
-    return grams.select(bk.alias("_bk")).groupBy("_bk").agg(
-        F.count(F.lit(1)).cast("long").alias("_n")
-    )
+    return grams.select(*keep, bk.alias("_bk")).groupBy(
+        *keep, "_bk"
+    ).agg(F.count(F.lit(1)).cast("long").alias("_n"))
 
 
 def dsir_logweights(
@@ -1486,11 +1469,11 @@ def dsir_logweights(
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     feats = _dsir_doc_features(
-        raw, text_col, id_col, n_buckets
+        raw, text_col, [id_col], n_buckets
     ).localCheckpoint(eager=False)
     raw_lm = feats.groupBy("_bk").agg(F.sum("_n").alias("_cr"))
     tgt_lm = _dsir_doc_features(
-        target, text_col, None, n_buckets
+        target, text_col, [], n_buckets
     ).withColumnRenamed("_n", "_ct")
     tots = (
         raw_lm.agg(F.sum("_cr").alias("_nr"))
@@ -1593,42 +1576,15 @@ def dsir_logweights_by_group(
     """
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
-    def feats(df, with_id):
-        keep = [group_col, id_col] if with_id else [group_col]
-        arr = F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda w: w != "",
-        )
-        toks = df.select(*keep, arr.alias("_a")).filter(
-            F.size("_a") >= 1
-        )
-        grams = toks.select(
-            *keep,
-            F.explode(
-                F.concat(
-                    F.col("_a"),
-                    F.when(
-                        F.size("_a") >= 2,
-                        F.expr(
-                            "transform(sequence(1, size(_a) - 1), i ->"
-                            " concat(_a[i - 1], ' ', _a[i]))"
-                        ),
-                    ).otherwise(F.array()),
-                )
-            ).alias("_g"),
-        )
-        bk = portable_hash64(F.col("_g")) % F.lit(int(n_buckets))
-        return grams.select(*keep, bk.alias("_bk")).groupBy(
-            *keep, "_bk"
-        ).agg(F.count(F.lit(1)).cast("long").alias("_n"))
-
-    rf = feats(raw, True).localCheckpoint(eager=False)
+    rf = _dsir_doc_features(
+        raw, text_col, [group_col, id_col], n_buckets
+    ).localCheckpoint(eager=False)
     raw_lm = rf.groupBy(group_col, "_bk").agg(
         F.sum("_n").alias("_cr")
     )
-    tgt_lm = feats(target, False).withColumnRenamed("_n", "_ct")
+    tgt_lm = _dsir_doc_features(
+        target, text_col, [group_col], n_buckets
+    ).withColumnRenamed("_n", "_ct")
     rtot = raw_lm.groupBy(group_col).agg(F.sum("_cr").alias("_nr"))
     ttot = tgt_lm.groupBy(group_col).agg(F.sum("_ct").alias("_nt"))
     b = float(n_buckets)
@@ -1743,10 +1699,7 @@ def unimax_allocation(
         F.col(length_col).cast("double")
         if length_col is not None
         else F.size(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                lambda w: w != "",
-            )
+            F.filter(tokens(text_col), lambda w: w != "")
         ).cast("double")
     )
     counts = (

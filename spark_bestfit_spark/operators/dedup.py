@@ -24,6 +24,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from spark_bestfit_spark.functions.text import (
+    kgrams,
+    portable_hash64,
+    tokens,
+    word_shingles,
+    words,
+)
+from spark_bestfit_spark.functions.text import normalized as _normalized
+
 # Mersenne-ish modulus and deterministic permutation coefficients for
 # MinHash: perm_i(h) = (A[i] * h + B[i]) mod P  with h pre-reduced mod P
 # so products stay inside int64.
@@ -49,18 +58,6 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < max(target // 2, 2):
         return df.repartition(target)
     return df
-
-
-def portable_hash64(col: Column) -> Column:
-    """First 14 hex chars of md5 as a BIGINT — identical in Spark
-    (conv + cast) and DuckDB (('0x' || substr)::BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("bigint")
-
-
-def _normalized(text_col: str) -> Column:
-    return F.regexp_replace(
-        F.lower(F.trim(F.col(text_col))), r"\s+", " "
-    )
 
 
 def exact_dedup(
@@ -158,32 +155,6 @@ def duplicated_ngram_stats(
                 / F.col("n_grams")
             ).alias("shared_fraction"),
         )
-    )
-
-
-def word_shingles(text_col: str, k: int = 3) -> Column:
-    """Distinct k-word shingles as an array column (JVM-side: split +
-    k-1 zip_with passes over shifted slices — no Python).
-
-    The shingle strings are built by zipping the token array with its
-    own 1..k-1 shifted slices and concatenating pairwise: k-1 O(n)
-    array passes with a cheap string concat per element, instead of a
-    per-shingle ``slice`` (which allocated an intermediate array per
-    position — measured 5.6x slower at sf1). Output strings are
-    byte-identical to the old construction (tokens are never null, so
-    ``concat`` == ``concat_ws`` here)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    n = F.size(toks)
-    m = F.greatest(n - k + 1, F.lit(0))  # shingle count when n >= k
-    acc = F.slice(toks, 1, m)
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc,
-            F.slice(toks, 1 + j, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.when(n >= k, F.array_distinct(acc)).otherwise(
-        F.array(F.concat_ws(" ", toks))
     )
 
 
@@ -693,9 +664,7 @@ def simhash_signatures(
     """32-bit SimHash per document: sign of the per-bit sum of token
     hashes. Computed with higher-order functions (aggregate over the
     token array), no Python."""
-    toks = F.array_distinct(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    )
+    toks = F.array_distinct(tokens(text_col))
     df = ensure_parallelism(df)
     hashed = df.select(
         F.col(id_col),
@@ -821,30 +790,16 @@ def duplicate_spans(
         raise ValueError("min_len must be >= k (spans are measured in tokens)")
     if max_posting < 2:
         raise ValueError("max_posting must be >= 2")
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(text_col)
     n = F.size(toks)
-
-    # positioned k-gram strings via k-1 zip_with passes over shifted
-    # slices (the word_shingles construction: no per-position slice /
-    # array alloc — measured several times faster); element order IS
-    # the position, so posexplode yields identical (_pos, _sh) rows
-    def _grams(t, nn):
-        m = F.greatest(nn - k + 1, F.lit(0))
-        acc = F.slice(t, 1, m)
-        for j in range(1, k):
-            acc = F.zip_with(
-                acc,
-                F.slice(t, 1 + j, m),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        return acc
-
+    # positioned k-gram strings: element order IS the position, so
+    # posexplode yields the (_pos, _sh) rows directly
     sh = (
         df.select(F.col(id_col).alias("_id"), toks.alias("_t"), n.alias("_n"))
         .filter(F.col("_n") >= k)
         .select(
             "_id",
-            F.posexplode(_grams(F.col("_t"), F.col("_n"))).alias(
+            F.posexplode(kgrams(F.col("_t"), k, F.col("_n"))).alias(
                 "_pos", "_sh"
             ),
         )
@@ -1049,30 +1004,16 @@ def clip_duplicate_spans(
     Returns (id_col, n_words, n_removed, clipped_text); documents with
     fewer than ``n`` words pass through unclipped.
     """
-    trimmed = F.trim(F.col(text_col))
-    words = F.when(
-        F.length(trimmed) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(trimmed, r"\s+"))
-    base = df.select(F.col(id_col), words.alias("_w"))
+    base = df.select(F.col(id_col), words(text_col).alias("_w"))
     n_words = F.size("_w")
 
-    # lowercased gram strings via n-1 zip_with passes over shifted
-    # slices of the PER-WORD-lowered token array (the word_shingles
-    # construction — no per-position slice/array alloc). Lowering per
-    # word before joining equals lowering the joined gram: Java/UTF8
-    # case mapping is context-free except the final-sigma rule, and a
-    # word-final sigma is followed by a space (non-letter) in the
-    # joined gram — final form either way. Array order IS the gram
-    # position, so posexplode replaces the carried pos field.
-    wl = F.transform("_w", lambda w: F.lower(w))
-    m_g = F.greatest(n_words - n + 1, F.lit(0))
-    gram_acc = F.slice(wl, 1, m_g)
-    for _j in range(1, n):
-        gram_acc = F.zip_with(
-            gram_acc,
-            F.slice(wl, 1 + _j, m_g),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
+    # lowercased gram strings over the PER-WORD-lowered word array.
+    # Lowering per word before joining equals lowering the joined gram:
+    # Java/UTF8 case mapping is context-free except the final-sigma
+    # rule, and a word-final sigma is followed by a space (non-letter)
+    # in the joined gram — final form either way. Array order IS the
+    # gram position, so posexplode replaces the carried pos field.
+    gram_acc = kgrams(F.transform("_w", lambda w: F.lower(w)), n, n_words)
     grams = (
         base.filter(n_words >= n)
         .select(id_col, F.posexplode(gram_acc).alias("pos", "_s"))
@@ -1506,10 +1447,10 @@ def _winnow_selected(
     if window < 1:
         raise ValueError("window must be >= 1")
     df = ensure_parallelism(df)
-    # bind the normalized text ONCE as a column: referencing
-    # _norm_sql(text_col) inside the transform lambda re-evaluated the
-    # regexp_replace+lower+trim PER K-GRAM (once per element, ~grams/doc
-    # times per row — measured 4.2x the whole hash stage)
+    # bind the normalized text ONCE as a column: the k-gram transform
+    # lambda references it per element, and an inline normalization
+    # there would re-run regexp_replace+lower+trim PER K-GRAM
+    # (~grams/doc times per row — 4.2x the whole hash stage)
     dn = df.select(F.col(id_col), _normalized(text_col).alias("_nt"))
     kgs = F.when(
         F.length("_nt") >= k,
@@ -1531,14 +1472,6 @@ def _winnow_selected(
         "                 acc)))".format(w=w)
     )
     return df2.select(F.col(id_col), sel.alias("_sel"))
-
-
-def _norm_sql(text_col: str) -> str:
-    """SQL-expression twin of ``_normalized`` for use inside
-    ``F.expr`` strings."""
-    return (
-        f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
-    )
 
 
 def winnow_neardup_pairs(

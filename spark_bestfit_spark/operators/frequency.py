@@ -40,6 +40,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from spark_bestfit_spark.functions.text import tokens
+
 __all__ = ["heavy_hitters", "heavy_hitters_by_group"]
 
 
@@ -417,10 +419,8 @@ def cms_token_counts(
     """
     if width < 8 or depth < 1:
         raise ValueError("width must be >= 8 and depth >= 1")
-    from spark_bestfit_spark.operators.textstats import _tokens
-
     toks = (
-        df.select(F.explode(_tokens(F.col(text_col))).alias("_w"))
+        df.select(F.explode(tokens(text_col)).alias("_w"))
         .filter(F.col("_w") != "")
     )
 

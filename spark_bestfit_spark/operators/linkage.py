@@ -53,6 +53,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from spark_bestfit_spark.functions.text import tokens
+
 
 def _seg_bounds(l: Column, j: int, d: int) -> tuple[Column, Column]:
     """(start, length) of segment ``j`` (0-based) of a length-``l``
@@ -375,11 +377,7 @@ def set_similarity_join(
     def _toks(df, on, idc):
         return df.select(
             idc,
-            F.explode(
-                F.array_distinct(
-                    F.split(F.lower(F.trim(F.col(on))), r"\s+")
-                )
-            ).alias("_tok"),
+            F.explode(F.array_distinct(tokens(on))).alias("_tok"),
         )
 
     lt = _toks(left, left_on, left_id)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from spark_bestfit_spark.functions.text import normalized, tokens, words
 from spark_bestfit_spark.operators.dedup import (
     exact_dedup,
     minhash_dedup_pairs,
@@ -50,7 +51,7 @@ def curate_corpus(
     scored = with_quality_score(df, text_col)
     scored = scored.withColumn(
         "_n_tokens",
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")),
+        F.size(tokens(text_col)),
     )
     filtered = scored.filter(
         (F.col("quality_score") >= min_quality)
@@ -103,17 +104,12 @@ def dataset_card(
     Returns (n_docs, n_empty, total_tokens, total_chars, min_tokens,
     max_tokens, mean_tokens, n_distinct_docs, dup_rate).
     """
-    from spark_bestfit_spark.operators.dedup import _normalized
-
     trimmed = F.trim(F.col(text_col))
-    tok = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
     base = df.select(
-        tok.cast("long").alias("_tok"),
+        F.size(words(text_col)).cast("long").alias("_tok"),
         F.length(F.col(text_col)).cast("long").alias("_chr"),
         F.when(F.length(trimmed) == 0, 1).otherwise(0).alias("_empty"),
-        F.md5(_normalized(text_col)).alias("_fp"),
+        F.md5(normalized(text_col)).alias("_fp"),
     )
     row_stats = base.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -165,13 +161,11 @@ def corpus_diff(
 
     Returns ``(id_col, status, old_fp, new_fp)``.
     """
-    from spark_bestfit_spark.operators.dedup import _normalized
-
     o = old.select(
-        F.col(id_col), F.md5(_normalized(text_col)).alias("old_fp")
+        F.col(id_col), F.md5(normalized(text_col)).alias("old_fp")
     )
     n = new.select(
-        F.col(id_col), F.md5(_normalized(text_col)).alias("new_fp")
+        F.col(id_col), F.md5(normalized(text_col)).alias("new_fp")
     )
     j = o.join(n, id_col, "full_outer")
     status = (

@@ -23,6 +23,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from spark_bestfit_spark.functions.text import portable_hash64, tokens
+
 # Bound on the stacked ADC lookup tables a single query batch ships in
 # its task closure (IvfPqIndex.query: Q x nprobe x m x n_codes float64).
 # 256 MiB is far past any sane probe batch but far below the 1-2 GiB
@@ -1344,14 +1346,7 @@ def hash_features(
     """
     if dim < 2:
         raise ValueError("dim must be >= 2")
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
-    toks = df.select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("_tok"),
-    )
+    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("_tok"))
     h = portable_hash64(F.col("_tok"))
     bucket = F.pmod(h, F.lit(dim)).cast("int")
     sign_bit = F.conv(
@@ -1456,8 +1451,6 @@ def negative_samples(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    from spark_bestfit_spark.operators.dedup import portable_hash64
-
     a = anchors.select(F.col(anchor_id).alias("_aid")).distinct()
     p = F.broadcast(pool.select(F.col(pool_id).alias("_pid")).distinct())
     scored = (

@@ -13,7 +13,15 @@ operators that pipeline with the parquet scan — zero shuffles.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
+
+from spark_bestfit_spark.functions.text import (
+    kgrams,
+    normalized,
+    word_shingles,
+    words,
+)
+from spark_bestfit_spark.functions.text import tokens as _tokens
 
 # Compact stopword lists per language (top function words). Used by the
 # n-gram/stopword language-ID heuristic.
@@ -23,11 +31,6 @@ STOPWORDS = {
     "fr": ["le", "la", "les", "et", "est", "une", "dans", "que", "pour"],
     "es": ["el", "la", "los", "y", "es", "una", "en", "que", "por"],
 }
-
-
-def _tokens(text_col: Column) -> Column:
-    """Whitespace tokenization of lower-cased text."""
-    return F.split(F.lower(F.trim(text_col)), r"\s+")
 
 
 def with_text_stats(
@@ -164,9 +167,9 @@ def with_fingerprint(
     df: DataFrame, text_col: str = "text", out_col: str = "fingerprint"
 ) -> DataFrame:
     """Content fingerprint: md5 of whitespace-normalized, lower-cased
-    text. Exact-duplicate key (SQL-portable for oracle checks)."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return df.withColumn(out_col, F.md5(normalized))
+    text — the key :func:`~spark_bestfit_spark.operators.dedup
+    .duplicate_groups` groups on (SQL-portable for oracle checks)."""
+    return df.withColumn(out_col, F.md5(normalized(text_col)))
 
 
 def with_repetition_ratio(
@@ -180,18 +183,9 @@ def with_repetition_ratio(
     than k tokens). High values flag boilerplate / template spam — a
     standard pretraining quality filter (e.g. the Gopher rules' repeated
     n-gram fractions). Map-only column algebra, SQL-portable."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(text_col)
     n = F.size(toks)
-    # k-1 zip_with passes over shifted slices (the word_shingles
-    # construction) — identical strings, no per-position slice
-    m = F.greatest(n - shingle_k + 1, F.lit(0))
-    all_shingles = F.slice(toks, 1, m)
-    for _j in range(1, shingle_k):
-        all_shingles = F.zip_with(
-            all_shingles,
-            F.slice(toks, 1 + _j, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
+    all_shingles = kgrams(toks, shingle_k)
     n_sh = F.size(all_shingles)
     n_distinct = F.size(F.array_distinct(all_shingles))
     ratio = F.when(
@@ -634,10 +628,6 @@ def tfidf_neardup_pairs(
         )
     )
     if candidates == "prefix":
-        from pyspark.sql import Window
-
-        from spark_bestfit_spark.operators.dedup import word_shingles
-
         sh = df.select(
             F.col(id_col),
             F.explode(
@@ -910,7 +900,7 @@ def readability_scores(
     fk_grade) rounded to 6; docs with zero words yield nulls.
     """
     t = F.lower(F.trim(F.col(text_col)))
-    toks = F.split(t, r"\s+")
+    toks = _tokens(text_col)
     words = F.size(F.filter(toks, lambda x: x != F.lit("")))
     sents = F.greatest(
         F.size(
@@ -1113,11 +1103,7 @@ def vocab_overlap_matrix(
     )
     toks = base.select(
         F.col(group_col).alias("_g"),
-        F.explode(
-            F.array_distinct(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            )
-        ).alias("_tok"),
+        F.explode(F.array_distinct(_tokens(text_col))).alias("_tok"),
     ).filter(F.col("_tok") != "").distinct()
     sizes = toks.groupBy("_g").agg(
         F.count(F.lit(1)).cast("long").alias("_vsz")
@@ -1739,14 +1725,9 @@ def gopher_quality_flags(
         ellipsis_line_ratio <= 0.3, alpha_word_ratio >= 0.8,
         stopword_hits >= 2.
     """
-    trimmed = F.trim(F.col(text_col))
-    words = F.when(F.length(trimmed) == 0, F.array().cast(
-        "array<string>"
-    )).otherwise(F.split(trimmed, r"\s+"))
-    n_words = F.size(words)
-    sum_len = F.aggregate(
-        words, F.lit(0), lambda acc, w: acc + F.length(w)
-    )
+    ws = words(text_col)
+    n_words = F.size(ws)
+    sum_len = F.aggregate(ws, F.lit(0), lambda acc, w: acc + F.length(w))
     mean_wl = F.when(n_words > 0, F.round(
         sum_len.cast("double") / n_words, 6
     )).otherwise(F.lit(0.0))
@@ -1771,13 +1752,13 @@ def gopher_quality_flags(
     ellipsis_ratio = F.when(n_lines > 0, F.round(
         ellipsis.cast("double") / n_lines, 6
     )).otherwise(F.lit(0.0))
-    alpha = F.size(F.filter(words, lambda w: w.rlike("[a-zA-Z]")))
+    alpha = F.size(F.filter(ws, lambda w: w.rlike("[a-zA-Z]")))
     alpha_ratio = F.when(n_words > 0, F.round(
         alpha.cast("double") / n_words, 6
     )).otherwise(F.lit(0.0))
     stop_hits = F.size(
         F.array_intersect(
-            F.array_distinct(F.transform(words, F.lower)),
+            F.array_distinct(F.transform(ws, F.lower)),
             F.array(*[F.lit(w) for w in STOPWORDS["en"]]),
         )
     )
@@ -1865,14 +1846,10 @@ def tokenizer_fertility(
     groups whose documents are all empty report 0 fertility and null
     chars_per_token.
     """
-    trimmed = F.trim(F.col(text_col))
-    tok = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
     return (
         df.select(
             F.col(group_col),
-            tok.cast("long").alias("_tok"),
+            F.size(words(text_col)).cast("long").alias("_tok"),
             F.length(F.col(text_col)).cast("long").alias("_chr"),
         )
         .groupBy(group_col)

@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from spark_bestfit_spark.functions.text import normalized
+
 __all__ = [
     "streaming_exact_dedup",
     "streaming_minhash_dedup",
@@ -32,9 +34,7 @@ __all__ = [
 def fingerprint_column(text_col: str = "text"):
     """md5 of (lowercased, trimmed, whitespace-collapsed) text — matches
     the batch exact-dedup fingerprint (operators/dedup.py)."""
-    return F.md5(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    )
+    return F.md5(normalized(text_col))
 
 
 def streaming_exact_dedup(

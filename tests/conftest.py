@@ -41,6 +41,32 @@ def _slow_manifest() -> set[str]:
         return set()
 
 
+def _stale_manifest_entries(manifest, nodeids, skip_files) -> list[str]:
+    """Manifest node ids that match no collected test in a file that
+    was collected whole. A renamed or deleted slow test would otherwise
+    drop out of the manifest silently and its (renamed) body would run
+    in the default tier."""
+    files = {n.split("::", 1)[0] for n in nodeids} - set(skip_files)
+    ids = set(nodeids)
+    return sorted(
+        m for m in manifest
+        if m.split("::", 1)[0] in files and m not in ids
+    )
+
+
+# files whose collection failed (in part, under
+# --continue-on-collection-errors): their missing tests are not stale
+_COLLECT_ERRORS: set[str] = set()
+
+
+def pytest_collectreport(report):
+    if report.failed:
+        _COLLECT_ERRORS.add(report.nodeid.split("::", 1)[0])
+
+
+# tryfirst: mark and check the FULL collection, before -m/-k/--deselect
+# drop items from it
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
     manifest = _slow_manifest()
     marker = pytest.mark.slow
@@ -48,6 +74,25 @@ def pytest_collection_modifyitems(config, items):
         fname = os.path.basename(str(item.fspath))
         if fname in _SLOW_FILES or item.nodeid in manifest:
             item.add_marker(marker)
+    # files named with a ::selection were collected in part only
+    root = str(config.rootpath)
+    partial = {
+        os.path.relpath(
+            os.path.join(str(config.invocation_params.dir), a.split("::")[0]),
+            root,
+        ).replace(os.sep, "/")
+        for a in config.args
+        if "::" in a
+    }
+    stale = _stale_manifest_entries(
+        manifest, [i.nodeid for i in items], partial | _COLLECT_ERRORS
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_manifest.txt names tests that were not collected "
+            "(renamed or deleted? update the manifest):\n  "
+            + "\n  ".join(stale)
+        )
 
 
 @pytest.fixture(scope="session")

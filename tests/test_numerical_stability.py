@@ -85,6 +85,23 @@ class TestExtremeMagnitudes:
         assert np.isnan(stats["data_skewness"])
         assert np.isfinite(stats["data_mean"])
 
+    def test_norm_closed_fit_overflow_is_declared(self):
+        """Norm's closed-form MLE at 1e300 magnitudes: the same declared
+        policy — the scale is inf, the loc the finite mean, and no
+        RuntimeWarning leaks from numpy's std."""
+        import warnings
+
+        from spark_bestfit_spark.functions.distributions.continuous import (
+            Norm,
+        )
+
+        rng = np.random.default_rng(2)
+        vals = rng.uniform(1e299, 1e300, 500)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            params = Norm().fit(vals)
+        assert params == (float(np.mean(vals)), float("inf"))
+
     def test_sse_overflow_is_declared_sentinel(self):
         """compute_sse at adversarial magnitudes must clamp to inf with NO
         RuntimeWarning leaking — the overflow sentinel is declared, not

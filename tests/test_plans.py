@@ -945,3 +945,51 @@ class TestInputSpreadPlans:
             docs, threshold=0.9, candidates="prefix"
         )
         assert "RoundRobinPartitioning" in _physical(out)
+
+
+def _exchange_outputs(df) -> list[dict[str, str]]:
+    """``{column: type}`` of every exchange in the physical plan (the
+    initial plan under AQE: the query must not have run yet)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            attrs = node.output()
+            out.append({
+                attrs.apply(i).name(): attrs.apply(i).dataType().simpleString()
+                for i in range(attrs.size())
+            })
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+class TestTextKernelPlans:
+    def test_repetition_ratio_has_no_exchange(self, spark):
+        """Shingling, the distinct count and the ratio are per-row array
+        algebra over the shared k-gram kernel — map-only."""
+        from spark_bestfit_spark.operators.textstats import (
+            with_repetition_ratio,
+        )
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        assert "Exchange" not in _physical(with_repetition_ratio(docs))
+
+    def test_clip_spans_exchanges_carry_gram_keys_not_strings(self, spark):
+        """Each positional gram is reduced to its two xxhash64 keys at
+        explode time: no exchange carries a string column, and the
+        duplicated-gram passes shuffle the (g1, g2) bigint pair."""
+        from spark_bestfit_spark.operators.dedup import clip_duplicate_spans
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        outs = _exchange_outputs(clip_duplicate_spans(docs, n=8))
+        assert outs
+        for cols in outs:
+            assert "string" not in cols.values(), cols
+        keyed = [c for c in outs if "g1" in c and "g2" in c]
+        assert keyed
+        for cols in keyed:
+            assert cols["g1"] == cols["g2"] == "bigint"

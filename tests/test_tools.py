@@ -86,3 +86,26 @@ def test_invariance_sweep_always_includes_generation_queries():
         capture_output=True, text=True, timeout=60, cwd=REPO,
     )
     assert "<full registry>" in proc2.stdout
+
+
+def test_slow_manifest_guard_flags_only_wholly_collected_files():
+    """tests/conftest.py fails collection on a manifest node id that no
+    longer names a collected test — but only in files collected whole,
+    since a ``file::test`` selection collects the rest of the file out."""
+    from conftest import _stale_manifest_entries
+
+    manifest = {
+        "tests/a.py::T::test_kept",
+        "tests/a.py::T::test_renamed",
+        "tests/b.py::test_other_in_partial_file",
+        "tests/c.py::test_in_uncollected_file",
+    }
+    collected = ["tests/a.py::T::test_kept", "tests/b.py::test_one"]
+    assert _stale_manifest_entries(manifest, collected, set()) == [
+        "tests/a.py::T::test_renamed",
+        "tests/b.py::test_other_in_partial_file",
+    ]
+    assert _stale_manifest_entries(manifest, collected, {"tests/b.py"}) == [
+        "tests/a.py::T::test_renamed",
+    ]
+
