@@ -34,9 +34,7 @@ from spark_bestfit_spark.functions.distributions.registry import (
 from spark_bestfit_spark.functions.estimation import detect_heavy_tail
 from spark_bestfit_spark.operators.fit import (
     local_fit_columns,
-    parallel_fit_column,
     parallel_fit_columns,
-    union_results,
 )
 from spark_bestfit_spark.operators.histogram import (
     compute_histogram,
@@ -806,10 +804,9 @@ class DistributionFitter(_Fitter):
         self, src: DataFrame, cols: list, distributions, config, bounds
     ) -> FitResults:
         """Censored (survival) path: the sample carries an event mask, so
-        columns are planned individually."""
-        per_column_dfs = []
+        columns are planned individually, then fitted in ONE fan-out."""
+        plans: dict = {}
         samples: dict = {}
-        broadcasts: list = []
         for c in cols:
             stats = column_stats(src, c)
             if stats["count"] == 0:
@@ -827,22 +824,16 @@ class DistributionFitter(_Fitter):
             if sample.size < 2:
                 continue
             samples[c] = sample
-            names = distributions or self._select_distributions(config, sample)
-            per_column_dfs.append(
-                parallel_fit_column(
-                    self.spark, names, sample, density, edges, c, config,
-                    self.registry, bounds=bounds, method="mle",
-                    censor_mask=censor_mask, broadcast_registry=broadcasts,
-                )
-            )
-        if not per_column_dfs:
+            plans[c] = {
+                "names": (
+                    distributions or self._select_distributions(config, sample)
+                ),
+                "sample": sample, "density": density, "edges": edges,
+                "censor_mask": censor_mask,
+            }
+        if not plans:
             return self._empty_results()
-        result_df = union_results(per_column_dfs)
-        return FitResults(
-            result_df, registry=self.registry, samples=samples,
-            broadcasts=broadcasts, source=(src, config),
-            deferred_metrics=True if config.lazy_metrics else None,
-        )
+        return self._fan_out(plans, samples, config, bounds, (src, config))
 
 
 class DiscreteDistributionFitter(_Fitter):

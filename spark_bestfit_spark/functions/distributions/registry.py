@@ -93,7 +93,8 @@ SLOW_DISTRIBUTIONS: set = {
 FIT_WEIGHTS: dict = {
     "landau": 4,             # ~150 ms warm (table disk-cached per host;
                              # the ~0.8 s build runs once per machine)
-    "nct": 21,               # ~840 ms measured
+    "nct": 150,              # ~5.8 s on skewed (gamma-like) samples;
+                             # 0.4-0.9 s on symmetric ones
     "norminvgauss": 13,      # ~534 ms measured
     "powerlognorm": 12,      # ~489 ms measured
     "exponweib": 11,         # ~421 ms measured
@@ -298,8 +299,9 @@ class DistributionRegistry:
         return FIT_WEIGHTS.get(name, 3 if name in SLOW_DISTRIBUTIONS else 1)
 
     def effective_count(self, names: list) -> int:
-        """Slow distributions count 3x (measured outliers more) for
-        partition sizing (reference base_fitter.py:524-544)."""
+        """Weighted fit count (slow kernels count their measured weight),
+        compared with the driver-local fit threshold (reference
+        base_fitter.py:524-544)."""
         return sum(self.weight(n) for n in names)
 
     @staticmethod

@@ -118,15 +118,17 @@ class GaussianCopula:
         columns: list | None = None,
         metric: str = "sse",
     ) -> "GaussianCopula":
-        """Best marginal per column + distributed Spearman correlation."""
+        """Best marginal per column (one ranking query for all columns)
+        + distributed Spearman correlation."""
         columns = list(columns or results.columns())
         if len(columns) < 2:
             raise ValueError("copula needs >= 2 columns")
+        best = results.best_per_column(1, metric=metric, columns=columns)
         marginals = {}
         for c in columns:
-            b = results.for_column(c).best(1, metric=metric)
-            if b is None:
+            if c not in best:
                 raise ValueError(f"no successful fits for column {c!r}")
+            (b,) = best[c]
             marginals[c] = _Marginal(
                 b.distribution, tuple(b.parameters),
                 b.lower_bound, b.upper_bound,

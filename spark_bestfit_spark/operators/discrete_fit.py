@@ -11,7 +11,6 @@ computed against the PMF, K-S against the ECDF with jump handling.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -21,6 +20,8 @@ from spark_bestfit_spark.functions.distributions.registry import (
 )
 from spark_bestfit_spark.operators.fit import (
     FIT_RESULT_SCHEMA,
+    _fit_bins,
+    _packed_fanout,
     _sentinel_row,
     compute_data_stats,
 )
@@ -29,7 +30,7 @@ from spark_bestfit_spark.plans.config import FitterConfig
 __all__ = [
     "empirical_pmf",
     "fit_single_discrete",
-    "parallel_fit_discrete_column",
+    "parallel_fit_discrete_columns",
 ]
 
 
@@ -131,49 +132,6 @@ def fit_single_discrete(
         return _sentinel_row(column, dist_name, stats, (None, None))
 
 
-def parallel_fit_discrete_column(
-    spark: SparkSession,
-    dist_names: list,
-    data: np.ndarray,
-    x_values: np.ndarray,
-    pmf: np.ndarray,
-    column: str,
-    config: FitterConfig,
-    registry: DistributionRegistry,
-) -> DataFrame:
-    """Distribution-name fan-out for discrete fits (same partitioning
-    heuristics as the continuous engine)."""
-    stats = compute_data_stats(data)
-    names = registry.interleave(dist_names)
-
-    sc = spark.sparkContext
-    cores = sc.defaultParallelism
-    n_parts = max(
-        1, min(len(names), cores * config.partition_multiplier)
-    )
-    b_data = sc.broadcast((data, x_values, pmf))
-    cfg = config
-
-    from spark_bestfit_spark.operators.fit import _lpt_bins, _packed_fanout
-
-    bins = _lpt_bins(
-        [(n,) for n in names], lambda t: registry.weight(t[0]), n_parts
-    )
-
-    def fit_bin(items):
-        reg = DistributionRegistry(custom_exclusions=set())
-        sample, xs, ps = b_data.value
-        return [
-            fit_single_discrete(
-                name, sample, xs, ps, column, stats, cfg, reg
-            )
-            for (name,) in items
-        ]
-
-    result = _packed_fanout(spark, bins, fit_bin, FIT_RESULT_SCHEMA)
-    return result.filter(F.col("sse") < F.lit(float("inf")))
-
-
 def parallel_fit_discrete_columns(
     spark: SparkSession,
     plans: dict,
@@ -181,28 +139,8 @@ def parallel_fit_discrete_columns(
     registry: DistributionRegistry,
 ) -> DataFrame:
     """ONE (column, distribution) fan-out for many discrete columns
-    (mirror of the continuous parallel_fit_columns)."""
-    per_col_names = {
-        c: registry.interleave(p["names"]) for c, p in plans.items()
-    }
-    pairs = []
-    idx = 0
-    while True:
-        emitted = False
-        for c, names in per_col_names.items():
-            if idx < len(names):
-                pairs.append((c, names[idx]))
-                emitted = True
-        if not emitted:
-            break
-        idx += 1
-
-    sc = spark.sparkContext
-    cores = sc.defaultParallelism
-    n_parts = max(
-        1, min(len(pairs), cores * config.partition_multiplier)
-    )
-    b_plans = sc.broadcast(
+    (mirror of the continuous parallel_fit_columns, same bin sizing)."""
+    b_plans = spark.sparkContext.broadcast(
         {
             c: (
                 p["sample"], p["x_values"], p["pmf"],
@@ -212,10 +150,9 @@ def parallel_fit_discrete_columns(
         }
     )
     cfg = config
-
-    from spark_bestfit_spark.operators.fit import _lpt_bins, _packed_fanout
-
-    pair_bins = _lpt_bins(pairs, lambda t: registry.weight(t[1]), n_parts)
+    bins = _fit_bins(
+        spark, registry, {c: p["names"] for c, p in plans.items()}
+    )
 
     def fit_bin(items):
         reg = DistributionRegistry(custom_exclusions=set())
@@ -230,5 +167,5 @@ def parallel_fit_discrete_columns(
             )
         return rows
 
-    result = _packed_fanout(spark, pair_bins, fit_bin, FIT_RESULT_SCHEMA)
+    result = _packed_fanout(spark, bins, fit_bin, FIT_RESULT_SCHEMA)
     return result.filter(F.col("sse") < F.lit(float("inf")))

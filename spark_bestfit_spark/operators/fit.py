@@ -7,7 +7,7 @@ Dataflow (reference backends/spark.py:76-209, re-expressed Spark-first):
          partition (pure JVM — no Python-RDD round-trip)
       -> mapInPandas(fit kernel) with FIT_RESULT_SCHEMA
       -> filter(sse < inf)        # sentinel failed fits
-      -> union across columns -> cache
+      -> cache
 
 Why this scales: the raw data is reduced to a ~KB histogram + <=10k-row
 sample ONCE per column (single full scan, map-side combined); the D-way
@@ -17,11 +17,22 @@ skew (slow scipy-style kernels) is handled explicitly — AQE cannot see
 Python task cost, so the plan bin-packs the kernels by measured weight
 (greedy longest-processing-time) instead of round-robin repartitioning,
 which could co-locate two stragglers and stretch the wave's tail.
+
+How many bins: one per core, so every fit is ONE task wave. A Python
+task wave has a fixed launch cost — an empty 4-task mapInPandas wave
+takes 0.37-0.50 s on local[4] and an 8-task wave 0.63-0.73 s, with the
+workers reused (about half of it is the worker's per-task
+``importlib.invalidate_caches()``, which re-reads the directory of every
+zip archive on its sys.path). A second wave of smaller bins buys no
+balance the weights do not already give: on the full 91-distribution
+registry (one column, 4 cores) the one-wave fit was not slower than the
+two-wave one (median op 5.37 s vs 5.64 s over 16 alternated pairs),
+because the slowest kernel (``nct``) bounds both layouts.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from itertools import zip_longest
 
 import numpy as np
 import pandas as pd
@@ -227,6 +238,21 @@ def _lpt_bins(items: list, weight_fn, n_bins: int) -> list:
     return [b for b in bins if b]
 
 
+def _fit_bins(
+    spark: SparkSession, registry: DistributionRegistry, names: dict
+) -> list:
+    """Bin-pack the (column, distribution) pairs of ``names`` (column ->
+    distribution list) into ``min(cores, pairs)`` bins: one task wave
+    (module docstring). Pairs are dealt round-robin across columns, so
+    equal-weight kernels of different columns spread over the bins."""
+    per_column = [
+        [(c, n) for n in registry.interleave(ns)] for c, ns in names.items()
+    ]
+    pairs = [p for rnd in zip_longest(*per_column) for p in rnd if p]
+    cores = spark.sparkContext.defaultParallelism
+    return _lpt_bins(pairs, lambda p: registry.weight(p[1]), cores)
+
+
 def _packed_fanout(
     spark: SparkSession,
     bins: list,
@@ -235,7 +261,7 @@ def _packed_fanout(
     broadcast_registry: list | None = None,
 ) -> DataFrame:
     """Run ``process(bin_items) -> list[dict]`` once per weight-balanced
-    bin as a single task wave.
+    bin, one task per bin (``_fit_bins`` sizes the bins to one wave).
 
     The task relation is ``spark.range(n_bins)`` with exactly one id per
     partition — a pure-JVM local relation, so each task runs ONE Python
@@ -261,73 +287,16 @@ def _packed_fanout(
     return spark.range(n, numPartitions=n).mapInPandas(run, schema)
 
 
-def parallel_fit_column(
-    spark: SparkSession,
-    dist_names: list,
-    data: np.ndarray,
-    hist_density: np.ndarray,
-    bin_edges: np.ndarray,
-    column: str,
-    config: FitterConfig,
-    registry: DistributionRegistry,
-    bounds=(None, None),
-    method: str = "mle",
-    censor_mask: np.ndarray | None = None,
-    broadcast_registry: list | None = None,
-) -> DataFrame:
-    """Fan the distribution list out over the cluster; returns the lazy
-    per-column results DataFrame (sentinels already filtered).
-
-    ``broadcast_registry``: optional list the created broadcast variables
-    are appended to so the caller can release them once the results are
-    materialized/unpersisted (reference O2 cleanup discipline)."""
-    obs = (
-        data if censor_mask is None
-        else data[np.asarray(censor_mask, dtype=bool)]
+def _kernel_args(plan: dict) -> tuple:
+    """One column's plan as the fit kernel's per-column arguments:
+    (sample, censor_mask, density, edges, stats, method). A censored
+    plan's provenance stats describe its observed rows only."""
+    sample, mask = plan["sample"], plan.get("censor_mask")
+    observed = sample if mask is None else sample[np.asarray(mask, bool)]
+    return (
+        sample, mask, plan["density"], plan["edges"],
+        compute_data_stats(observed), plan.get("method", "mle"),
     )
-    stats = compute_data_stats(obs)
-    names = registry.interleave(dist_names)
-
-    sc = spark.sparkContext
-    cores = sc.defaultParallelism
-    effective = registry.effective_count(names)
-    n_parts = max(1, min(effective, cores * config.partition_multiplier, len(names)))
-
-    b_data = sc.broadcast((data, censor_mask))
-    b_hist = sc.broadcast((hist_density, bin_edges))
-    b_custom = sc.broadcast(registry.custom_distributions)
-    if broadcast_registry is not None:
-        broadcast_registry += [b_data, b_hist, b_custom]
-
-    bins = _lpt_bins(
-        [(n,) for n in names], lambda t: registry.weight(t[0]), n_parts
-    )
-
-    cfg = config  # capture plain dataclass, not self
-
-    def fit_bin(items):
-        reg = DistributionRegistry(custom_exclusions=set())
-        for name, dist in b_custom.value.items():
-            reg.register_distribution(name, dist, overwrite=True)
-        sample, mask = b_data.value
-        density, edges = b_hist.value
-        return [
-            fit_single_distribution(
-                name, sample, density, edges, column, stats, cfg, reg,
-                bounds, method, mask,
-            )
-            for (name,) in items
-        ]
-
-    result = _packed_fanout(
-        spark, bins, fit_bin, FIT_RESULT_SCHEMA, broadcast_registry
-    )
-    return result.filter(F.col("sse") < F.lit(float("inf")))
-
-
-def union_results(dfs: list) -> DataFrame:
-    """Combine per-column result relations (SURVEY J1)."""
-    return reduce(DataFrame.unionByName, dfs)
 
 
 def parallel_fit_columns(
@@ -342,51 +311,21 @@ def parallel_fit_columns(
     distribution) pairs, so C columns x D distributions fill the cluster
     in a single wave instead of C sequential jobs.
 
-    ``plans`` maps column -> dict(sample, density, edges, method).
-    Broadcast payload is all per-column artifacts (~C x 90KB).
+    ``plans`` maps column -> dict(names, sample, density, edges, and
+    optionally method and censor_mask). Broadcast payload is all
+    per-column artifacts (~C x 90KB). ``broadcast_registry``: optional
+    list the created broadcast variables are appended to so the caller
+    can release them once the results are materialized/unpersisted
+    (reference O2 cleanup discipline).
     """
-    pairs = []
-    per_col_names = {
-        c: registry.interleave(p["names"]) for c, p in plans.items()
-    }
-    # round-robin across columns so each partition mixes columns AND
-    # fast/slow distributions
-    idx = 0
-    while True:
-        emitted = False
-        for c, names in per_col_names.items():
-            if idx < len(names):
-                pairs.append((c, names[idx]))
-                emitted = True
-        if not emitted:
-            break
-        idx += 1
-
     sc = spark.sparkContext
-    cores = sc.defaultParallelism
-    effective = sum(
-        registry.effective_count(n) for n in per_col_names.values()
-    )
-    n_parts = max(
-        1, min(effective, cores * config.partition_multiplier, len(pairs))
-    )
-
-    b_plans = sc.broadcast(
-        {
-            c: (
-                p["sample"], p["density"], p["edges"],
-                compute_data_stats(p["sample"]), p.get("method", "mle"),
-            )
-            for c, p in plans.items()
-        }
-    )
+    b_plans = sc.broadcast({c: _kernel_args(p) for c, p in plans.items()})
     b_custom = sc.broadcast(registry.custom_distributions)
     if broadcast_registry is not None:
         broadcast_registry += [b_plans, b_custom]
     cfg = config
-
-    pair_bins = _lpt_bins(
-        pairs, lambda p: registry.weight(p[1]), n_parts
+    bins = _fit_bins(
+        spark, registry, {c: p["names"] for c, p in plans.items()}
     )
 
     def fit_bin(items):
@@ -396,17 +335,17 @@ def parallel_fit_columns(
         artifacts = b_plans.value
         rows = []
         for col, name in items:
-            sample, density, edges, stats, method = artifacts[col]
+            sample, mask, density, edges, stats, method = artifacts[col]
             rows.append(
                 fit_single_distribution(
                     name, sample, density, edges, col, stats, cfg,
-                    reg, bounds, method, None,
+                    reg, bounds, method, mask,
                 )
             )
         return rows
 
     result = _packed_fanout(
-        spark, pair_bins, fit_bin, FIT_RESULT_SCHEMA, broadcast_registry
+        spark, bins, fit_bin, FIT_RESULT_SCHEMA, broadcast_registry
     )
     return result.filter(F.col("sse") < F.lit(float("inf")))
 
@@ -429,11 +368,11 @@ def local_fit_columns(
     exactly like Catalyst executing small plans locally."""
     rows = []
     for c, p in plans.items():
-        stats = compute_data_stats(p["sample"])
+        sample, mask, density, edges, stats, method = _kernel_args(p)
         for name in p["names"]:
             row = fit_single_distribution(
-                name, p["sample"], p["density"], p["edges"], c, stats,
-                config, registry, bounds, p.get("method", "mle"), None,
+                name, sample, density, edges, c, stats, config, registry,
+                bounds, method, mask,
             )
             if row["sse"] < float("inf"):
                 rows.append(row)

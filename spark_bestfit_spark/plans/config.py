@@ -45,7 +45,6 @@ class FitterConfig:
     censoring_column: str | None = None
 
     # execution
-    partition_multiplier: int = 2  # cap = cores * multiplier
     # tiny plans (weighted fit count <= this) run their kernels on the
     # driver and return a local relation — same kernels, same schema,
     # no fan-out job (analog of Spark's own LocalTableScan strategy);

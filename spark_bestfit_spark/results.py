@@ -305,19 +305,22 @@ class FitResults:
                 f"invalid metric {metric!r}; choose from {VALID_METRICS}"
             )
 
-    def _ordered(self, metric: str) -> DataFrame:
-        """Deterministic ranking: ascending metric (nulls last) with
-        (column_name, distribution) tie-breakers.
-
-        For pvalue/ad_pvalue larger is better, so order descending.
-        """
+    @staticmethod
+    def _metric_order(metric: str):
+        """Ascending metric, nulls last; for pvalue/ad_pvalue larger is
+        better, so those order descending."""
         col = F.col(metric)
-        key = (
-            col.desc_nulls_last()
-            if metric in ("pvalue", "ad_pvalue")
-            else col.asc_nulls_last()
+        if metric in ("pvalue", "ad_pvalue"):
+            return col.desc_nulls_last()
+        return col.asc_nulls_last()
+
+    def _ordered(self, metric: str) -> DataFrame:
+        """Deterministic ranking: ``_metric_order`` with (column_name,
+        distribution) tie-breakers."""
+        return self._df.orderBy(
+            self._metric_order(metric), F.col("column_name"),
+            F.col("distribution"),
         )
-        return self._df.orderBy(key, F.col("column_name"), F.col("distribution"))
 
     # --------------------------------------------------------- lazy metrics
     _LAZY_METRICS = ("ks_statistic", "pvalue", "ad_statistic", "ad_pvalue")
@@ -424,13 +427,20 @@ class FitResults:
             else M.compute_ad_pvalue(ad, result.distribution, sample.size)
         )
 
+    @staticmethod
+    def _lazy_pool(n: int) -> int:
+        """AIC-ranked candidates a deferred top-n query recomputes."""
+        return n * 3 + 5
+
     def _best_lazy(self, n: int, metric: str):
         """AIC-proxy candidate selection, driver recompute, re-sort —
         avoids computing O(n·D) metrics for a top-n query."""
-        candidates = [
-            self._hydrate(r)
-            for r in self._ordered("aic").limit(n * 3 + 5).collect()
-        ]
+        rows = self._ordered("aic").limit(self._lazy_pool(n)).collect()
+        return self._rerank([self._hydrate(r) for r in rows], n, metric)
+
+    def _rerank(self, candidates: list, n: int, metric: str) -> list:
+        """Recompute the deferred ``metric`` for the candidates on the
+        driver and keep the best n."""
         for r in candidates:
             self._recompute_metrics(r)
         reverse = metric in ("pvalue", "ad_pvalue")
@@ -484,42 +494,73 @@ class FitResults:
         else:
             rows = self._ordered(metric).limit(n).collect()
             results = [self._hydrate(r) for r in rows]
-        if results and metric in ("sse", "aic", "bic", "ks_statistic"):
-            v = getattr(results[0], metric)
-            if v is not None and np.isfinite(v) and metric == "ks_statistic" and v > 0.5:
-                warnings.warn(
-                    f"best fit has poor K-S statistic ({v:.3f}); "
-                    "data may not match any library distribution",
-                    stacklevel=2,
-                )
+        self._warn_if_poor(results, metric)
         if n == 1:
             return results[0] if results else None
         return results
+
+    @staticmethod
+    def _warn_if_poor(ranked: list, metric: str) -> None:
+        """Warn (at the ranking call's caller) when the best fit by K-S
+        is still a poor one."""
+        if metric != "ks_statistic" or not ranked:
+            return
+        v = ranked[0].ks_statistic
+        if v is not None and np.isfinite(v) and v > 0.5:
+            warnings.warn(
+                f"best fit has poor K-S statistic ({v:.3f}); "
+                "data may not match any library distribution",
+                stacklevel=3,
+            )
 
     def best_df(self, n: int, metric: str = "sse") -> DataFrame:
         """Lazy top-n relation (for oracle checks / composition)."""
         self._check_metric(metric)
         return self._ordered(metric).limit(n)
 
-    def best_per_column(self, n: int = 1, metric: str = "sse") -> dict:
+    def best_per_column(
+        self, n: int = 1, metric: str = "sse", columns=None
+    ) -> dict:
         """Per-group top-k via Window + row_number — one distributed job
         for all columns (SURVEY T2, replacing the reference's per-column
-        loop)."""
+        loop). ``columns`` restricts the query to those columns. A
+        deferred metric (lazy_metrics=True) takes the same path as
+        ``best``: AIC-ranked candidates per column, recomputed on the
+        driver, so each column's list equals ``for_column(c).best(n)``
+        (and warns like it)."""
         self._check_metric(metric)
-        col = F.col(metric)
-        key = (
-            col.desc_nulls_last()
-            if metric in ("pvalue", "ad_pvalue")
-            else col.asc_nulls_last()
+        df = self._df
+        if columns is not None:
+            df = df.filter(F.col("column_name").isin(list(columns)))
+        if self._metric_is_deferred(metric):
+            out = {
+                c: self._rerank(rows, n, metric)
+                for c, rows in self._top_per_column(
+                    df, self._lazy_pool(n), "aic"
+                ).items()
+            }
+        else:
+            out = self._top_per_column(df, n, metric)
+        for ranked in out.values():
+            self._warn_if_poor(ranked, metric)
+        return out
+
+    def _top_per_column(self, df: DataFrame, n: int, metric: str) -> dict:
+        """column -> its n best rows of ``df`` by ``metric``, ranked in a
+        window per column; the few collected rows are ordered on the
+        driver (no global sort job)."""
+        w = Window.partitionBy("column_name").orderBy(
+            self._metric_order(metric), F.col("distribution")
         )
-        w = Window.partitionBy("column_name").orderBy(key, F.col("distribution"))
         rows = (
-            self._df.withColumn("_rank", F.row_number().over(w))
+            df.withColumn("_rank", F.row_number().over(w))
             .filter(F.col("_rank") <= n)
-            .orderBy("column_name", "_rank")
-            .drop("_rank")
             .collect()
         )
+        # Spark's ascending order: a null column name sorts first
+        rows.sort(key=lambda r: (
+            r["column_name"] is not None, r["column_name"] or "", r["_rank"]
+        ))
         out: dict = {}
         for r in rows:
             out.setdefault(r["column_name"], []).append(self._hydrate(r))

@@ -446,6 +446,34 @@ class TestLazyMetrics:
         ps = [r.pvalue for r in top]
         assert ps == sorted(ps, reverse=True)
 
+    def test_best_per_column_recomputes_like_best(self, spark):
+        """A deferred metric ranks each column the way ``best`` does
+        (AIC pre-selection, driver recompute), never by its null
+        placeholder column."""
+        rng = np.random.default_rng(5)
+        df = spark.createDataFrame(pd.DataFrame({
+            "g": rng.gamma(2.0, 3.0, 4000), "n": rng.normal(0, 1, 4000),
+        }))
+        res = DistributionFitter(spark).fit(
+            df, columns=["g", "n"], lazy_metrics=True,
+            distributions=["cauchy", "expon", "gamma", "laplace",
+                           "logistic", "lognorm", "norm", "uniform",
+                           "weibull_min"],
+        )
+
+        def key(rows):
+            return [(r.distribution, r.parameters, r.ks_statistic,
+                     r.pvalue, r.ad_statistic) for r in rows]
+
+        for n, metric in ((1, "ks_statistic"), (2, "pvalue")):
+            per = res.best_per_column(n, metric=metric)
+            assert sorted(per) == ["g", "n"]
+            for c, rows in per.items():
+                want = res.for_column(c).best(n, metric=metric)
+                want = [want] if n == 1 else want
+                assert key(rows) == key(want), (c, metric)
+                assert all(r.ks_statistic is not None for r in rows)
+
     def test_materialize_fills_all(self, lazy_results):
         mat = lazy_results.materialize()
         rows = mat.df.select("distribution", "ks_statistic").collect()

@@ -269,3 +269,16 @@ class TestRegistry:
         assert reg.effective_count(["norm", "skewnorm"]) == (
             1 + DistributionRegistry.weight("skewnorm")
         )
+
+    def test_nct_is_packed_alone(self):
+        """nct is the registry's slowest default kernel by far on skewed
+        samples (seconds, vs <0.6 s for every other one): packed with
+        the 90 other defaults into 4 bins it must get a bin of its own,
+        or it stretches the fan-out tail."""
+        from spark_bestfit_spark.operators.fit import _lpt_bins
+
+        reg = DistributionRegistry()
+        names = reg.get_distributions()
+        assert len(names) == 91
+        bins = _lpt_bins(names, reg.weight, 4)
+        assert [b for b in bins if "nct" in b] == [["nct"]]

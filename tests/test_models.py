@@ -97,6 +97,65 @@ class TestCopula:
         for c in loaded.column_names:
             assert np.allclose(a[c], b[c])
 
+    @pytest.mark.parametrize(
+        "metric,lazy", [("sse", False), ("ks_statistic", True)]
+    )
+    def test_marginals_are_each_columns_best(self, spark, corr_df,
+                                             metric, lazy):
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        res = DistributionFitter(spark).fit(
+            corr_df, columns=["x", "y", "z"], lazy_metrics=lazy,
+            distributions=["norm", "gamma", "lognorm", "expon", "uniform"],
+        )
+        cop = GaussianCopula.fit(res, corr_df, metric=metric)
+        for c in ("x", "y", "z"):
+            b = res.for_column(c).best(1, metric=metric)
+            m = cop.marginals[c]
+            assert (m.distribution, tuple(m.parameters), m.lower_bound,
+                    m.upper_bound) == (b.distribution, tuple(b.parameters),
+                                       b.lower_bound, b.upper_bound)
+
+    def test_subset_ranks_only_its_columns(self, spark, corr_df):
+        """A copula over some of the fitted columns recomputes deferred
+        metrics from the samples of those columns only."""
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        res = DistributionFitter(spark).fit(
+            corr_df, columns=["x", "y", "z"], lazy_metrics=True,
+            distributions=["norm", "gamma", "expon"],
+        )
+        touched = []
+        get_sample = res._get_sample
+        res._get_sample = lambda c: touched.append(c) or get_sample(c)
+        cop = GaussianCopula.fit(
+            res, corr_df, columns=["x", "y"], metric="ks_statistic"
+        )
+        assert sorted(cop.marginals) == ["x", "y"]
+        assert sorted(set(touched)) == ["x", "y"]
+
+    def test_poor_ks_marginal_warns_like_best(self, spark, corr_df):
+        """Uniform is the only candidate, and its K-S on the exponential
+        column is > 0.5: the copula warns as ``best`` does for it."""
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        res = DistributionFitter(spark).fit(
+            corr_df, columns=["x", "z"], distributions=["uniform"]
+        )
+        with pytest.warns(UserWarning, match="poor K-S"):
+            res.for_column("z").best(1, metric="ks_statistic")
+        with pytest.warns(UserWarning, match="poor K-S"):
+            GaussianCopula.fit(res, corr_df, metric="ks_statistic")
+
+    def test_column_without_fits_is_named(self, spark, corr_df):
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        res = DistributionFitter(spark).fit(
+            corr_df, columns=["x", "y"], distributions=["norm"]
+        )
+        with pytest.raises(ValueError, match="no successful fits for column 'z'"):
+            GaussianCopula.fit(res, corr_df, columns=["x", "y", "z"])
+
     def test_requires_two_columns(self, spark, corr_df):
         from spark_bestfit_spark.fitter import DistributionFitter
 

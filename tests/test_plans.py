@@ -993,3 +993,116 @@ class TestTextKernelPlans:
         assert keyed
         for cols in keyed:
             assert cols["g1"] == cols["g2"] == "bigint"
+
+
+class TestFitFanOut:
+    """The (column, distribution) fit fan-out runs ONE Python task wave:
+    one weight-balanced bin per core, or one per pair when there are
+    fewer pairs than cores. The task count is the partition count of
+    the result relation; reading it builds the plan without running the
+    kernels."""
+
+    CHEAP = ["norm", "expon", "uniform", "logistic", "laplace", "cauchy"]
+
+    @staticmethod
+    def _plans(n_cols, names, discrete=False, size=2000):
+        import numpy as np
+
+        rng = np.random.default_rng(3)
+        plans = {}
+        for i in range(n_cols):
+            if discrete:
+                sample = rng.poisson(4.0, size).astype(float)
+                xs, counts = np.unique(sample, return_counts=True)
+                art = {"x_values": xs, "pmf": counts / counts.sum()}
+            else:
+                sample = rng.gamma(2.0, 3.0, size)
+                density, edges = np.histogram(sample, bins=30, density=True)
+                art = {"density": density, "edges": edges}
+            plans[f"c{i}"] = {"names": list(names), "sample": sample, **art}
+        return plans
+
+    def _assert_one_wave(self, spark, fan_out, names, discrete):
+        from spark_bestfit_spark.functions.distributions.registry import (
+            DistributionRegistry,
+        )
+        from spark_bestfit_spark.plans.config import FitterConfig
+
+        reg = DistributionRegistry()
+        cores = spark.sparkContext.defaultParallelism
+        # fewer pairs than cores, a few columns, and a load of many
+        # weight units per core
+        for n_cols, k in ((1, 2), (2, len(names)), (40, len(names))):
+            plans = self._plans(n_cols, names[:k], discrete, size=50)
+            df = fan_out(spark, plans, FitterConfig(), reg)
+            pairs = n_cols * k
+            assert df.rdd.getNumPartitions() == min(cores, pairs), n_cols
+
+    def test_continuous_fit_is_one_task_wave(self, spark):
+        from spark_bestfit_spark.operators.fit import parallel_fit_columns
+
+        self._assert_one_wave(spark, parallel_fit_columns, self.CHEAP, False)
+
+    def test_discrete_fit_is_one_task_wave(self, spark):
+        from spark_bestfit_spark.operators.discrete_fit import (
+            parallel_fit_discrete_columns,
+        )
+
+        names = ["poisson", "geom", "nbinom", "binom", "planck"]
+        self._assert_one_wave(
+            spark, parallel_fit_discrete_columns, names, True
+        )
+
+    def test_results_do_not_depend_on_layout(self, spark):
+        """Driver-local and fanned-out runs of the same plans return
+        identical rows: the bins only move kernels."""
+        from spark_bestfit_spark.functions.distributions.registry import (
+            DistributionRegistry,
+        )
+        from spark_bestfit_spark.operators.fit import (
+            local_fit_columns,
+            parallel_fit_columns,
+        )
+        from spark_bestfit_spark.plans.config import FitterConfig
+
+        reg = DistributionRegistry()
+        cfg = FitterConfig()
+        for n_cols in (2, 9):
+            plans = self._plans(n_cols, self.CHEAP, size=500)
+            local = sorted(
+                tuple(r) for r in
+                local_fit_columns(spark, plans, cfg, reg).collect()
+            )
+            fanned = sorted(
+                tuple(r) for r in
+                parallel_fit_columns(spark, plans, cfg, reg).collect()
+            )
+            assert len(local) == n_cols * len(self.CHEAP)
+            assert local == fanned, n_cols
+
+    def test_censored_plan_runs_alike_locally(self, spark):
+        """Both executors honour a plan's censor mask: censored MLE, and
+        provenance stats from the observed rows only."""
+        import numpy as np
+
+        from spark_bestfit_spark.functions.distributions.registry import (
+            DistributionRegistry,
+        )
+        from spark_bestfit_spark.operators.fit import (
+            local_fit_columns,
+            parallel_fit_columns,
+        )
+        from spark_bestfit_spark.plans.config import FitterConfig
+
+        reg = DistributionRegistry()
+        cfg = FitterConfig()
+        plans = self._plans(2, ["expon", "norm", "weibull_min"], size=300)
+        rng = np.random.default_rng(4)
+        for p in plans.values():
+            p["censor_mask"] = rng.random(p["sample"].size) < 0.7
+        local = sorted(local_fit_columns(spark, plans, cfg, reg).collect())
+        fanned = sorted(parallel_fit_columns(spark, plans, cfg, reg).collect())
+        assert len(local) == 6
+        assert local == fanned
+        observed = {c: float(p["censor_mask"].sum()) for c, p in plans.items()}
+        assert {r.column_name: r.data_count for r in local} == observed
