@@ -3834,7 +3834,7 @@ def _q_fit_bounded(spark, sf_dir):
 
 def _q_best_per_column(spark, sf_dir):
     """T2 through the public API surface: results.best_per_column
-    (Window + row_number per column_name, results.py) on a materialized
+    (per-column ranking on the fit's driver snapshot, results.py) on a
     two-column fit — the same per-group top-k the raw-SQL
     `topk_per_group` query checks, but exercised via FitResults."""
     from spark_bestfit_spark.fitter import DistributionFitter

@@ -6,7 +6,7 @@ Query lifecycle per fit (all columns batched):
 2. limit-probe ∥ min/max/count stats            — wave 1 (concurrent jobs)
 3. fitting sample ∥ histogram                   — wave 2 (concurrent jobs)
 4. prefilter + interleave distribution list     — driver
-5. parallel_fit fan-out (mapInPandas) + cache   — wave 3
+5. fan-out (mapInPandas), collected once        — wave 3
 
 Waves 1 and 2 each run two independent Spark jobs, one of them from a
 helper driver thread (``_start``), so the prelude costs two job
@@ -21,6 +21,7 @@ from __future__ import annotations
 import warnings
 import zlib
 from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import nullcontext
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -33,6 +34,7 @@ from spark_bestfit_spark.functions.distributions.registry import (
 )
 from spark_bestfit_spark.functions.estimation import detect_heavy_tail
 from spark_bestfit_spark.operators.fit import (
+    FIT_RESULT_SCHEMA,
     local_fit_columns,
     parallel_fit_columns,
 )
@@ -50,6 +52,7 @@ from spark_bestfit_spark.operators.stats import (
     valid_column,
 )
 from spark_bestfit_spark.plans.config import FitterConfig
+from spark_bestfit_spark.progress import ProgressTracker
 from spark_bestfit_spark.results import FitResults
 
 # P7 prefilter (reference continuous_fitter.py:966-1063 semantics):
@@ -233,8 +236,8 @@ def _grouped_samples(
 
 class _Fitter:
     """What the continuous and discrete fitters share: the session and
-    registry, name validation, the empty result and the cached-sample
-    plot data."""
+    registry, name validation, the collect of a fan-out into results,
+    the empty result and the cached-sample plot data."""
 
     def __init__(
         self,
@@ -261,11 +264,33 @@ class _Fitter:
                 "register_distribution() for the available set"
             )
 
-    def _empty_results(self) -> FitResults:
-        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
+    def _results(
+        self, result_df: DataFrame, plans: dict, samples: dict, config,
+        broadcasts: list, source=None,
+    ) -> FitResults:
+        """The fit's one Spark action: collect the fan-out's result
+        relation into the results snapshot — under a ProgressTracker
+        when the config has a progress_callback (reference progress.py
+        role) — then release the broadcasts the fan-out registered."""
+        track = nullcontext()
+        if config.progress_callback is not None:
+            n_fits = sum(len(p["names"]) for p in plans.values())
+            track = ProgressTracker(
+                self.spark, callback=config.progress_callback
+            ).track(f"fitting {n_fits} distributions")
+        try:
+            with track:
+                return FitResults(
+                    result_df, registry=self.registry, samples=samples,
+                    source=source,
+                )
+        finally:
+            for b in broadcasts:
+                b.unpersist()
 
+    def _empty_results(self) -> FitResults:
         empty = self.spark.createDataFrame([], schema=FIT_RESULT_SCHEMA)
-        return FitResults(empty, registry=self.registry, cache=False)
+        return FitResults(empty, registry=self.registry)
 
     @staticmethod
     def _cached_sample(result, df, force_recompute: bool):
@@ -485,18 +510,7 @@ class DistributionFitter(_Fitter):
                 )
         if not plans:
             return self._empty_results()
-        results = self._fan_out(plans, samples, config, bounds, (src, config))
-        if config.progress_callback is not None:
-            # materialize the fan-out under a tracked job group so the
-            # callback sees task completion (reference progress.py role)
-            from spark_bestfit_spark.progress import ProgressTracker
-
-            tracker = ProgressTracker(
-                self.spark, callback=config.progress_callback
-            )
-            with tracker.track(f"fitting {sum(len(p['names']) for p in plans.values())} distributions"):
-                results.count()
-        return results
+        return self._fan_out(plans, samples, config, bounds, (src, config))
 
     def _plan(self, sample, histogram, distributions, config) -> dict:
         """One column's fan-out plan: its distribution list, sample,
@@ -520,7 +534,8 @@ class DistributionFitter(_Fitter):
         self, plans: dict, samples: dict, config, bounds, source=None
     ) -> FitResults:
         """ONE (column, distribution) fan-out over the planned columns,
-        wrapped as the cached result relation."""
+        collected into the results snapshot. A fit with a progress
+        callback always fans out, so the callback sees its tasks."""
         broadcasts: list = []
         effective = sum(
             self.registry.effective_count(p["names"]) for p in plans.values()
@@ -539,14 +554,8 @@ class DistributionFitter(_Fitter):
                 self.spark, plans, config, self.registry, bounds=bounds,
                 broadcast_registry=broadcasts,
             )
-        return FitResults(
-            result_df, registry=self.registry, samples=samples,
-            broadcasts=broadcasts, source=source,
-            # lazy fits are KNOWN deferred -> best() skips the probe
-            # job; eager fits stay on the cached probe (censored fits
-            # legitimately carry all-null KS and must keep behaving as
-            # deferred there)
-            deferred_metrics=True if config.lazy_metrics else None,
+        return self._results(
+            result_df, plans, samples, config, broadcasts, source
         )
 
     # ------------------------------------------------------ instant plotting
@@ -848,6 +857,22 @@ class DiscreteDistributionFitter(_Fitter):
             names = names[: config.max_distributions]
         return names
 
+    def _fan_out(self, plans: dict, samples: dict, config, source=None):
+        """ONE (column, distribution) fan-out over the planned columns,
+        collected into the results snapshot."""
+        from spark_bestfit_spark.operators.discrete_fit import (
+            parallel_fit_discrete_columns,
+        )
+
+        broadcasts: list = []
+        result_df = parallel_fit_discrete_columns(
+            self.spark, plans, config, self.registry,
+            broadcast_registry=broadcasts,
+        )
+        return self._results(
+            result_df, plans, samples, config, broadcasts, source
+        )
+
     def fit(
         self,
         df: DataFrame,
@@ -859,7 +884,6 @@ class DiscreteDistributionFitter(_Fitter):
     ) -> FitResults:
         from spark_bestfit_spark.operators.discrete_fit import (
             empirical_pmfs_multi,
-            parallel_fit_discrete_columns,
         )
 
         if column is None and columns is None:
@@ -908,13 +932,7 @@ class DiscreteDistributionFitter(_Fitter):
             }
         if not plans:
             return self._empty_results()
-        result_df = parallel_fit_discrete_columns(
-            self.spark, plans, config, self.registry
-        )
-        return FitResults(
-            result_df, registry=self.registry, samples=samples,
-            source=(df, config),
-        )
+        return self._fan_out(plans, samples, config, (df, config))
 
     def fit_grouped(
         self,
@@ -949,10 +967,6 @@ class DiscreteDistributionFitter(_Fitter):
         config = _merge_config(config, kwargs)
         if distributions:
             self._validate_names(distributions)
-        from spark_bestfit_spark.operators.discrete_fit import (
-            parallel_fit_discrete_columns,
-        )
-
         clean, counts = _grouped_counts(df, column, group_col, max_groups)
         if not counts:
             return self._empty_results()
@@ -992,12 +1006,7 @@ class DiscreteDistributionFitter(_Fitter):
             }
         if not plans:
             return self._empty_results()
-        result_df = parallel_fit_discrete_columns(
-            self.spark, plans, config, self.registry
-        )
-        return FitResults(
-            result_df, registry=self.registry, samples=samples
-        )
+        return self._fan_out(plans, samples, config)
 
     def plot(
         self, result, df=None, column=None,

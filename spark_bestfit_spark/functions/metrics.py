@@ -69,7 +69,11 @@ def compute_information_criteria(dist, params, data: np.ndarray):
     try:
         n = len(data)
         k = len(params)
-        ll = float(np.sum(dist.logpdf(data, *params)))
+        logpdf = dist.logpdf(data, *params)
+        # Declared sentinel: -inf (outside the support) + inf (at a pole)
+        # sums to nan, reported as (inf, inf) below — silence numpy's warning
+        with np.errstate(invalid="ignore"):
+            ll = float(np.sum(logpdf))
         if not np.isfinite(ll):
             return float("inf"), float("inf")
         return 2.0 * k - 2.0 * ll, k * float(np.log(n)) - 2.0 * ll

@@ -137,9 +137,11 @@ def parallel_fit_discrete_columns(
     plans: dict,
     config: FitterConfig,
     registry: DistributionRegistry,
+    broadcast_registry: list | None = None,
 ) -> DataFrame:
     """ONE (column, distribution) fan-out for many discrete columns
-    (mirror of the continuous parallel_fit_columns, same bin sizing)."""
+    (mirror of the continuous parallel_fit_columns, same bin sizing and
+    the same ``broadcast_registry``)."""
     b_plans = spark.sparkContext.broadcast(
         {
             c: (
@@ -149,6 +151,8 @@ def parallel_fit_discrete_columns(
             for c, p in plans.items()
         }
     )
+    if broadcast_registry is not None:
+        broadcast_registry.append(b_plans)
     cfg = config
     bins = _fit_bins(
         spark, registry, {c: p["names"] for c, p in plans.items()}
@@ -167,5 +171,7 @@ def parallel_fit_discrete_columns(
             )
         return rows
 
-    result = _packed_fanout(spark, bins, fit_bin, FIT_RESULT_SCHEMA)
+    result = _packed_fanout(
+        spark, bins, fit_bin, FIT_RESULT_SCHEMA, broadcast_registry
+    )
     return result.filter(F.col("sse") < F.lit(float("inf")))

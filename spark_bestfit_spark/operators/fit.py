@@ -7,7 +7,7 @@ Dataflow (reference backends/spark.py:76-209, re-expressed Spark-first):
          partition (pure JVM — no Python-RDD round-trip)
       -> mapInPandas(fit kernel) with FIT_RESULT_SCHEMA
       -> filter(sse < inf)        # sentinel failed fits
-      -> cache
+      -> collect, once, into the FitResults driver snapshot
 
 Why this scales: the raw data is reduced to a ~KB histogram + <=10k-row
 sample ONCE per column (single full scan, map-side combined); the D-way
@@ -315,8 +315,8 @@ def parallel_fit_columns(
     optionally method and censor_mask). Broadcast payload is all
     per-column artifacts (~C x 90KB). ``broadcast_registry``: optional
     list the created broadcast variables are appended to so the caller
-    can release them once the results are materialized/unpersisted
-    (reference O2 cleanup discipline).
+    can release them once the results are collected (reference O2
+    cleanup discipline).
     """
     sc = spark.sparkContext
     b_plans = sc.broadcast({c: _kernel_args(p) for c, p in plans.items()})

@@ -29,7 +29,7 @@ class ProgressTracker:
 
         tracker = ProgressTracker(spark, callback=console_progress)
         with tracker.track("fitting 90 distributions"):
-            results.count()   # any action inside runs under the group
+            rows = result_df.collect()  # runs under the group
 
     On exit the caller's own job group, description and interrupt flag
     are restored, not cleared.

@@ -1,27 +1,35 @@
-"""Fit-results relation + fluent query surface (SURVEY §1.3, §2.5, §2.12).
+"""Fit-results snapshot + fluent query surface (SURVEY §1.3, §2.5, §2.12).
 
-``FitResults`` wraps the cached results DataFrame and exposes the
-reference's query API (collection.py:51-1175) as thin, deterministic
-DataFrame operations:
+A fit's result relation is small (at most C × D rows), so ``FitResults``
+collects it ONCE into an immutable driver-side snapshot and answers the
+reference's query API (collection.py:51-1175) from it with no further
+Spark job:
 
-- ``best``: orderBy(metric ASC NULLS LAST, distribution) + limit — the
-  tie-breaker makes top-k reproducible (oracle-checkable);
-- ``best_per_column``: Window.partitionBy + row_number (idiomatic Spark
-  for per-group top-k, replacing the reference's driver loop);
-- ``filter``: chained metric threshold predicates;
-- ``summary`` / ``quality_report``: single-pass multi-stat aggregation.
+- ``best``: rows ranked by one key in Spark's order — the metric ASC
+  NULLS LAST (DESC NULLS LAST for pvalue/ad_pvalue, NaN above every
+  number), then column_name and distribution, so top-k is reproducible
+  (oracle-checkable);
+- ``best_per_column``: the same key within each column (SURVEY T2,
+  replacing the reference's per-column loop);
+- ``filter`` / ``n_acceptable``: metric thresholds with Spark's
+  comparison rules (a null never passes);
+- ``summary`` / ``quality_report``: one pass over the snapshot.
+
+``df`` and ``best_df`` stay Spark relations, built from the snapshot on
+first use.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import pickle
 import warnings
+from collections import namedtuple
 from dataclasses import dataclass, field
 
 import numpy as np
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from spark_bestfit_spark.functions.distributions.registry import (
     DistributionRegistry,
@@ -230,73 +238,125 @@ _ROW_FIELDS = [
     "data_skewness", "lower_bound", "upper_bound",
 ]
 
+# one snapshot row: FIT_RESULT_SCHEMA's fields, parameters as a tuple
+_Row = namedtuple("_Row", _ROW_FIELDS)
+
+
+def _metric_key(v, descending: bool = False) -> tuple:
+    """Sort key of a double in Spark's order: NaN is greater than every
+    number (+inf too) and equal to itself; a null sorts last in either
+    direction."""
+    if v is None:
+        return (2, 0.0)
+    if v != v:
+        return (0 if descending else 1, 0.0)
+    return (1, -v) if descending else (0, v)
+
+
+def _name_key(v) -> tuple:
+    """Spark's ascending order of a string: nulls first."""
+    return (v is not None, v or "")
+
+
+def _rank_key(metric: str):
+    """Row -> sort key of Spark's ``ORDER BY metric ASC NULLS LAST (DESC
+    NULLS LAST for pvalue/ad_pvalue, where larger is better),
+    column_name, distribution`` — the one ranking every query uses; works
+    on snapshot rows and on hydrated records alike."""
+    descending = metric in ("pvalue", "ad_pvalue")
+    return lambda r: (
+        _metric_key(getattr(r, metric), descending),
+        _name_key(r.column_name), _name_key(r.distribution),
+    )
+
+
+def _passes(v, bound, at_most: bool) -> bool:
+    """Spark's ``v <= bound`` (``v >= bound`` when not ``at_most``): a
+    null never passes, and NaN compares as in ``_metric_key``."""
+    if v is None:
+        return False
+    a, b = _metric_key(v), _metric_key(bound)
+    return a <= b if at_most else a >= b
+
 
 class FitResults:
-    """Query surface over the cached fit-results relation."""
+    """Query surface over an immutable driver-side snapshot of the
+    fit-results relation."""
 
     def __init__(
         self,
         df: DataFrame,
         registry: DistributionRegistry | None = None,
         samples: dict | None = None,
-        cache: bool = True,
-        broadcasts: list | None = None,
         source: tuple | None = None,
-        deferred_metrics: bool | None = None,
     ):
-        self._df = df.cache() if cache else df
+        # the results' one Spark action: every query reads this snapshot
+        self._rows = tuple(
+            _Row(**{f: d.get(f) for f in _ROW_FIELDS})._replace(
+                parameters=tuple(d.get("parameters") or ())
+            )
+            for d in (r.asDict() for r in df.collect())
+        )
+        self._spark = df.sparkSession
+        self._df: DataFrame | None = None
         self._registry = registry or DistributionRegistry()
         self._samples = samples or {}
         self._sorted_samples: dict = {}
-        self._broadcasts = broadcasts or []
-        # True/False when the creator knows whether KS/AD were skipped
-        # at fit time (lazy_metrics); None = unknown -> probe the
-        # relation once and cache (loaded results, external relations)
-        self._deferred_metrics = deferred_metrics
-        self._deferred_probe: dict = {}
         # (source DataFrame, FitterConfig) for deterministic sample
         # recreation (reference SA5: same df + seed => same sample)
         self._source = source
 
+    def _view(self, rows) -> "FitResults":
+        """These results restricted to (or recomputed as) ``rows``, with
+        the same registry, samples and source — no Spark job."""
+        view = copy.copy(self)
+        view._rows = tuple(rows)
+        view._df = None
+        return view
+
     # ------------------------------------------------------------- plumbing
     @property
     def df(self) -> DataFrame:
+        """The snapshot as a Spark relation (built on first use)."""
+        if self._df is None:
+            self._df = self._relation(self._rows)
         return self._df
 
+    def _relation(self, rows) -> DataFrame:
+        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
+
+        return self._spark.createDataFrame(
+            [r._replace(parameters=list(r.parameters)) for r in rows],
+            schema=FIT_RESULT_SCHEMA,
+        )
+
     def count(self) -> int:
-        return self._df.count()
+        return len(self._rows)
 
     def unpersist(self, blocking: bool = False) -> None:
-        """Release the cached relation AND the fan-out's broadcast
-        variables (reference O2: broadcasts cleaned up explicitly)."""
-        self._df.unpersist(blocking)
-        for b in self._broadcasts:
-            try:
-                b.unpersist(blocking)
-            except Exception:  # noqa: BLE001 — already released / sc gone
-                pass
-        self._broadcasts = []
+        """No-op: the results hold no Spark state (the fitter releases
+        the fan-out's broadcast variables right after its collect,
+        reference O2)."""
 
     def columns(self) -> list:
         """Distinct source column names (SURVEY P5)."""
-        rows = (
-            self._df.select("column_name")
-            .filter(F.col("column_name").isNotNull())
-            .distinct()
-            .orderBy("column_name")
-            .collect()
+        return sorted(
+            {r.column_name for r in self._rows if r.column_name is not None}
         )
-        return [r["column_name"] for r in rows]
 
-    def _hydrate(self, row) -> DistributionFitResult:
-        d = row.asDict()
-        kwargs = {k: d.get(k) for k in _ROW_FIELDS}
-        kwargs["parameters"] = tuple(kwargs["parameters"] or ())
+    def _hydrate(self, row: _Row) -> DistributionFitResult:
+        """A fresh record for a snapshot row (the lazy recompute fills
+        records in place, so a snapshot row is never handed out)."""
         return DistributionFitResult(
-            **kwargs,
+            **row._asdict(),
             _registry=self._registry,
-            _sample=self._samples.get(d.get("column_name")),
+            _sample=self._samples.get(row.column_name),
         )
+
+    def _top(self, rows, n: int, metric: str) -> list:
+        """Fresh records of the n best ``rows`` by ``metric``."""
+        ranked = sorted(rows, key=_rank_key(metric))
+        return [self._hydrate(r) for r in ranked[:n]]
 
     @staticmethod
     def _check_metric(metric: str) -> None:
@@ -305,48 +365,19 @@ class FitResults:
                 f"invalid metric {metric!r}; choose from {VALID_METRICS}"
             )
 
-    @staticmethod
-    def _metric_order(metric: str):
-        """Ascending metric, nulls last; for pvalue/ad_pvalue larger is
-        better, so those order descending."""
-        col = F.col(metric)
-        if metric in ("pvalue", "ad_pvalue"):
-            return col.desc_nulls_last()
-        return col.asc_nulls_last()
-
-    def _ordered(self, metric: str) -> DataFrame:
-        """Deterministic ranking: ``_metric_order`` with (column_name,
-        distribution) tie-breakers."""
-        return self._df.orderBy(
-            self._metric_order(metric), F.col("column_name"),
-            F.col("distribution"),
-        )
-
     # --------------------------------------------------------- lazy metrics
     _LAZY_METRICS = ("ks_statistic", "pvalue", "ad_statistic", "ad_pvalue")
 
     def _metric_is_deferred(self, metric: str) -> bool:
         """True when the requested metric was skipped at fit time
-        (lazy_metrics=True) and must be recomputed from the sample.
-
-        The fitter stamps ``deferred_metrics`` at construction so the
-        common path costs NO Spark job; only results of unknown
-        provenance (loads, external relations) probe the relation, and
-        that probe runs once per metric (one combined aggregate job,
-        cached)."""
-        if metric not in self._LAZY_METRICS:
-            return False
-        if self._deferred_metrics is not None:
-            return self._deferred_metrics
-        cached = self._deferred_probe.get(metric)
-        if cached is None:
-            row = self._df.agg(
-                F.count(F.col(metric)).alias("have"),
-                F.count("*").alias("n"),
-            ).first()
-            cached = row["have"] == 0 and row["n"] > 0
-            self._deferred_probe[metric] = cached
-        return cached
+        (lazy_metrics=True, or a censored fit) and must be recomputed
+        from the sample: there are rows and all of them are null for
+        it."""
+        return (
+            metric in self._LAZY_METRICS
+            and bool(self._rows)
+            and all(getattr(r, metric) is None for r in self._rows)
+        )
 
     def _get_sample(self, column: str):
         """Cached fitting sample, or a deterministic recreation from the
@@ -432,52 +463,23 @@ class FitResults:
         """AIC-ranked candidates a deferred top-n query recomputes."""
         return n * 3 + 5
 
-    def _best_lazy(self, n: int, metric: str):
-        """AIC-proxy candidate selection, driver recompute, re-sort —
-        avoids computing O(n·D) metrics for a top-n query."""
-        rows = self._ordered("aic").limit(self._lazy_pool(n)).collect()
-        return self._rerank([self._hydrate(r) for r in rows], n, metric)
-
     def _rerank(self, candidates: list, n: int, metric: str) -> list:
         """Recompute the deferred ``metric`` for the candidates on the
         driver and keep the best n."""
         for r in candidates:
             self._recompute_metrics(r)
-        reverse = metric in ("pvalue", "ad_pvalue")
-        sentinel = float("-inf") if reverse else float("inf")
-        candidates.sort(
-            key=lambda r: (
-                getattr(r, metric) if getattr(r, metric) is not None
-                else sentinel,
-                r.column_name,
-                r.distribution,
-            ),
-            reverse=reverse,
-        )
+        candidates.sort(key=_rank_key(metric))
         return candidates[:n]
 
     def materialize(self) -> "FitResults":
-        """Eagerly fill deferred KS/AD for every row, returning a new
-        results object backed by a local-relation DataFrame."""
-        results = [self._hydrate(r) for r in self._df.collect()]
+        """Eagerly fill deferred KS/AD for every row, returning new
+        results over the filled snapshot."""
+        results = [self._hydrate(r) for r in self._rows]
         for r in results:
             if r.ks_statistic is None:
                 self._recompute_metrics(r)
-        spark = self._df.sparkSession
-        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
-
-        rows = [
-            tuple(
-                list(getattr(r, f) or ()) if f == "parameters"
-                else getattr(r, f)
-                for f in _ROW_FIELDS
-            )
-            for r in results
-        ]
-        new_df = spark.createDataFrame(rows, schema=FIT_RESULT_SCHEMA)
-        return FitResults(
-            new_df, registry=self._registry, samples=self._samples,
-            deferred_metrics=False,
+        return self._view(
+            _Row(*(getattr(r, f) for f in _ROW_FIELDS)) for r in results
         )
 
     # -------------------------------------------------------------- queries
@@ -490,10 +492,11 @@ class FitResults:
             raise ValueError(f"n must be >= 1, got {n}")
         self._check_metric(metric)
         if self._metric_is_deferred(metric):
-            results = self._best_lazy(n, metric)
+            results = self._rerank(
+                self._top(self._rows, self._lazy_pool(n), "aic"), n, metric
+            )
         else:
-            rows = self._ordered(metric).limit(n).collect()
-            results = [self._hydrate(r) for r in rows]
+            results = self._top(self._rows, n, metric)
         self._warn_if_poor(results, metric)
         if n == 1:
             return results[0] if results else None
@@ -514,56 +517,40 @@ class FitResults:
             )
 
     def best_df(self, n: int, metric: str = "sse") -> DataFrame:
-        """Lazy top-n relation (for oracle checks / composition)."""
+        """Top-n relation (for oracle checks / composition)."""
         self._check_metric(metric)
-        return self._ordered(metric).limit(n)
+        return self._relation(
+            sorted(self._rows, key=_rank_key(metric))[:n]
+        )
 
     def best_per_column(
         self, n: int = 1, metric: str = "sse", columns=None
     ) -> dict:
-        """Per-group top-k via Window + row_number — one distributed job
-        for all columns (SURVEY T2, replacing the reference's per-column
-        loop). ``columns`` restricts the query to those columns. A
-        deferred metric (lazy_metrics=True) takes the same path as
-        ``best``: AIC-ranked candidates per column, recomputed on the
-        driver, so each column's list equals ``for_column(c).best(n)``
-        (and warns like it)."""
+        """Per-group top-k (SURVEY T2): each column's rows ranked by
+        ``best``'s key; the dict runs in column order, a null column
+        name first as in Spark. ``columns`` restricts the query to
+        those columns. A deferred metric (lazy_metrics=True) takes the
+        same path as ``best``: AIC-ranked candidates per column,
+        recomputed on the driver, so each column's list equals
+        ``for_column(c).best(n)`` (and warns like it)."""
         self._check_metric(metric)
-        df = self._df
+        rows = self._rows
         if columns is not None:
-            df = df.filter(F.col("column_name").isin(list(columns)))
-        if self._metric_is_deferred(metric):
-            out = {
-                c: self._rerank(rows, n, metric)
-                for c, rows in self._top_per_column(
-                    df, self._lazy_pool(n), "aic"
-                ).items()
-            }
-        else:
-            out = self._top_per_column(df, n, metric)
+            wanted = set(columns)
+            rows = [r for r in rows if r.column_name in wanted]
+        deferred = self._metric_is_deferred(metric)
+        k, by = (self._lazy_pool(n), "aic") if deferred else (n, metric)
+        grouped: dict = {}
+        for r in rows:
+            grouped.setdefault(r.column_name, []).append(r)
+        out = {
+            c: self._top(grouped[c], k, by)
+            for c in sorted(grouped, key=_name_key) if k > 0
+        }
+        if deferred:
+            out = {c: self._rerank(rs, n, metric) for c, rs in out.items()}
         for ranked in out.values():
             self._warn_if_poor(ranked, metric)
-        return out
-
-    def _top_per_column(self, df: DataFrame, n: int, metric: str) -> dict:
-        """column -> its n best rows of ``df`` by ``metric``, ranked in a
-        window per column; the few collected rows are ordered on the
-        driver (no global sort job)."""
-        w = Window.partitionBy("column_name").orderBy(
-            self._metric_order(metric), F.col("distribution")
-        )
-        rows = (
-            df.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= n)
-            .collect()
-        )
-        # Spark's ascending order: a null column name sorts first
-        rows.sort(key=lambda r: (
-            r["column_name"] is not None, r["column_name"] or "", r["_rank"]
-        ))
-        out: dict = {}
-        for r in rows:
-            out.setdefault(r["column_name"], []).append(self._hydrate(r))
         return out
 
     # ------------------------------------------------------ instant plotting
@@ -636,13 +623,9 @@ class FitResults:
 
     def for_column(self, column: str) -> "FitResults":
         """Restrict to one source column (SURVEY P4)."""
-        return FitResults(
-            self._df.filter(F.col("column_name") == F.lit(column)),
-            registry=self._registry,
-            samples=self._samples,
-            cache=False,
-            source=self._source,
-            deferred_metrics=self._deferred_metrics,
+        return self._view(
+            r for r in self._rows
+            if column is not None and r.column_name == column
         )
 
     def filter(
@@ -654,43 +637,32 @@ class FitResults:
         min_pvalue: float | None = None,
         max_ad_statistic: float | None = None,
     ) -> "FitResults":
-        """Threshold filter over the metric columns (SURVEY P3)."""
-        df = self._df
-        if max_sse is not None:
-            df = df.filter(F.col("sse") <= max_sse)
-        if max_aic is not None:
-            df = df.filter(F.col("aic") <= max_aic)
-        if max_bic is not None:
-            df = df.filter(F.col("bic") <= max_bic)
-        if max_ks_statistic is not None:
-            df = df.filter(F.col("ks_statistic") <= max_ks_statistic)
-        if min_pvalue is not None:
-            df = df.filter(F.col("pvalue") >= min_pvalue)
-        if max_ad_statistic is not None:
-            df = df.filter(F.col("ad_statistic") <= max_ad_statistic)
-        return FitResults(
-            df, registry=self._registry, samples=self._samples, cache=False,
-            source=self._source,
-            deferred_metrics=self._deferred_metrics,
+        """Threshold filter over the metric columns (SURVEY P3); only
+        ``pvalue`` is a lower bound."""
+        bounds = {
+            "sse": max_sse, "aic": max_aic, "bic": max_bic,
+            "ks_statistic": max_ks_statistic, "pvalue": min_pvalue,
+            "ad_statistic": max_ad_statistic,
+        }
+        tests = [(m, b) for m, b in bounds.items() if b is not None]
+        return self._view(
+            r for r in self._rows
+            if all(_passes(getattr(r, m), b, m != "pvalue") for m, b in tests)
         )
 
     def summary(self) -> dict:
-        """min/mean/max of each metric + counts in ONE aggregation job
-        (SURVEY A9)."""
-        aggs = [F.count("*").alias("n_fits")]
+        """min/mean/max of each metric + counts (SURVEY A9), with Spark's
+        aggregate rules: nulls are skipped, NaN is the largest value."""
+        out: dict = {
+            "n_fits": len(self._rows), "n_columns": len(self.columns()),
+        }
         for m in ("sse", "aic", "bic", "ks_statistic", "pvalue"):
-            aggs += [
-                F.min(m).alias(f"{m}_min"),
-                F.mean(m).alias(f"{m}_mean"),
-                F.max(m).alias(f"{m}_max"),
-            ]
-        row = self._df.agg(*aggs).first().asDict()
-        out: dict = {"n_fits": row["n_fits"], "n_columns": len(self.columns())}
-        for m in ("sse", "aic", "bic", "ks_statistic", "pvalue"):
+            vals = [getattr(r, m) for r in self._rows]
+            vals = [v for v in vals if v is not None]
             out[m] = {
-                "min": row[f"{m}_min"],
-                "mean": row[f"{m}_mean"],
-                "max": row[f"{m}_max"],
+                "min": min(vals, key=_metric_key) if vals else None,
+                "mean": sum(vals) / len(vals) if vals else None,
+                "max": max(vals, key=_metric_key) if vals else None,
             }
         return out
 
@@ -700,10 +672,9 @@ class FitResults:
         max_ks_statistic: float | None = None,
     ) -> int:
         """Count of fits passing quality thresholds (SURVEY A10)."""
-        df = self._df.filter(F.col("pvalue") >= min_pvalue)
-        if max_ks_statistic is not None:
-            df = df.filter(F.col("ks_statistic") <= max_ks_statistic)
-        return df.count()
+        return self.filter(
+            min_pvalue=min_pvalue, max_ks_statistic=max_ks_statistic
+        ).count()
 
     def quality_report(self, n: int = 3, min_pvalue: float = 0.05) -> dict:
         """Top fits + summary + acceptability (SURVEY quality_report,

@@ -376,7 +376,6 @@ class TestSampleRecreation:
         )
         fr = FitResults(
             spark.createDataFrame([row], schema=FIT_RESULT_SCHEMA),
-            cache=False,
         )
         with pytest.raises(ValueError, match="no cached sample"):
             fr.best(1, metric="ks_statistic")
@@ -473,6 +472,34 @@ class TestLazyMetrics:
                 want = [want] if n == 1 else want
                 assert key(rows) == key(want), (c, metric)
                 assert all(r.ks_statistic is not None for r in rows)
+
+    def test_tied_pvalues_rank_like_eager(self, spark):
+        """Every p-value of a two-mode sample is 0.0: the lazy ranking
+        breaks the ties by (column, distribution) ascending, exactly as
+        the eager and the materialized rankings do."""
+        rng = np.random.default_rng(3)
+        data = np.concatenate(
+            [rng.normal(0, 1, 5000), rng.normal(40, 1, 5000)]
+        )
+        df = spark.createDataFrame(pd.DataFrame({"v": data}))
+        dists = ["cauchy", "expon", "gamma", "laplace", "logistic",
+                 "lognorm", "norm", "uniform"]
+        fitter = DistributionFitter(spark)
+        lazy = fitter.fit(df, column="v", lazy_metrics=True,
+                          distributions=dists)
+        eager = fitter.fit(df, column="v", distributions=dists)
+        for metric in ("pvalue", "ad_pvalue"):
+            want = [
+                (r.distribution, getattr(r, metric))
+                for r in eager.best(8, metric=metric)
+            ]
+            for res in (lazy, lazy.materialize()):
+                got = [
+                    (r.distribution, getattr(r, metric))
+                    for r in res.best(8, metric=metric)
+                ]
+                assert got == want, metric
+        assert {r.pvalue for r in eager.best(8, metric="pvalue")} == {0.0}
 
     def test_materialize_fills_all(self, lazy_results):
         mat = lazy_results.materialize()

@@ -99,6 +99,45 @@ class TestProgressTracker:
         t.stop()
         t.stop()  # second stop is a no-op
 
+    @pytest.mark.parametrize("kind", ["grouped", "censored", "discrete"])
+    def test_every_fit_kind_reports_progress(self, spark, kind):
+        """The fan-out's one collect runs under the tracker for grouped,
+        censored and discrete fits too, not only for ``fit()``."""
+        from spark_bestfit_spark.fitter import (
+            DiscreteDistributionFitter,
+            DistributionFitter,
+        )
+
+        rng = np.random.default_rng(8)
+        n = 3000
+        df = spark.createDataFrame(pd.DataFrame({
+            "v": rng.gamma(2.0, 3.0, n),
+            "k": rng.poisson(4.0, n).astype(float),
+            "g": rng.integers(0, 3, n),
+            "obs": rng.random(n) < 0.7,
+        }))
+        seen = []
+        kw = {"progress_callback": lambda *a: seen.append(a)}
+        names = ["expon", "gamma", "lognorm", "weibull_min", "norm"]
+        if kind == "grouped":
+            res = DistributionFitter(spark).fit_grouped(
+                df, "v", "g", distributions=names, **kw
+            )
+        elif kind == "censored":
+            res = DistributionFitter(spark).fit(
+                df, column="v", distributions=names,
+                censoring_column="obs", **kw
+            )
+        else:
+            res = DiscreteDistributionFitter(spark).fit(
+                df, column="k", distributions=["poisson", "geom", "nbinom"],
+                **kw
+            )
+        assert res.count() > 0
+        assert seen, kind
+        for completed, total, _ in seen:
+            assert 0 <= completed <= total
+
     def test_fit_with_progress_keeps_callers_job_group(self, spark):
         from spark_bestfit_spark.fitter import DistributionFitter
 

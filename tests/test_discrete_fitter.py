@@ -31,6 +31,43 @@ class TestEmpiricalPmf:
 
 
 class TestDiscreteFitter:
+    def test_fit_releases_fan_out_broadcasts(self, spark, monkeypatch):
+        """The discrete fan-out registers its broadcasts (plans and
+        bins), and the fitter releases them after its one collect."""
+        from pyspark.broadcast import Broadcast
+
+        from spark_bestfit_spark.operators import discrete_fit
+
+        registered, released = [], []
+        fan_out = discrete_fit.parallel_fit_discrete_columns
+
+        def spy_fan_out(*args, broadcast_registry=None, **kwargs):
+            df = fan_out(
+                *args, broadcast_registry=broadcast_registry, **kwargs
+            )
+            registered.extend(broadcast_registry or [])
+            return df
+
+        unpersist = Broadcast.unpersist
+
+        def spy_unpersist(self, blocking=False):
+            released.append(self)
+            return unpersist(self, blocking)
+
+        monkeypatch.setattr(
+            discrete_fit, "parallel_fit_discrete_columns", spy_fan_out
+        )
+        monkeypatch.setattr(Broadcast, "unpersist", spy_unpersist)
+        df = spark.createDataFrame(pd.DataFrame(
+            {"v": np.random.default_rng(1).poisson(3.0, 500).astype(float)}
+        ))
+        res = DiscreteDistributionFitter(spark).fit(
+            df, column="v", distributions=["poisson", "geom"]
+        )
+        assert res.count() == 2
+        assert len(registered) == 2
+        assert all(any(b is r for r in released) for b in registered)
+
     def test_recovers_poisson(self, spark):
         rng = np.random.default_rng(42)
         df = spark.createDataFrame(

@@ -90,6 +90,170 @@ class TestResultsQueries:
         assert normal_results.columns() == ["value"]
 
 
+NAN, INF = float("nan"), float("inf")
+# column, distribution, sse, aic, bic, ks_statistic, pvalue,
+# ad_statistic, ad_pvalue: NaN, +-inf, nulls and exact ties, within and
+# across two columns and a null column name
+SNAPSHOT_METRICS = [
+    ("a", "d1", 0.5, 10.0, 12.0, 0.1, 0.5, 1.0, 0.15),
+    ("a", "d2", 0.5, NAN, 12.0, None, 0.5, INF, None),
+    ("a", "d3", NAN, -INF, INF, 0.1, NAN, 1.0, 0.01),
+    ("a", "d4", INF, 10.0, None, 0.3, 0.0, None, 0.15),
+    ("b", "d1", 0.5, 10.0, NAN, 0.1, 0.5, 1.0, NAN),
+    ("b", "d2", 0.2, INF, 12.0, NAN, None, -INF, 0.15),
+    ("b", "d3", -INF, None, -INF, 0.05, 1.0, 2.0, None),
+    ("b", None, 0.2, 10.0, 12.0, 0.1, INF, NAN, 0.15),
+    (None, "d1", 0.5, 10.0, 12.0, 0.1, 0.5, 1.0, 0.15),
+    (None, "d2", None, 5.0, 12.0, 0.2, NAN, 0.5, -INF),
+]
+
+
+def _nan_safe(v):
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    if isinstance(v, (list, tuple)):
+        return tuple(_nan_safe(x) for x in v)
+    return v
+
+
+class TestSnapshotMatchesSpark:
+    """Every query on the driver snapshot returns what the Spark
+    expression it replaced returns over the same relation: the
+    ``orderBy``, the per-column ``row_number`` window, the filter
+    predicates and the summary aggregate."""
+
+    @pytest.fixture(scope="class")
+    def res(self, spark):
+        from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
+        from spark_bestfit_spark.results import FitResults
+
+        rows = [
+            (*m[:2], [1.0, 2.0], *m[2:], 0.0, 1.0, 0.5, 0.2, 100.0,
+             0.0, 0.0, None, None)
+            for m in SNAPSHOT_METRICS
+        ]
+        return FitResults(
+            spark.createDataFrame(rows, schema=FIT_RESULT_SCHEMA)
+        )
+
+    @staticmethod
+    def _order(metric):
+        import pyspark.sql.functions as F
+
+        col = F.col(metric)
+        if metric in ("pvalue", "ad_pvalue"):
+            return col.desc_nulls_last()
+        return col.asc_nulls_last()
+
+    @staticmethod
+    def _keys(records):
+        return [(r.column_name, r.distribution) for r in records]
+
+    def test_ranking(self, res):
+        import pyspark.sql.functions as F
+        from pyspark.sql import Window
+
+        from spark_bestfit_spark.results import VALID_METRICS
+
+        for metric in VALID_METRICS:
+            for n in (1, 3, len(SNAPSHOT_METRICS)):
+                spark_top = res.df.orderBy(
+                    self._order(metric), "column_name", "distribution"
+                ).limit(n)
+                best = res.best(n, metric)
+                best = [best] if n == 1 else best
+                assert self._keys(best) == self._keys(
+                    spark_top.collect()
+                ), (metric, n)
+                assert [_nan_safe(tuple(r)) for r in
+                        res.best_df(n, metric).collect()] == [
+                    _nan_safe(tuple(r)) for r in spark_top.collect()
+                ], (metric, n)
+                w = Window.partitionBy("column_name").orderBy(
+                    self._order(metric), F.col("distribution")
+                )
+                ranked = (
+                    res.df.withColumn("_rank", F.row_number().over(w))
+                    .filter(F.col("_rank") <= n)
+                    .collect()
+                )
+                ranked.sort(key=lambda r: (
+                    r["column_name"] is not None, r["column_name"] or "",
+                    r["_rank"],
+                ))
+                want: dict = {}
+                for r in ranked:
+                    want.setdefault(r["column_name"], []).append(
+                        (r["column_name"], r["distribution"])
+                    )
+                got = res.best_per_column(n, metric)
+                assert list(got) == list(want), (metric, n)
+                assert {c: self._keys(v) for c, v in got.items()} == want
+
+    def test_filters_and_reports(self, res):
+        import pyspark.sql.functions as F
+
+        df = res.df
+
+        def rows(frame):
+            return sorted(
+                (_nan_safe(tuple(r)) for r in frame.collect()), key=repr
+            )
+
+        thresholds = [
+            {"max_sse": 0.5}, {"max_aic": 10.0}, {"max_bic": INF},
+            {"max_ks_statistic": 0.1}, {"min_pvalue": 0.5},
+            {"max_ad_statistic": NAN}, {"min_pvalue": NAN},
+            {"max_sse": 0.5, "min_pvalue": 0.0, "max_ad_statistic": 1.0},
+        ]
+        ops = {
+            "max_sse": ("sse", "<="), "max_aic": ("aic", "<="),
+            "max_bic": ("bic", "<="), "max_ks_statistic": (
+                "ks_statistic", "<="),
+            "min_pvalue": ("pvalue", ">="),
+            "max_ad_statistic": ("ad_statistic", "<="),
+        }
+        for kw in thresholds:
+            want = df
+            for arg, bound in kw.items():
+                col, op = ops[arg]
+                c = F.col(col)
+                want = want.filter(c <= bound if op == "<=" else c >= bound)
+            assert rows(res.filter(**kw).df) == rows(want), kw
+        for column in ("a", "b", "zzz"):
+            assert rows(res.for_column(column).df) == rows(
+                df.filter(F.col("column_name") == F.lit(column))
+            ), column
+        assert res.columns() == [
+            r["column_name"] for r in
+            df.select("column_name").filter(F.col("column_name").isNotNull())
+            .distinct().orderBy("column_name").collect()
+        ]
+        for min_p, max_ks in ((0.05, None), (0.5, 0.1), (NAN, None)):
+            want = df.filter(F.col("pvalue") >= min_p)
+            if max_ks is not None:
+                want = want.filter(F.col("ks_statistic") <= max_ks)
+            assert res.n_acceptable(min_p, max_ks) == want.count()
+        metrics = ("sse", "aic", "bic", "ks_statistic", "pvalue")
+        agg = df.agg(
+            F.count("*").alias("n"),
+            *[f(m).alias(f"{m}_{f.__name__}") for m in metrics
+              for f in (F.min, F.mean, F.max)],
+        ).first()
+        summary = res.summary()
+        assert summary["n_fits"] == agg["n"]
+        assert summary["n_columns"] == 2
+        for m in metrics:
+            for stat, f in (("min", "min"), ("max", "max")):
+                assert _nan_safe(summary[m][stat]) == _nan_safe(
+                    agg[f"{m}_{f}"]
+                ), (m, stat)
+            got, want = summary[m]["mean"], agg[f"{m}_mean"]
+            assert _nan_safe(got) == _nan_safe(want) or got == pytest.approx(
+                want, rel=1e-12
+            ), m
+
+
 class TestMultiColumn:
     def test_two_columns_one_fit(self, spark):
         rng = np.random.default_rng(42)

@@ -164,6 +164,26 @@ class TestExtremeEvaluation:
         assert not np.any(np.isnan(out[1:-1]))
 
 
+    def test_information_criteria_sentinel_is_silent(self):
+        """A sample point at a density pole (+inf) next to one outside
+        the support (-inf) yields the declared (inf, inf) sentinel
+        without numpy's 'invalid value' RuntimeWarning."""
+        import warnings
+
+        from spark_bestfit_spark.functions import metrics as M
+        from spark_bestfit_spark.functions.distributions.registry import (
+            get_continuous,
+        )
+
+        gamma = get_continuous("gamma")
+        data = np.array([0.0, -1.0, 1.0])
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            ic = M.compute_information_criteria(gamma, (0.5, 0.0, 1.0), data)
+        assert ic == (float("inf"), float("inf"))
+        assert [str(w.message) for w in caught] == []
+
+
 class TestCorrelationDegeneracy:
     def test_constant_column_correlation(self, spark):
         from spark_bestfit_spark.models.copula import spearman_correlation

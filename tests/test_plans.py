@@ -289,6 +289,55 @@ class TestJobCount:
             assert jobs == len(tracker.getJobIdsForGroup(group)), group
         df.unpersist()
 
+    def test_queries_after_fit_run_no_jobs(self, spark):
+        """fit() collects its fan-out once; every ranking and report
+        call after it reads the driver snapshot and runs no Spark job,
+        for stored and for lazily recomputed metrics alike."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        rng = np.random.default_rng(5)
+        df = spark.createDataFrame(pd.DataFrame({
+            "a": rng.gamma(2.0, 3.0, 3000), "b": rng.normal(10, 2, 3000),
+        }))
+        dists = ["norm", "gamma", "expon", "lognorm", "uniform",
+                 "logistic", "laplace"]
+        overhead = self._jobs_during(spark, lambda: None)
+        for lazy in (False, True):
+            res = DistributionFitter(spark).fit(
+                df, columns=["a", "b"], distributions=dists,
+                lazy_metrics=lazy,
+            )
+            calls = {
+                "best": lambda: res.best(3),
+                "best ks": lambda: res.best(1, metric="ks_statistic"),
+                "best pvalue": lambda: res.best(2, metric="pvalue"),
+                "best_per_column": lambda: res.best_per_column(2, "aic"),
+                "best_per_column ad": lambda: res.best_per_column(
+                    1, "ad_statistic", columns=["b"]
+                ),
+                "for_column": lambda: res.for_column("a").best(2, "bic"),
+                "filter": lambda: res.filter(
+                    max_sse=1.0, min_pvalue=0.0
+                ).best(1),
+                "columns": res.columns,
+                "count": res.count,
+                "summary": res.summary,
+                "n_acceptable": lambda: res.n_acceptable(
+                    max_ks_statistic=0.5
+                ),
+                "quality_report": res.quality_report,
+                "materialize": lambda: res.materialize().best(
+                    1, metric="ad_statistic"
+                ),
+                "unpersist": res.unpersist,
+            }
+            for name, call in calls.items():
+                jobs = self._jobs_during(spark, call) - overhead
+                assert jobs == 0, (lazy, name, jobs)
+
     def test_start_reraises_from_result(self, spark):
         from spark_bestfit_spark.fitter import _start
 
