@@ -2,7 +2,7 @@
 
 Query lifecycle per fit (all columns batched):
 
-1. validate (catalog only)                      — driver
+1. validate (catalog + config)                  — driver
 2. limit-probe ∥ min/max/count stats            — wave 1 (concurrent jobs)
 3. fitting sample ∥ histogram                   — wave 2 (concurrent jobs)
 4. prefilter + interleave distribution list     — driver
@@ -14,6 +14,13 @@ latencies, not four. The helper thread inherits the caller's job group,
 description and tags, so the racing jobs are attributed to the caller
 like inline ones. Everything the executors need is broadcast (~KBs), so
 the fit cost is independent of table size beyond the scan.
+
+A censored fit has no probe: one stats job for all columns, then one
+histogram job for all columns raced against the per-column censored
+samples (value and event mask travel together), then the same fan-out.
+
+Every binning rule — equi-width edges, density, empirical PMF — comes
+from ``operators/histogram.py``; this module holds no bin arithmetic.
 """
 
 from __future__ import annotations
@@ -40,14 +47,17 @@ from spark_bestfit_spark.operators.fit import (
 )
 from spark_bestfit_spark.operators.histogram import (
     compute_histogram,
+    compute_histograms_grouped,
     compute_histograms_multi,
+    empirical_pmfs_multi,
+    grouped_pmfs,
+    sample_histogram,
 )
 from spark_bestfit_spark.operators.sampling import (
     build_censored_sample,
     build_fitting_samples_multi,
 )
 from spark_bestfit_spark.operators.stats import (
-    column_stats,
     multi_column_stats,
     valid_column,
 )
@@ -167,8 +177,11 @@ def _start(spark: SparkSession, fn, *args, **kwargs) -> Future:
 
 
 def _merge_config(config: FitterConfig | None, overrides: dict):
-    """The caller's config (or the defaults) with keyword overrides."""
-    return (config or FitterConfig()).with_(**overrides)
+    """The caller's config (or the defaults) with keyword overrides,
+    validated — the one place both fitters check their config."""
+    config = (config or FitterConfig()).with_(**overrides)
+    config.validate()
+    return config
 
 
 def _check_numeric(df: DataFrame, columns: list) -> dict:
@@ -346,7 +359,6 @@ class DistributionFitter(_Fitter):
         return self.registry.register_distribution(name, dist, overwrite)
 
     def _validate(self, df: DataFrame, columns: list, config: FitterConfig):
-        config.validate()
         schema = _check_numeric(df, columns)
         if config.censoring_column is not None:
             cc = config.censoring_column
@@ -459,9 +471,8 @@ class DistributionFitter(_Fitter):
             return self._empty_results()
         # small-data shortcut: when every column's valid count fits in
         # the fitting sample (always true for a complete probe), the
-        # sample IS the complete data — the histogram can be built
-        # driver-side from it with identical semantics (same edges,
-        # left-closed bins, +eps top edge), saving one cluster job
+        # sample IS the complete data — the histogram can be counted
+        # driver-side from it over the same edges, saving one cluster job
         all_small = all(
             all_stats[c]["count"] <= config.fitting_sample_size
             for c in live_cols
@@ -486,8 +497,8 @@ class DistributionFitter(_Fitter):
                 sample = sample_map.get(c)
                 if sample is None or sample.size == 0:
                     continue
-                histograms[c] = self._local_histogram(
-                    sample, all_stats[c], config
+                histograms[c] = sample_histogram(
+                    sample, all_stats[c], config.bins, config.use_rice_rule
                 )
 
         plans: dict = {}
@@ -643,10 +654,10 @@ class DistributionFitter(_Fitter):
         the job count is constant in the number of groups.
 
         - per-group min/max/count: ONE groupBy aggregation;
-        - per-group histograms: ONE scan (`width_bucket` against the
-          group's own [lo, hi] bounds joined in by broadcast, then a
-          (group, bin) groupBy — map-side combined, <= G x bins rows
-          collected);
+        - per-group histograms: ONE scan (``compute_histograms_grouped``:
+          each row bucketed against its group's own bounds joined in
+          by broadcast, then a (group, bin) groupBy — map-side
+          combined, <= G x bins rows collected);
         - per-group fitting samples: ONE `sampleBy` pass (per-group
           fractions sized to the fitting sample), truncated
           deterministically driver-side;
@@ -695,82 +706,15 @@ class DistributionFitter(_Fitter):
         # the sample pass and the histogram scan are independent given
         # the stats — race them (same prelude fusion as fit():
         # wall-clock = max of the two job latencies, not the sum)
-        #
-        # histogram: ONE scan for all non-degenerate groups — broadcast
-        # the per-group bounds, bucket each row against ITS group's
-        # edges, aggregate (group, bin)
-        edges_by_group: dict = {}
-        hist_by_group: dict = {}
-        bounds_rows = []
-        for g, s in gstats.items():
-            if s["min"] == s["max"]:
-                hist_by_group[g] = (
-                    np.array([1.0]), np.array([s["min"]])
-                )
-                continue
-            bins = config.bins
-            if config.use_rice_rule:
-                bins = max(
-                    int(np.ceil(s["count"] ** (1.0 / 3.0)) * 2), 2
-                )
-            bins = max(int(bins), 2)
-            eps = (s["max"] - s["min"]) * 1e-10
-            edges_by_group[g] = np.linspace(
-                s["min"], s["max"] + eps, bins + 1
-            )
-            bounds_rows.append((g, s["min"], s["max"] + eps, bins))
-
-        def _collect_counts():
-            gtype = clean.schema[group_col].dataType.simpleString()
-            bounds_df = self.spark.createDataFrame(
-                bounds_rows,
-                f"_g {gtype}, _lo double, _hi double, _nb int",
-            )
-            return (
-                clean.join(
-                    F.broadcast(bounds_df),
-                    clean[group_col] == bounds_df["_g"],
-                )
-                .filter(
-                    (F.col(column) >= F.col("_lo"))
-                    & (F.col(column) < F.col("_hi"))
-                )
-                .select(
-                    "_g",
-                    F.width_bucket(
-                        F.col(column), F.col("_lo"), F.col("_hi"),
-                        F.col("_nb"),
-                    ).alias("_bin"),
-                )
-                .groupBy("_g", "_bin")
-                .agg(F.count("*").alias("_c"))
-                .collect()
-            )
-
-        counts_future = (
-            _start(self.spark, _collect_counts) if bounds_rows else None
+        hist_future = _start(
+            self.spark, compute_histograms_grouped, clean, column,
+            group_col, gstats, config.bins, config.use_rice_rule,
         )
         samples_by_group = _grouped_samples(
             clean, column, group_col,
             {g: s["count"] for g, s in gstats.items()}, config,
         )
-        if counts_future is not None:
-            acc: dict = {
-                g: np.zeros(len(e) - 1) for g, e in edges_by_group.items()
-            }
-            for r in counts_future.result():
-                arr = acc[r["_g"]]
-                b = int(r["_bin"])
-                if 1 <= b <= arr.size:
-                    arr[b - 1] = float(r["_c"])
-            for g, cnts in acc.items():
-                edges = edges_by_group[g]
-                widths = np.diff(edges)
-                total = cnts.sum()
-                hist_by_group[g] = (
-                    cnts / (total * widths) if total > 0 else cnts,
-                    edges,
-                )
+        hist_by_group = hist_future.result()
         plans: dict = {}
         samples: dict = {}
         for g in gstats:
@@ -788,56 +732,38 @@ class DistributionFitter(_Fitter):
             plans, samples, config, (config.lower_bound, config.upper_bound)
         )
 
-    @staticmethod
-    def _local_histogram(sample: np.ndarray, stats: dict, config):
-        """Driver-side histogram with the distributed path's exact edge
-        semantics (min==max single bin; +eps top edge; density)."""
-        lo, hi = float(stats["min"]), float(stats["max"])
-        if lo == hi:
-            return np.array([1.0]), np.array([lo])
-        bins = config.bins
-        if config.use_rice_rule:
-            bins = max(int(np.ceil(sample.size ** (1.0 / 3.0)) * 2), 2)
-        bins = max(int(bins), 2)
-        edges = np.linspace(lo, hi + (hi - lo) * 1e-10, bins + 1)
-        counts, _ = np.histogram(sample, bins=edges)
-        total = counts.sum()
-        widths = np.diff(edges)
-        density = (
-            counts / (total * widths) if total > 0
-            else counts.astype(np.float64)
-        )
-        return density, edges
-
     def _fit_censored(
         self, src: DataFrame, cols: list, distributions, config, bounds
     ) -> FitResults:
-        """Censored (survival) path: the sample carries an event mask, so
-        columns are planned individually, then fitted in ONE fan-out."""
+        """Censored (survival) path: planned like ``fit()`` — one stats
+        job and one histogram job for all columns, the histogram raced
+        against the per-column censored samples (each sample carries
+        its event mask, so it is collected per column) — then ONE
+        fan-out."""
+        all_stats = multi_column_stats(src, cols)
+        live_cols = [c for c in cols if all_stats[c]["count"] > 0]
+        if not live_cols:
+            return self._empty_results()
+        hist_future = _start(
+            self.spark, compute_histograms_multi, src, live_cols,
+            all_stats, config.bins, config.use_rice_rule,
+        )
+        censored = {
+            c: build_censored_sample(
+                src, c, config.censoring_column, config,
+                int(all_stats[c]["count"]),
+            )
+            for c in live_cols
+        }
+        histograms = hist_future.result()
         plans: dict = {}
         samples: dict = {}
-        for c in cols:
-            stats = column_stats(src, c)
-            if stats["count"] == 0:
-                continue
-            # histogram agg and sample collect are independent given the
-            # stats — race them (same fusion as the uncensored prelude)
-            hist_future = _start(
-                self.spark, compute_histogram, src, c, bins=config.bins,
-                use_rice_rule=config.use_rice_rule, stats=stats,
-            )
-            sample, censor_mask = build_censored_sample(
-                src, c, config.censoring_column, config, int(stats["count"])
-            )
-            density, edges = hist_future.result()
+        for c, (sample, censor_mask) in censored.items():
             if sample.size < 2:
                 continue
             samples[c] = sample
             plans[c] = {
-                "names": (
-                    distributions or self._select_distributions(config, sample)
-                ),
-                "sample": sample, "density": density, "edges": edges,
+                **self._plan(sample, histograms[c], distributions, config),
                 "censor_mask": censor_mask,
             }
         if not plans:
@@ -882,10 +808,6 @@ class DiscreteDistributionFitter(_Fitter):
         config: FitterConfig | None = None,
         **kwargs,
     ) -> FitResults:
-        from spark_bestfit_spark.operators.discrete_fit import (
-            empirical_pmfs_multi,
-        )
-
         if column is None and columns is None:
             raise ValueError("provide column= or columns=")
         df = _ensure_spark_df(self.spark, df)
@@ -916,7 +838,7 @@ class DiscreteDistributionFitter(_Fitter):
         plans: dict = {}
         samples: dict = {}
         for c in live_cols:
-            x_values, pmf = pmfs.get(c, (np.array([]), np.array([])))
+            x_values, pmf = pmfs[c]
             sample = sample_map.get(c)
             if x_values.size == 0 or sample is None:
                 continue
@@ -971,17 +893,7 @@ class DiscreteDistributionFitter(_Fitter):
         if not counts:
             return self._empty_results()
         gcounts = {r[group_col]: int(r["n"]) for r in counts}
-        # ONE stacked PMF pass over (group, floored value)
-        pmf_rows = (
-            clean.groupBy(group_col, F.floor(column).alias("_k"))
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        pmf_pairs: dict = {g: [] for g in gcounts}
-        for r in pmf_rows:
-            pmf_pairs[r[group_col]].append(
-                (float(r["_k"]), float(r["cnt"]))
-            )
+        pmfs = grouped_pmfs(clean, column, group_col, gcounts)
         samples_by_group = _grouped_samples(
             clean, column, group_col, gcounts, config
         )
@@ -989,20 +901,18 @@ class DiscreteDistributionFitter(_Fitter):
         plans: dict = {}
         samples: dict = {}
         for g in gcounts:
-            pairs = sorted(pmf_pairs.get(g, []))
+            x_values, pmf = pmfs[g]
             sample = samples_by_group.get(g)
-            if not pairs or sample is None or sample.size < 2:
+            if x_values.size == 0 or sample is None or sample.size < 2:
                 continue
             sample = np.floor(sample)
-            x = np.array([p[0] for p in pairs])
-            cnts = np.array([p[1] for p in pairs])
             label = f"{column}[{g}]"
             samples[label] = sample
             plans[label] = {
                 "names": list(names),
                 "sample": sample,
-                "x_values": x,
-                "pmf": cnts / cnts.sum(),
+                "x_values": x_values,
+                "pmf": pmf,
             }
         if not plans:
             return self._empty_results()

@@ -132,9 +132,12 @@ def censored_fit(
                 return 1e12
             if params[-1] <= 0 or not np.all(np.isfinite(params)):
                 return 1e12
-            ll_obs = np.sum(dist.logpdf(obs, *params))
-            ll_cens = np.sum(dist.logsf(cens, *params))
-            ll = ll_obs + ll_cens
+            logpdf = dist.logpdf(obs, *params)
+            logsf = dist.logsf(cens, *params)
+            # declared sentinel: -inf (outside the support) + inf (at a
+            # pole) sums to nan, mapped to 1e12 below — silence numpy
+            with np.errstate(invalid="ignore"):
+                ll = np.sum(logpdf) + np.sum(logsf)
             if not np.isfinite(ll):
                 return 1e12
             return -float(ll)

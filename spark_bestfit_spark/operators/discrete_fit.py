@@ -2,8 +2,9 @@
 discrete_fitter.py / discrete_fitting.py capabilities).
 
 Same spine as the continuous engine: the column is reduced to a
-distributed empirical PMF (one ``groupBy(col).count()`` — map-side
-combined, ~cardinality rows to the driver) plus a <=10k fitting sample,
+distributed empirical PMF (``histogram.empirical_pmfs_multi``, one
+stacked ``groupBy(column, floor(value)).count()`` — map-side combined,
+~cardinality rows to the driver) plus a <=10k fitting sample,
 then D optimizer-MLE fits fan out over the cluster. Discrete SSE is
 computed against the PMF, K-S against the ECDF with jump handling.
 """
@@ -28,66 +29,9 @@ from spark_bestfit_spark.operators.fit import (
 from spark_bestfit_spark.plans.config import FitterConfig
 
 __all__ = [
-    "empirical_pmf",
     "fit_single_discrete",
     "parallel_fit_discrete_columns",
 ]
-
-
-def empirical_pmf(df: DataFrame, column: str) -> tuple:
-    """(x_values, pmf) from a distributed groupBy — the discrete
-    histogram IR (reference discrete_fitting.py:127-149, distributed
-    as SURVEY A5 recommends)."""
-    rows = (
-        df.filter(F.col(column).isNotNull() & ~F.isnan(F.col(column)))
-        .groupBy(F.floor(F.col(column)).alias("_k"))
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("_k")
-        .collect()
-    )
-    if not rows:
-        return np.array([]), np.array([])
-    x = np.array([float(r["_k"]) for r in rows])
-    counts = np.array([float(r["cnt"]) for r in rows])
-    return x, counts / counts.sum()
-
-
-def empirical_pmfs_multi(df: DataFrame, columns: list) -> dict:
-    """Empirical PMFs for MANY columns in ONE scan: per-column floored
-    values are stacked into (column_name, k) rows and aggregated
-    together (map-side combined). Same one-scan pattern as the
-    continuous engine's compute_histograms_multi."""
-    stack_args = []
-    for c in columns:
-        col = F.col(c)
-        cond = col.isNotNull()
-        if dict(df.dtypes)[c] in ("float", "double"):
-            cond = cond & ~F.isnan(col)
-        stack_args += [F.lit(c), F.when(cond, F.floor(col))]
-    rows = (
-        df.select(
-            F.stack(F.lit(len(columns)), *stack_args).alias(
-                "column_name", "_k"
-            )
-        )
-        .filter(F.col("_k").isNotNull())
-        .groupBy("column_name", "_k")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    )
-    grouped: dict = {c: [] for c in columns}
-    for r in rows:
-        grouped[r["column_name"]].append((float(r["_k"]), float(r["cnt"])))
-    out = {}
-    for c, pairs in grouped.items():
-        if not pairs:
-            out[c] = (np.array([]), np.array([]))
-            continue
-        pairs.sort()
-        x = np.array([p[0] for p in pairs])
-        counts = np.array([p[1] for p in pairs])
-        out[c] = (x, counts / counts.sum())
-    return out
 
 
 def fit_single_discrete(

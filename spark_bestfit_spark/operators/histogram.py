@@ -1,17 +1,33 @@
-"""Distributed histogram: the keystone aggregate of the engine (SURVEY A4).
+"""Distributed histogram and empirical PMF: the keystone aggregates of
+the engine (SURVEY A4, A5). Each binning rule exists once, here, and
+every fitter path calls it:
 
-Semantics match the reference (/root/reference/src/spark_bestfit/
-histogram.py:51-132 + backends/spark.py:373-427):
+- :func:`equi_width_edges` — bins from (min, max, count): the Rice rule
+  when requested (bins = ceil(count^(1/3)) * 2), at least 2 bins, and a
+  +epsilon top edge so the max value falls in the last bin; min == max
+  gives the single point ``[v]``;
+- :func:`to_density` — zero-filled bin counts to a density whose area
+  is 1; the single-point edges give the degenerate ``([1.0], [v])``
+  (:func:`sample_histogram` counts a complete sample on the driver
+  over the same edges);
+- ``_densities`` — (key, bin_id, count) rows to per-key densities;
+- ``_pmfs`` — (key, floored value, count) rows to per-key sorted,
+  normalised empirical PMFs.
 
-- Rice rule when requested: bins = ceil(count^(1/3)) * 2, min 2.
-- min == max  ->  degenerate single-bin histogram ([1.0], [value]).
-- top edge gets +epsilon so the max value falls in the last bin.
-- missing bins zero-filled; density normalized so the area is 1.
+Every relation keeps only valid values (``stats.valid_cond``: non-null,
+non-NaN, finite). Semantics match the reference (spark_bestfit
+histogram.py:51-132 + backends/spark.py:373-427).
 
 Spark-first implementation: ``width_bucket`` (JVM, whole-stage codegen)
-+ ``groupBy(bucket).count()`` — a single scan with map-side partial
-aggregation; only ~n_bins rows are collected. At 100 TB this is the only
-full-data pass the fit needs, and it scales linearly with executors.
++ ``groupBy(key, bucket).count()`` — a single scan with map-side partial
+aggregation; only ~keys x bins rows are collected. The multi-column
+variant stacks (column, bin) rows, the grouped one buckets each row
+against its group's bounds joined in by broadcast; at 100 TB each is
+the only full-data pass its histograms need.
+
+The equi-DEPTH binner (quantile edges, broadcast edges row, JVM
+higher-order bin id) serves :func:`equidepth_histogram`,
+:func:`response_curve` and :func:`gains_curve`.
 """
 
 from __future__ import annotations
@@ -20,7 +36,65 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from spark_bestfit_spark.operators.stats import column_stats, valid_column
+from spark_bestfit_spark.operators.stats import (
+    column_stats,
+    valid_column,
+    valid_cond,
+)
+
+
+def equi_width_edges(
+    stats: dict, bins: int, use_rice_rule: bool = False
+) -> np.ndarray:
+    """Equi-width bin edges for a column (or group) with ``stats``
+    min/max/count of valid values: ``bins + 1`` edges from min to
+    max + (max - min) * 1e-10, or ``[min]`` when min == max."""
+    lo, hi = float(stats["min"]), float(stats["max"])
+    if lo == hi:
+        return np.array([lo])
+    if use_rice_rule:
+        bins = np.ceil(int(stats["count"]) ** (1.0 / 3.0)) * 2
+    bins = max(int(bins), 2)
+    return np.linspace(lo, hi + (hi - lo) * 1e-10, bins + 1)
+
+
+def to_density(counts, edges: np.ndarray) -> tuple:
+    """The (density, edges) IR for per-bin ``counts`` over ``edges``:
+    density integrates to 1 (all zeros when nothing was counted);
+    single-point edges give the degenerate ``([1.0], [v])``."""
+    if edges.size == 1:
+        return np.array([1.0]), edges
+    counts = np.asarray(counts, dtype=np.float64)
+    total = counts.sum()
+    return (counts / (total * np.diff(edges)) if total > 0 else counts), edges
+
+
+def sample_histogram(
+    sample: np.ndarray, stats: dict, bins: int, use_rice_rule: bool = False
+) -> tuple:
+    """(density, edges) counted on the driver from a sample that holds
+    ALL of a column's valid values (``stats`` describes the same
+    values): the distributed histogram's edges and density, with
+    ``np.histogram``'s left-closed bins."""
+    edges = equi_width_edges(stats, bins, use_rice_rule)
+    counts = np.histogram(sample, bins=edges)[0] if edges.size > 1 else None
+    return to_density(counts, edges)
+
+
+def _densities(rows, edges_by_key: dict) -> dict:
+    """``{key: (density, edges)}`` from collected (key, bin_id, count)
+    rows, bin_id 1-based like ``width_bucket``; bins without a row are
+    zero-filled and rows outside a key's bins are ignored."""
+    counts = {
+        k: np.zeros(e.size - 1) for k, e in edges_by_key.items()
+        if e.size > 1
+    }
+    for key, b, n in rows:
+        arr = counts.get(key)
+        b = int(b)
+        if arr is not None and 1 <= b <= arr.size:
+            arr[b - 1] = float(n)
+    return {k: to_density(counts.get(k), e) for k, e in edges_by_key.items()}
 
 
 def histogram_df(
@@ -52,13 +126,13 @@ def compute_histogram(
     column: str,
     bins: int | np.ndarray = 50,
     use_rice_rule: bool = False,
-    approx_count: int | None = None,
     stats: dict | None = None,
 ):
     """Compute (density, bin_edges) without collecting raw data.
 
     Returns the same IR the reference builds: density has n_bins values,
-    bin_edges n_bins + 1 (degenerate case: ([1.0], [v])).
+    bin_edges n_bins + 1 (degenerate case: ([1.0], [v])). ``bins`` may
+    be explicit edges; the Rice rule overrides them.
     """
     if stats is None:
         stats = column_stats(df, column)
@@ -66,32 +140,18 @@ def compute_histogram(
         raise ValueError(
             f"Cannot compute histogram: column '{column}' has no valid values"
         )
-    if use_rice_rule:
-        count = approx_count if approx_count is not None else int(stats["count"])
-        bins = max(int(np.ceil(count ** (1.0 / 3.0)) * 2), 2)
-    if isinstance(bins, (int, np.integer)):
-        bins = max(int(bins), 2)
-        min_val = float(stats["min"])
-        max_val = float(stats["max"])
-        if min_val == max_val:
-            return np.array([1.0]), np.array([min_val])
-        epsilon = (max_val - min_val) * 1e-10
-        bin_edges = np.linspace(min_val, max_val + epsilon, bins + 1)
+    if use_rice_rule or isinstance(bins, (int, np.integer)):
+        edges = equi_width_edges(stats, bins, use_rice_rule)
     else:
-        bin_edges = np.asarray(bins, dtype=np.float64)
-
-    n_bins = len(bin_edges) - 1
-    # no orderBy: counts are placed by bin_id below, saving an exchange
-    rows = histogram_df(df, column, bin_edges, sort=False).collect()
-    counts = np.zeros(n_bins, dtype=np.float64)
-    for r in rows:
-        b = int(r["bin_id"])
-        if 1 <= b <= n_bins:
-            counts[b - 1] = float(r["bin_count"])
-    total = counts.sum()
-    widths = np.diff(bin_edges)
-    density = counts / (total * widths) if total > 0 else counts
-    return density, bin_edges
+        edges = np.asarray(bins, dtype=np.float64)
+    rows = []
+    if edges.size > 1:
+        # no orderBy: _densities places counts by bin_id
+        rows = [
+            (column, r["bin_id"], r["bin_count"])
+            for r in histogram_df(df, column, edges, sort=False).collect()
+        ]
+    return _densities(rows, {column: edges})[column]
 
 
 def compute_histograms_multi(
@@ -108,79 +168,177 @@ def compute_histograms_multi(
     combine reduces each partition to at most C x bins groups, so the
     shuffle stays tiny no matter the table size. Degenerate (min==max)
     columns short-circuit to the single-bin IR without touching the
-    cluster."""
-    out: dict = {}
-    edges_by_col: dict = {}
+    cluster; columns without valid values are left out."""
+    edges_by_col = {
+        c: equi_width_edges(stats[c], bins, use_rice_rule)
+        for c in columns
+        if stats[c]["min"] is not None and stats[c]["count"] != 0
+    }
     stack_args = []
-    for c in columns:
-        s = stats[c]
-        if s["min"] is None or s["count"] == 0:
+    for c, edges in edges_by_col.items():
+        if edges.size == 1:
             continue
-        n_bins = bins
-        if use_rice_rule:
-            n_bins = max(int(np.ceil(int(s["count"]) ** (1.0 / 3.0)) * 2), 2)
-        n_bins = max(int(n_bins), 2)
-        lo, hi = float(s["min"]), float(s["max"])
-        if lo == hi:
-            out[c] = (np.array([1.0]), np.array([lo]))
-            continue
-        eps = (hi - lo) * 1e-10
-        edges = np.linspace(lo, hi + eps, n_bins + 1)
-        edges_by_col[c] = edges
+        lo, hi = float(stats[c]["min"]), float(edges[-1])
         col = F.col(c)
-        cond = col.isNotNull()
-        if dict(df.dtypes)[c] in ("float", "double"):
-            cond = cond & ~F.isnan(col) & (F.abs(col) != float("inf"))
-        cond = cond & (col >= F.lit(lo)) & (col < F.lit(float(edges[-1])))
+        cond = valid_cond(df, c) & (col >= F.lit(lo)) & (col < F.lit(hi))
         bucket = F.when(
-            cond,
-            F.width_bucket(col, F.lit(lo), F.lit(float(edges[-1])), F.lit(n_bins)),
+            cond, F.width_bucket(col, F.lit(lo), F.lit(hi), F.lit(edges.size - 1))
         )
         stack_args += [F.lit(c), bucket]
-    if edges_by_col:
-        n = len(edges_by_col)
+    rows = []
+    if stack_args:
         rows = (
             df.select(
-                F.stack(F.lit(n), *stack_args).alias("column_name", "bin_id")
+                F.stack(F.lit(len(stack_args) // 2), *stack_args).alias(
+                    "column_name", "bin_id"
+                )
             )
             .filter(F.col("bin_id").isNotNull())
             .groupBy("column_name", "bin_id")
             .agg(F.count("*").alias("bin_count"))
             .collect()
         )
-        counts = {
-            c: np.zeros(len(e) - 1, dtype=np.float64)
-            for c, e in edges_by_col.items()
-        }
-        for r in rows:
-            arr = counts.get(r["column_name"])
-            b = int(r["bin_id"])
-            if arr is not None and 1 <= b <= arr.size:
-                arr[b - 1] = float(r["bin_count"])
-        for c, e in edges_by_col.items():
-            total = counts[c].sum()
-            widths = np.diff(e)
-            density = counts[c] / (total * widths) if total > 0 else counts[c]
-            out[c] = (density, e)
+    return _densities(rows, edges_by_col)
+
+
+def grouped_histogram_df(
+    df: DataFrame, column: str, group_col: str, bounds: dict
+) -> DataFrame:
+    """Lazy (_g, _bin, _c) per-group bin counts in ONE scan: the
+    per-group ``bounds`` ``{group: (lo, hi, n_bins)}`` ride a broadcast
+    join, each row is bucketed against its own group's [lo, hi), and
+    one (group, bin) aggregation — map-side combined, <= G x bins rows
+    — counts them. ``df`` holds valid values of ``column``."""
+    gtype = df.schema[group_col].dataType.simpleString()
+    bounds_df = df.sparkSession.createDataFrame(
+        [(g, lo, hi, nb) for g, (lo, hi, nb) in bounds.items()],
+        f"_g {gtype}, _lo double, _hi double, _nb int",
+    )
+    return (
+        df.join(F.broadcast(bounds_df), df[group_col] == bounds_df["_g"])
+        .filter((F.col(column) >= F.col("_lo")) & (F.col(column) < F.col("_hi")))
+        .select(
+            "_g",
+            F.width_bucket(
+                F.col(column), F.col("_lo"), F.col("_hi"), F.col("_nb")
+            ).alias("_bin"),
+        )
+        .groupBy("_g", "_bin")
+        .agg(F.count("*").alias("_c"))
+    )
+
+
+def compute_histograms_grouped(
+    df: DataFrame,
+    column: str,
+    group_col: str,
+    stats: dict,
+    bins: int = 50,
+    use_rice_rule: bool = False,
+) -> dict:
+    """(density, bin_edges) per group from ONE scan of
+    :func:`grouped_histogram_df`; ``stats`` maps each group to the
+    min/max/count of its valid values. Degenerate (min==max) groups
+    short-circuit to the single-bin IR."""
+    edges_by_group = {
+        g: equi_width_edges(s, bins, use_rice_rule) for g, s in stats.items()
+    }
+    bounds = {
+        g: (stats[g]["min"], float(e[-1]), e.size - 1)
+        for g, e in edges_by_group.items()
+        if e.size > 1
+    }
+    rows = []
+    if bounds:
+        rows = grouped_histogram_df(df, column, group_col, bounds).collect()
+    return _densities(rows, edges_by_group)
+
+
+def _pmfs(rows, keys) -> dict:
+    """``{key: (x_values, pmf)}`` from collected (key, k, count) rows:
+    the support sorted ascending, the pmf normalised to 1; a key
+    without rows gets two empty arrays."""
+    pairs: dict = {k: [] for k in keys}
+    for key, k, n in rows:
+        pairs[key].append((float(k), float(n)))
+    out = {}
+    for key, p in pairs.items():
+        p.sort()
+        x = np.array([v for v, _ in p])
+        counts = np.array([n for _, n in p])
+        out[key] = (x, counts / counts.sum() if p else counts)
     return out
 
 
-def discrete_pmf(df: DataFrame, column: str):
-    """Distributed empirical PMF: groupBy(value).count(), normalized
-    (SURVEY A5 — the distributed version of the reference's sample-side
-    np.unique)."""
+def empirical_pmfs_multi(df: DataFrame, columns: list) -> dict:
+    """Empirical PMFs of floor(value) for MANY columns in ONE scan:
+    each column's valid values are floored and stacked into
+    (column_name, k) rows and aggregated together (map-side combined,
+    ~cardinality rows to the driver) — the discrete histogram IR
+    (reference discrete_fitting.py:127-149, distributed as SURVEY A5
+    recommends)."""
+    stack_args = []
+    for c in columns:
+        stack_args += [F.lit(c), F.when(valid_cond(df, c), F.floor(c))]
     rows = (
-        valid_column(df, column)
-        .groupBy(column)
+        df.select(
+            F.stack(F.lit(len(columns)), *stack_args).alias(
+                "column_name", "_k"
+            )
+        )
+        .filter(F.col("_k").isNotNull())
+        .groupBy("column_name", "_k")
         .agg(F.count("*").alias("cnt"))
-        .orderBy(column)
         .collect()
     )
-    if not rows:
-        raise ValueError(f"column '{column}' has no valid values")
-    x = np.array([float(r[column]) for r in rows])
-    counts = np.array([float(r["cnt"]) for r in rows])
-    return x, counts / counts.sum()
+    return _pmfs(rows, columns)
+
+
+def grouped_pmfs(
+    df: DataFrame, column: str, group_col: str, groups
+) -> dict:
+    """Empirical PMF of floor(column) per group from ONE (group, k)
+    aggregation — map-side combined, one shuffled row per (group,
+    support point). ``df`` holds valid values of ``column``."""
+    rows = (
+        df.groupBy(group_col, F.floor(column).alias("_k"))
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    )
+    return _pmfs(rows, groups)
+
+
+def _equidepth_bins(
+    clean: DataFrame,
+    column: str,
+    bins: int,
+    approx: bool,
+    accuracy: int,
+    bin_col: str = "bin_id",
+) -> DataFrame:
+    """``clean`` plus an equi-depth bin id ``bin_col`` in [0, bins):
+    interior edges are the exact ``percentile`` of ``column`` at
+    fractions ``i/bins`` (``approx=True``: Greenwald-Khanna
+    ``approx_percentile``, the 100 TB path), rounded to 6 decimals
+    BEFORE binning so assignment is a deterministic, engine-portable
+    function of the value; a value equal to an edge falls in the LOWER
+    bin. The 1-row edges relation rides a broadcast cross-join and the
+    bin id is a JVM higher-order ``filter``/``size`` (no UDF)."""
+    if bins < 2:
+        raise ValueError("bins must be >= 2")
+    pctl = "approx_percentile" if approx else "percentile"
+    acc = f", {int(accuracy)}" if approx else ""
+    fracs = ", ".join(str(i / bins) for i in range(1, bins))
+    edges = clean.agg(
+        F.expr(
+            f"transform({pctl}({column}, array({fracs}){acc}), "
+            "e -> round(e, 6))"
+        ).alias("_edges")
+    )
+    return clean.crossJoin(F.broadcast(edges)).withColumn(
+        bin_col,
+        F.size(F.filter(F.col("_edges"), lambda e: F.col(column) > e)),
+    )
 
 
 def equidepth_histogram(
@@ -204,34 +362,16 @@ def equidepth_histogram(
     engine-portable function of the value; a value equal to an edge
     falls in the LOWER bin (``v > edge`` counts edges strictly below).
 
-    One lazy plan: the 1-row edges relation rides a broadcast
-    cross-join, the bin id is a JVM higher-order ``filter``/``size``
-    over the edges array (no UDF), and the per-bin aggregate is a
-    combiner-friendly groupBy on <= ``bins`` keys.
+    One lazy plan (``_equidepth_bins``: broadcast 1-row edges
+    relation, JVM higher-order bin id, no UDF), and the per-bin
+    aggregate is a combiner-friendly groupBy on <= ``bins`` keys.
 
     Returns ``(bin_id, n_rows, lo, hi, mean)`` — lo/hi are the bin's
     OBSERVED min/max (exact values, not interpolated edges), mean
     rounded to 6.
     """
-    if bins < 2:
-        raise ValueError("bins must be >= 2")
-    pctl = "approx_percentile" if approx else "percentile"
-    acc = f", {int(accuracy)}" if approx else ""
-    fracs = ", ".join(str(i / bins) for i in range(1, bins))
-    clean = valid_column(df, column)
-    edges = clean.agg(
-        F.expr(
-            f"transform({pctl}({column}, array({fracs}){acc}), "
-            "e -> round(e, 6))"
-        ).alias("_edges")
-    )
-    binned = clean.crossJoin(F.broadcast(edges)).withColumn(
-        "bin_id",
-        F.size(
-            F.filter(
-                F.col("_edges"), lambda e: F.col(column) > e
-            )
-        ),
+    binned = _equidepth_bins(
+        valid_column(df, column), column, bins, approx, accuracy
     )
     return binned.groupBy("bin_id").agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -254,32 +394,18 @@ def response_curve(
     partial-dependence diagnostic ("how does y move with x") and the
     monotonicity check before anyone fits anything.
 
-    Binning is :func:`equidepth_histogram`'s scheme verbatim: exact
-    (or Greenwald-Khanna, the 100 TB path) quantile edges rounded to 6
-    BEFORE assignment, broadcast 1-row edges relation, JVM HOF bin id,
-    one combiner-friendly groupBy on <= ``bins`` keys.
+    Binning is :func:`equidepth_histogram`'s (``_equidepth_bins``):
+    exact (or Greenwald-Khanna, the 100 TB path) quantile edges rounded
+    to 6 BEFORE assignment, broadcast 1-row edges relation, JVM HOF bin
+    id, one combiner-friendly groupBy on <= ``bins`` keys.
 
     Returns (bin_id, n, x_lo, x_hi, mean_x, mean_y, se_y) rounded to
     6 — ``se_y = stddev_samp / sqrt(n)``, null for single-row bins.
     """
-    if bins < 2:
-        raise ValueError("bins must be >= 2")
-    pctl = "approx_percentile" if approx else "percentile"
-    acc = f", {int(accuracy)}" if approx else ""
-    fracs = ", ".join(str(i / bins) for i in range(1, bins))
     clean = valid_column(
         valid_column(df.select(x_col, y_col), x_col), y_col
     )
-    edges = clean.agg(
-        F.expr(
-            f"transform({pctl}({x_col}, array({fracs}){acc}), "
-            "e -> round(e, 6))"
-        ).alias("_edges")
-    )
-    binned = clean.crossJoin(F.broadcast(edges)).withColumn(
-        "bin_id",
-        F.size(F.filter(F.col("_edges"), lambda e: F.col(x_col) > e)),
-    )
+    binned = _equidepth_bins(clean, x_col, bins, approx, accuracy)
     return binned.groupBy("bin_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.min(x_col).alias("x_lo"),
@@ -306,37 +432,21 @@ def gains_curve(
     the lift over the base rate — the campaign-targeting companion to
     :func:`~spark_bestfit_spark.operators.stats.roc_auc`.
 
-    Binning is the equi-depth scheme (quantile edges rounded BEFORE
-    assignment, broadcast edges, HOF bin id, ``approx=True`` for the
-    100 TB path); the cumulative legs ride a window over the <= bins
+    Binning is the equi-depth scheme (``_equidepth_bins``: quantile
+    edges rounded BEFORE assignment, broadcast edges, HOF bin id,
+    ``approx=True`` for the 100 TB path); the cumulative legs ride a window over the <= bins
     result rows — nothing sorts data, only the tiny bin relation.
 
     Returns (decile 1 = best scores, n, n_pos, frac_pos,
     cum_capture, cum_lift) rounded to 6.
     """
-    if bins < 2:
-        raise ValueError("bins must be >= 2")
     from pyspark.sql import Window as _W
 
-    pctl = "approx_percentile" if approx else "percentile"
-    acc = f", {int(accuracy)}" if approx else ""
-    fracs = ", ".join(str(i / bins) for i in range(1, bins))
     clean = valid_column(df.select(score_col, label_col), score_col).filter(
         F.col(label_col).isNotNull()
     )
-    edges = clean.agg(
-        F.expr(
-            f"transform({pctl}({score_col}, array({fracs}){acc}), "
-            "e -> round(e, 6))"
-        ).alias("_edges")
-    )
     y = (F.col(label_col) > 0).cast("long")
-    binned = clean.crossJoin(F.broadcast(edges)).withColumn(
-        "_b",
-        F.size(
-            F.filter(F.col("_edges"), lambda e: F.col(score_col) > e)
-        ),
-    )
+    binned = _equidepth_bins(clean, score_col, bins, approx, accuracy, "_b")
     per = binned.groupBy("_b").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(y).cast("long").alias("n_pos"),

@@ -12,15 +12,21 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def valid_column(df: DataFrame, column: str):
-    """Non-null, non-NaN, finite values of a column (reference P6 cleaning:
-    backends/local.py:273-277)."""
+def valid_cond(df: DataFrame, column: str):
+    """The valid-value predicate: non-null, non-NaN and finite (reference
+    P6 cleaning: backends/local.py:273-277). The one definition every
+    stats, histogram, PMF and sample pass filters with."""
     c = F.col(column)
     cond = c.isNotNull()
     # isnan only applies to float/double columns
     if dict(df.dtypes)[column] in ("float", "double"):
         cond = cond & ~F.isnan(c) & (F.abs(c) != float("inf"))
-    return df.filter(cond)
+    return cond
+
+
+def valid_column(df: DataFrame, column: str):
+    """Rows whose ``column`` holds a valid value (:func:`valid_cond`)."""
+    return df.filter(valid_cond(df, column))
 
 
 def column_stats(df: DataFrame, column: str) -> dict:
@@ -38,21 +44,13 @@ def column_stats(df: DataFrame, column: str) -> dict:
     return {"min": row["min"], "max": row["max"], "count": row["count"]}
 
 
-def _valid_cond(df: DataFrame, column: str):
-    c = F.col(column)
-    cond = c.isNotNull()
-    if dict(df.dtypes)[column] in ("float", "double"):
-        cond = cond & ~F.isnan(c) & (F.abs(c) != float("inf"))
-    return cond
-
-
 def multi_column_stats(df: DataFrame, columns: list) -> dict:
     """Per-column min/max/count of VALID values for many columns in ONE
     aggregation job (conditional aggregates) — at 100 TB this is one scan
     instead of C scans."""
     aggs = []
     for c in columns:
-        v = F.when(_valid_cond(df, c), F.col(c))
+        v = F.when(valid_cond(df, c), F.col(c))
         aggs.append(F.min(v).alias(f"{c}__min"))
         aggs.append(F.max(v).alias(f"{c}__max"))
         aggs.append(F.count(v).alias(f"{c}__count"))

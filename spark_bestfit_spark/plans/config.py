@@ -3,7 +3,7 @@
 Mirrors the knob surface of the reference config
 (/root/reference/src/spark_bestfit/config.py:35-109) with the same
 defaults where they are observable behavior (seed 42, 10k fitting sample,
-10M sampling threshold, 50 bins, 0.35 max fraction).
+10M sampling threshold, 50 bins).
 """
 
 from __future__ import annotations
@@ -19,12 +19,9 @@ class FitterConfig:
 
     # sampling
     sample_threshold: int = 10_000_000
-    max_sample_size: int = 1_000_000
     fitting_sample_size: int = 10_000
-    max_sample_fraction: float = 0.35
     random_seed: int = 42
     adaptive_sampling: bool = True
-    stratified_bins: int = 5
     tail_min_rows: int = 500
 
     # registry / selection
@@ -57,8 +54,6 @@ class FitterConfig:
     def validate(self) -> None:
         if self.bins < 1:
             raise ValueError(f"bins must be >= 1, got {self.bins}")
-        if not (0 < self.max_sample_fraction <= 1):
-            raise ValueError("max_sample_fraction must be in (0, 1]")
         if self.fitting_sample_size < 2:
             raise ValueError("fitting_sample_size must be >= 2")
         if self.estimation_method not in ("mle", "mse", "auto"):

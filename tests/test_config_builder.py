@@ -34,6 +34,17 @@ class TestBuilder:
         with pytest.raises(AttributeError, match="no field"):
             FitterConfig.builder().with_nope(1)
 
+    @pytest.mark.parametrize(
+        "name", ["max_sample_size", "stratified_bins", "max_sample_fraction"]
+    )
+    def test_unread_sampling_fields_are_gone(self, name):
+        """No code read these three; setting one now raises instead of
+        being silently ignored."""
+        with pytest.raises(TypeError):
+            FitterConfig(**{name: 1})
+        with pytest.raises(AttributeError, match="no field"):
+            getattr(FitterConfig.builder(), f"with_{name}")(1)
+
     def test_build_validates(self):
         with pytest.raises(ValueError):
             FitterConfig.builder().with_bins(0).build()

@@ -8,7 +8,11 @@ import pandas as pd
 import pytest
 
 from spark_bestfit_spark.fitter import DiscreteDistributionFitter
-from spark_bestfit_spark.operators.discrete_fit import empirical_pmf
+from spark_bestfit_spark.operators.histogram import empirical_pmfs_multi
+
+
+def empirical_pmf(df, column):
+    return empirical_pmfs_multi(df, [column])[column]
 
 
 class TestEmpiricalPmf:
@@ -28,6 +32,26 @@ class TestEmpiricalPmf:
         x, p = empirical_pmf(df, "v")
         assert list(x) == [1.0, 2.0]
         assert np.allclose(p, [0.5, 0.5])
+
+    def test_infinities_dropped(self, spark):
+        df = spark.createDataFrame(
+            pd.DataFrame({"v": [1.0, float("inf"), 2.7, float("-inf")]})
+        )
+        x, p = empirical_pmf(df, "v")
+        assert list(x) == [1.0, 2.0]
+        assert np.allclose(p, [0.5, 0.5])
+
+    def test_several_columns(self, spark):
+        df = spark.createDataFrame(pd.DataFrame({
+            "a": [0, 0, 1, 3], "b": [None, 2.5, 2.0, float("nan")],
+            "c": [None, None, None, None],
+        }).astype({"c": "float64"}))
+        out = empirical_pmfs_multi(df, ["a", "b", "c"])
+        assert list(out["a"][0]) == [0.0, 1.0, 3.0]
+        assert np.allclose(out["a"][1], [0.5, 0.25, 0.25])
+        assert list(out["b"][0]) == [2.0]
+        assert np.allclose(out["b"][1], [1.0])
+        assert out["c"][0].size == 0 and out["c"][1].size == 0
 
 
 class TestDiscreteFitter:
@@ -67,6 +91,51 @@ class TestDiscreteFitter:
         assert res.count() == 2
         assert len(registered) == 2
         assert all(any(b is r for r in released) for b in registered)
+
+    @pytest.mark.parametrize("inf", [np.inf, -np.inf])
+    def test_infinite_rows_do_not_enter_the_pmf(self, spark, inf):
+        """fit(), fit_grouped() and fit() over the finite rows alone see
+        the same PMF, so their SSEs agree: ±inf is not a support point
+        (floor(+inf) used to become the bigint 9.2e18)."""
+        v = np.random.default_rng(4).poisson(4.0, 2000).astype(float)
+        v[::100] = inf
+        pdf = pd.DataFrame({"v": v, "g": 1})
+        fitter = DiscreteDistributionFitter(spark)
+
+        def sse(res, column):
+            return res.for_column(column).best(1, metric="sse").sse
+
+        full = fitter.fit(
+            spark.createDataFrame(pdf), column="v", distributions=["poisson"]
+        )
+        finite = fitter.fit(
+            spark.createDataFrame(pdf[np.isfinite(v)]), column="v",
+            distributions=["poisson"],
+        )
+        grouped = fitter.fit_grouped(
+            spark.createDataFrame(pdf), "v", "g", distributions=["poisson"]
+        )
+        assert sse(full, "v") == pytest.approx(sse(finite, "v"), rel=1e-9)
+        assert sse(full, "v") == pytest.approx(sse(grouped, "v[1]"), rel=1e-9)
+
+    @pytest.mark.parametrize("bad", [
+        {"fitting_sample_size": 1}, {"bins": 0},
+        {"estimation_method": "bogus"},
+    ])
+    def test_invalid_config_raises_like_continuous(self, spark, bad):
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        df = spark.createDataFrame(pd.DataFrame({"v": [1.0, 2.0, 2.0, 3.0]}))
+        fitter = DiscreteDistributionFitter(spark)
+        with pytest.raises(ValueError):
+            DistributionFitter(spark).fit(df, column="v", **bad)
+        with pytest.raises(ValueError):
+            fitter.fit(df, column="v", distributions=["poisson"], **bad)
+        with pytest.raises(ValueError):
+            fitter.fit_grouped(
+                df.withColumn("g", df.v), "v", "g",
+                distributions=["poisson"], **bad,
+            )
 
     def test_recovers_poisson(self, spark):
         rng = np.random.default_rng(42)

@@ -8,7 +8,10 @@ import pytest
 
 from spark_bestfit_spark.operators.histogram import (
     compute_histogram,
-    discrete_pmf,
+    compute_histograms_grouped,
+    compute_histograms_multi,
+    empirical_pmfs_multi,
+    sample_histogram,
 )
 from spark_bestfit_spark.operators.stats import (
     column_moments,
@@ -68,6 +71,45 @@ class TestHistogram:
         with pytest.raises(ValueError, match="no valid values"):
             compute_histogram(df, "value", bins=10)
 
+    @pytest.mark.parametrize("rice", [False, True])
+    def test_every_path_bins_alike(self, spark, rice):
+        """The single-column, multi-column, grouped and driver-side
+        histograms share one edge rule and one density rule: on the
+        same values they return identical (density, edges), including
+        the degenerate min == max IR."""
+        from spark_bestfit_spark.operators.stats import (
+            column_stats,
+            multi_column_stats,
+            valid_column,
+        )
+
+        rng = np.random.default_rng(8)
+        values = {
+            "a": np.append(rng.gamma(2.0, 3.0, 1197), [np.nan, np.inf, -np.inf]),
+            "b": np.full(1200, 7.5),
+        }
+        pdf = pd.DataFrame(values)
+        df = spark.createDataFrame(pdf)
+        stats = multi_column_stats(df, ["a", "b"])
+        multi = compute_histograms_multi(df, ["a", "b"], stats, 20, rice)
+        long = pd.DataFrame({
+            "g": np.repeat(["a", "b"], 1200),
+            "v": np.concatenate([values["a"], values["b"]]),
+        })
+        clean = valid_column(spark.createDataFrame(long), "v")
+        grouped = compute_histograms_grouped(clean, "v", "g", stats, 20, rice)
+        for c in ("a", "b"):
+            single = compute_histogram(df, c, bins=20, use_rice_rule=rice)
+            vals = values[c][np.isfinite(values[c])]
+            local = sample_histogram(vals, column_stats(df, c), 20, rice)
+            for other in (multi[c], grouped[c], local):
+                np.testing.assert_array_equal(other[0], single[0])
+                np.testing.assert_array_equal(other[1], single[1])
+        # Rice: ceil(1197 ** (1/3)) * 2 bins
+        assert len(multi["a"][0]) == (22 if rice else 20)
+        np.testing.assert_array_equal(multi["b"][0], [1.0])
+        np.testing.assert_array_equal(multi["b"][1], [7.5])
+
     def test_explicit_edges(self, spark, uniform_data):
         df = spark.createDataFrame(pd.DataFrame({"value": uniform_data}))
         edges = np.array([0.0, 25.0, 50.0, 75.0, 100.0 + 1e-6])
@@ -82,7 +124,7 @@ class TestDiscretePmf:
         rng = np.random.default_rng(42)
         data = rng.poisson(5, 5000)
         df = spark.createDataFrame(pd.DataFrame({"k": data.astype("int32")}))
-        x, pmf = discrete_pmf(df, "k")
+        x, pmf = empirical_pmfs_multi(df, ["k"])["k"]
         vals, counts = np.unique(data, return_counts=True)
         np.testing.assert_array_equal(x, vals.astype(float))
         np.testing.assert_allclose(pmf, counts / counts.sum(), rtol=1e-12)

@@ -242,6 +242,37 @@ class TestJobCount:
         assert j1 <= 12, j1
         df.unpersist()
 
+    def test_censored_fit_plans_all_columns_together(self, spark):
+        """A censored fit runs one stats job and one histogram job for
+        all its columns; only the censored samples (value + event mask)
+        are collected per column, so 3 columns cost at most 4 more
+        jobs than 1 (two more sample collects, plus AQE slack)."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        rng = np.random.default_rng(9)
+        n = 20_000
+        df = spark.createDataFrame(pd.DataFrame({
+            "a": rng.gamma(2.0, 3.0, n), "b": rng.normal(10.0, 2.0, n),
+            "c": rng.exponential(4.0, n), "obs": rng.random(n) < 0.8,
+        })).repartition(4).cache()
+        df.count()
+        fitter = DistributionFitter(spark)
+
+        def fit(cols):
+            return lambda: fitter.fit(
+                df, columns=cols, distributions=["norm", "expon"],
+                censoring_column="obs", lazy_metrics=True,
+            ).count()
+
+        fit(["a"])()  # warm codegen/broadcast paths
+        j1 = self._jobs_during(spark, fit(["a"]))
+        j3 = self._jobs_during(spark, fit(["a", "b", "c"]))
+        assert j3 <= j1 + 4, (j1, j3)
+        df.unpersist()
+
     def test_prelude_jobs_stay_in_callers_job_group(self, spark):
         """Every job a fit launches — including the prelude jobs raced
         from helper driver threads — is attributed to the caller's job
@@ -376,31 +407,14 @@ class TestRound5PlanShapes:
         """The per-group histogram relation: one scan, the per-group
         bounds arriving via BroadcastHashJoin (never a shuffle join of
         the corpus), one (group, bin) aggregation exchange."""
-        import numpy as np
-        import pyspark.sql.functions as F
+        from spark_bestfit_spark.operators.histogram import (
+            grouped_histogram_df,
+        )
 
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        bounds_df = spark.createDataFrame(
-            [("A", 900.0, 100000.0, 50), ("N", 900.0, 100000.0, 50)],
-            "_g string, _lo double, _hi double, _nb int",
-        )
-        counts = (
-            li.join(
-                F.broadcast(bounds_df), li["l_returnflag"] == bounds_df["_g"]
-            )
-            .filter(
-                (F.col("l_extendedprice") >= F.col("_lo"))
-                & (F.col("l_extendedprice") < F.col("_hi"))
-            )
-            .select(
-                "_g",
-                F.width_bucket(
-                    F.col("l_extendedprice"), F.col("_lo"), F.col("_hi"),
-                    F.col("_nb"),
-                ).alias("_bin"),
-            )
-            .groupBy("_g", "_bin")
-            .agg(F.count("*").alias("_c"))
+        counts = grouped_histogram_df(
+            li, "l_extendedprice", "l_returnflag",
+            {"A": (900.0, 100000.0, 50), "N": (900.0, 100000.0, 50)},
         )
         plan = _physical(counts)
         assert "BroadcastHashJoin" in plan
