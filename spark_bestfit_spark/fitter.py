@@ -874,7 +874,7 @@ class DiscreteDistributionFitter(_Fitter):
           guard, null groups excluded);
         - per-group empirical PMFs: ONE (group, floored-value)
           aggregation — map-side combined, the shuffle carries one row
-          per (group, support point);
+          per (group, support point) — raced against the sample pass;
         - per-group samples: ONE ``sampleBy`` pass, truncated with the
           same value-based per-group-seeded convention, then floored
           (floor is monotone and the truncation picks positions by
@@ -893,10 +893,15 @@ class DiscreteDistributionFitter(_Fitter):
         if not counts:
             return self._empty_results()
         gcounts = {r[group_col]: int(r["n"]) for r in counts}
-        pmfs = grouped_pmfs(clean, column, group_col, gcounts)
+        # the PMF aggregation and the sample pass are independent given
+        # the counts — race them like the continuous fit_grouped
+        pmfs_future = _start(
+            self.spark, grouped_pmfs, clean, column, group_col, gcounts
+        )
         samples_by_group = _grouped_samples(
             clean, column, group_col, gcounts, config
         )
+        pmfs = pmfs_future.result()
         names = distributions or self._select_distributions(config)
         plans: dict = {}
         samples: dict = {}

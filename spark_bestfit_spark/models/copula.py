@@ -3,11 +3,12 @@
 Capability parity with the reference (copula.py:43-390) on a Spark-first
 plan:
 
-- **fit**: best marginal per column (a results-relation top-1 query per
-  column) + a distributed Spearman correlation (``pyspark.ml.stat.
-  Correlation`` over assembled vectors — rank transform and the k x k
-  reduction run on executors; only the k x k matrix lands on the driver)
-  + a cached Cholesky factor.
+- **fit**: best marginal per column (one query on the driver-resident
+  results) + an exact Spearman correlation: ONE Spark job collects the
+  complete rows of the k columns through Arrow, and the driver ranks
+  them and takes Pearson over the ranks in numpy (the reference's local
+  backend does the same, backends/local.py:300-316) + a cached
+  Cholesky factor.
 - **sample**: z ~ N(0, I) -> z @ L.T -> uniforms via the normal CDF
   (``ndtr``) -> marginal PPFs (closed-form fast path, truncation-aware).
 - **sample_distributed**: the same math inside ``mapInPandas`` via
@@ -21,9 +22,13 @@ from __future__ import annotations
 import json
 import warnings
 from dataclasses import dataclass, field
+from functools import reduce
+from operator import and_
 
 import numpy as np
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import BooleanType, NumericType
 
 from spark_bestfit_spark.functions import special as sp
 from spark_bestfit_spark.functions.fast_ppf import ppf_from_z
@@ -34,20 +39,75 @@ SCHEMA_VERSION = "1.1"
 __all__ = ["GaussianCopula", "spearman_correlation"]
 
 
+def _average_ranks(x: np.ndarray) -> np.ndarray:
+    """1-based ranks of ``x`` with tied values sharing their mean rank
+    (``==`` ties, so -0.0 ties with 0.0 and +inf with +inf)."""
+    order = np.argsort(x, kind="stable")
+    xs = x[order]
+    starts = np.flatnonzero(np.r_[True, xs[1:] != xs[:-1]])
+    ends = np.r_[starts[1:], x.size]
+    ranks = np.empty(x.size, dtype=np.float64)
+    ranks[order] = np.repeat((starts + ends + 1) / 2.0, ends - starts)
+    return ranks
+
+
 def spearman_correlation(
     df: DataFrame, columns: list, method: str = "spearman"
 ) -> np.ndarray:
-    """Distributed correlation matrix over k columns (reference A8:
-    backends/spark.py:334-371). Null rows are skipped by the assembler."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.stat import Correlation
+    """k x k correlation matrix (reference A8: backends/spark.py:334-371,
+    computed as in backends/local.py:300-316).
 
-    assembler = VectorAssembler(
-        inputCols=list(columns), outputCol="_corr_vec", handleInvalid="skip"
+    ONE Spark job selects the columns, drops every row in which any of
+    them is null or NaN (±inf rows stay) and collects the rest through
+    Arrow. The driver then ranks each column (ties share their mean
+    rank; ``method="pearson"`` skips ranking) and takes Pearson over the
+    ranks. The diagonal is 1.0; a constant column gives NaN off it.
+
+    Cost: the complete rows sit on the driver as float64, 8 * n * k
+    bytes, and the collect is bounded by ``spark.driver.maxResultSize``
+    (1 GB by default, about 40M complete rows at k = 3); above it Spark
+    raises its own error. MLlib's ``Correlation`` (6 jobs around a
+    distributed sort) is already impractical well below that: ~20 s for
+    1M rows x 3 columns on a 4-core local[4] session, where this takes
+    ~2.5 s. Raises ValueError for an unknown ``method`` or fewer than 2
+    complete rows.
+    """
+    if method not in ("spearman", "pearson"):
+        raise ValueError(
+            f"method must be 'spearman' or 'pearson', got {method!r}"
+        )
+    sel = df.select(*columns)
+    for f in sel.schema.fields:
+        if not isinstance(f.dataType, (NumericType, BooleanType)):
+            raise TypeError(
+                f"column {f.name!r} has non-numeric type "
+                f"{f.dataType.simpleString()}"
+            )
+    # positional names: duplicated or dotted column names stay apart
+    names = [f"_{j}" for j in range(len(sel.columns))]
+    x = (
+        sel.toDF(*names)
+        .select(*[F.col(c).cast("double").alias(c) for c in names])
+        .filter(reduce(
+            and_, [F.col(c).isNotNull() & ~F.isnan(c) for c in names]
+        ))
+        .toPandas()
+        .to_numpy(dtype=np.float64)
     )
-    assembled = assembler.transform(df.select(*columns))
-    mat = Correlation.corr(assembled, "_corr_vec", method).head()[0]
-    return np.asarray(mat.toArray(), dtype=np.float64)
+    if x.shape[0] < 2:
+        raise ValueError(
+            f"correlation needs >= 2 rows with every column of {columns!r} "
+            f"non-null and non-NaN, got {x.shape[0]}"
+        )
+    if method == "spearman":
+        x = np.column_stack([_average_ranks(col) for col in x.T])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        lower = np.tril(np.atleast_2d(np.corrcoef(x, rowvar=False)), -1)
+    # corrcoef's two-step scaling can differ by an ulp across the
+    # diagonal; mirror one triangle so the matrix is exactly symmetric
+    corr = lower + lower.T
+    np.fill_diagonal(corr, 1.0)
+    return corr
 
 
 @dataclass
@@ -119,7 +179,7 @@ class GaussianCopula:
         metric: str = "sse",
     ) -> "GaussianCopula":
         """Best marginal per column (one ranking query for all columns)
-        + distributed Spearman correlation."""
+        + exact Spearman correlation (one Spark job)."""
         columns = list(columns or results.columns())
         if len(columns) < 2:
             raise ValueError("copula needs >= 2 columns")

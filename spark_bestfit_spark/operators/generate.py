@@ -79,19 +79,18 @@ def generate_samples(
     # partition with NO shuffle: the earlier repartitionByRange plan cost
     # a range-boundary sampling job plus an exchange stage per call, and
     # a hash repartition would leave ~1/e of the partitions empty.
-    # The (base, rem) split arithmetic ships in the closure instead.
+    # Each partition's row count (O(partitions) ints) ships in the
+    # closure instead.
     plan = spark.range(0, num_partitions, 1, num_partitions)
-    base, rem = divmod(n, num_partitions)
+    rows = dict(_partition_plan(n, num_partitions))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for pid in pdf["id"]:
                 pid = int(pid)
-                n_rows = base + (1 if pid < rem else 0)
-                if n_rows <= 0:
-                    continue
+                # num_partitions <= n: every partition has a row
                 rng = np.random.default_rng(seed + pid)
-                out = generator(rng, n_rows)
+                out = generator(rng, rows[pid])
                 frame = pd.DataFrame(out)
                 yield frame[list(columns)].astype(np.float64)
 

@@ -115,6 +115,20 @@ class TestGenerateSamples:
         # 4 partitions with distinct seeds: essentially no duplicate values
         assert len(np.unique(np.round(vals, 12))) > 390
 
+    def test_partition_row_counts_follow_the_plan(self, spark):
+        import pyspark.sql.functions as F
+
+        df = generate_samples(
+            spark, 10, lambda rng, n: {"v": rng.normal(0, 1, n)},
+            ["v"], num_partitions=4,
+        )
+        counts = {
+            r["pid"]: r["n"]
+            for r in df.groupBy(F.spark_partition_id().alias("pid"))
+            .count().withColumnRenamed("count", "n").collect()
+        }
+        assert counts == dict(_partition_plan(10, 4))
+
     def test_rejects_bad_n(self, spark):
         with pytest.raises(ValueError):
             generate_samples(spark, 0, lambda rng, n: {"v": []}, ["v"])

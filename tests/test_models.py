@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -26,6 +28,68 @@ def corr_df(spark):
     return spark.createDataFrame(pd.DataFrame({"x": x, "y": y, "z": z}))
 
 
+INF, NAN = float("inf"), float("nan")
+# a: ties and -0.0 vs 0.0; b: ±inf; i: int ties; c: constant;
+# d: one NaN and one null; rows 9 and 10 (0-based) hold a null and a NaN a
+EDGE_SCHEMA = "a double, b double, i int, c double, d double"
+EDGE_ROWS = [
+    (1.0, 3.0, 1, 7.0, 0.5),
+    (2.0, INF, 2, 7.0, 1.5),
+    (2.0, -INF, 2, 7.0, 0.25),
+    (-0.0, 1.0, 3, 7.0, 2.0),
+    (0.0, 1.0, 3, 7.0, NAN),
+    (5.0, 2.0, 1, 7.0, 3.0),
+    (3.0, INF, 4, 7.0, None),
+    (0.0, 0.5, 4, 7.0, 3.0),
+    (4.0, 2.0, 5, 7.0, -1.0),
+    (None, 9.0, 6, 7.0, 4.0),
+    (NAN, 8.0, 7, 7.0, 4.5),
+    (-0.0, -2.0, 2, 7.0, 0.5),
+]
+EDGE_SUBSETS = [
+    ["a", "i"], ["a", "b"], ["b", "i"], ["i", "c"], ["a", "b", "i"],
+    ["a", "c", "d"], ["a", "b", "i", "d"], ["a", "i", "d", "c"],
+]
+
+
+@pytest.fixture(scope="module")
+def edge_df(spark):
+    return spark.createDataFrame(EDGE_ROWS, EDGE_SCHEMA)
+
+
+def _reference_corr(cols, method):
+    """Pure-Python oracle: keep the rows complete in ``cols`` (no null,
+    no NaN), average 1-based ranks by counting, Pearson by the textbook
+    sums (NaN when a mean or a variance is not finite and positive)."""
+    names = [f.split()[0] for f in EDGE_SCHEMA.split(", ")]
+    rows = [[r[names.index(c)] for c in cols] for r in EDGE_ROWS]
+    rows = [r for r in rows if all(v is not None and v == v for v in r)]
+    series = [list(map(float, s)) for s in zip(*rows)]
+    if method == "spearman":
+        series = [
+            [sum(w < v for w in s) + (sum(w == v for w in s) + 1) / 2.0
+             for v in s]
+            for s in series
+        ]
+
+    def pearson(x, y):
+        n = len(x)
+        mx, my = sum(x) / n, sum(y) / n
+        vx = sum((v - mx) ** 2 for v in x)
+        vy = sum((v - my) ** 2 for v in y)
+        if not (math.isfinite(vx) and math.isfinite(vy)) or 0 in (vx, vy):
+            return NAN
+        return sum((a - mx) * (b - my) for a, b in zip(x, y)) / math.sqrt(
+            vx * vy
+        )
+
+    k = len(cols)
+    return np.array([
+        [1.0 if i == j else pearson(series[i], series[j]) for j in range(k)]
+        for i in range(k)
+    ])
+
+
 class TestSpearman:
     def test_known_structure(self, corr_df):
         corr = spearman_correlation(corr_df, ["x", "y", "z"])
@@ -38,6 +102,57 @@ class TestSpearman:
         pdf = pd.DataFrame({"a": [1.0, 2.0, None, 4.0], "b": [2.0, 4.0, 6.0, 8.0]})
         corr = spearman_correlation(spark.createDataFrame(pdf), ["a", "b"])
         assert abs(corr[0, 1] - 1.0) < 1e-9
+
+    @pytest.mark.parametrize("method", ["spearman", "pearson"])
+    @pytest.mark.parametrize("cols", EDGE_SUBSETS, ids="".join)
+    def test_matches_average_rank_reference(self, edge_df, cols, method):
+        """Rows with a null or NaN in any chosen column drop out; ±inf
+        rows stay (ranked last/first; Pearson over them is NaN); ties,
+        -0.0 vs 0.0 included, share their mean rank; a constant column
+        is NaN off the diagonal."""
+        got = spearman_correlation(edge_df, cols, method)
+        want = _reference_corr(cols, method)
+        np.testing.assert_allclose(got, want, rtol=0, atol=1e-12,
+                                   equal_nan=True)
+        assert np.array_equal(got, got.T, equal_nan=True)
+
+    @pytest.mark.parametrize("cols", [["x", "y"], ["x", "y", "z"],
+                                      ["x", "y", "z", "w"]], ids=len)
+    def test_matches_sql_spearman_on_finite_data(self, spark, corr_df,
+                                                 cols):
+        """Against the engine's in-plan SQL Spearman (rho rounded to 6
+        places); the rounded copies carry ties."""
+        from spark_bestfit_spark.operators.stats import spearman_corr
+
+        df = corr_df.selectExpr(
+            "round(x, 0) AS x", "round(y, -1) AS y", "z", "round(z) AS w"
+        )
+        corr = spearman_correlation(df, cols)
+        assert np.all(np.diag(corr) == 1.0)
+        for i, a in enumerate(cols):
+            for j, b in enumerate(cols[:i]):
+                rho = spearman_corr(df, a, b).first()["rho"]
+                assert abs(corr[i, j] - rho) <= 5e-7, (a, b)
+                assert corr[j, i] == corr[i, j]
+
+    @pytest.mark.parametrize("rows", [
+        [(1.0, 2.0)], [(1.0, None), (2.0, None)], [(1.0, float("nan"))],
+    ], ids=["one_row", "all_null_column", "nan_only"])
+    def test_fewer_than_two_complete_rows_raise(self, spark, rows):
+        df = spark.createDataFrame(rows, "a double, b double")
+        with pytest.raises(ValueError, match=">= 2 rows"):
+            spearman_correlation(df, ["a", "b"])
+
+    def test_unknown_method_raises(self, corr_df):
+        with pytest.raises(ValueError, match="kendall"):
+            spearman_correlation(corr_df, ["x", "y"], "kendall")
+
+    def test_non_numeric_column_raises(self, spark):
+        df = spark.createDataFrame(
+            [(1.0, "a"), (2.0, "b")], "x double, s string"
+        )
+        with pytest.raises(TypeError, match="'s'"):
+            spearman_correlation(df, ["x", "s"])
 
 
 @pytest.fixture(scope="module")

@@ -168,6 +168,7 @@ class TestExtremeEvaluation:
         """A sample point at a density pole (+inf) next to one outside
         the support (-inf) yields the declared (inf, inf) sentinel
         without numpy's 'invalid value' RuntimeWarning."""
+        import gc
         import warnings
 
         from spark_bestfit_spark.functions import metrics as M
@@ -177,6 +178,7 @@ class TestExtremeEvaluation:
 
         gamma = get_continuous("gamma")
         data = np.array([0.0, -1.0, 1.0])
+        gc.collect()  # see test_censored_objective_sentinel_is_silent
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
             ic = M.compute_information_criteria(gamma, (0.5, 0.0, 1.0), data)
@@ -189,6 +191,7 @@ class TestExtremeEvaluation:
         without numpy's 'invalid value' RuntimeWarning. (Warnings are
         recorded rather than raised: the objective's own ``except``
         would map a raised warning to the same sentinel.)"""
+        import gc
         import warnings
 
         from spark_bestfit_spark.functions.distributions.registry import (
@@ -199,6 +202,9 @@ class TestExtremeEvaluation:
         rng = np.random.default_rng(3)
         values = rng.uniform(900, 2100, 2000)
         observed = rng.random(2000) < 0.5
+        # an earlier test's unreachable Spark result socket, freed by a
+        # GC pass inside the window, would record a ResourceWarning
+        gc.collect()
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
             params = censored_fit(get_continuous("arcsine"), values, observed)
@@ -208,6 +214,8 @@ class TestExtremeEvaluation:
 
 class TestCorrelationDegeneracy:
     def test_constant_column_correlation(self, spark):
+        import warnings
+
         from spark_bestfit_spark.models.copula import spearman_correlation
 
         rng = np.random.default_rng(7)
@@ -215,9 +223,16 @@ class TestCorrelationDegeneracy:
             "a": rng.normal(0, 1, 500),
             "b": np.full(500, 3.0),  # zero variance
         })
-        corr = spearman_correlation(spark.createDataFrame(pdf), ["a", "b"])
-        # constant column yields NaN correlation; shape intact, no raise
-        assert corr.shape == (2, 2)
+        df = spark.createDataFrame(pdf)
+        for method in ("spearman", "pearson"):
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", RuntimeWarning)
+                corr = spearman_correlation(df, ["a", "b"], method)
+            # constant column yields NaN off the diagonal, 1.0 on it;
+            # no raise and no numpy warning
+            assert corr.shape == (2, 2)
+            assert np.isnan(corr[0, 1]) and np.isnan(corr[1, 0])
+            assert corr[0, 0] == corr[1, 1] == 1.0
 
     def test_near_singular_copula_cholesky(self, spark):
         from spark_bestfit_spark.models.copula import GaussianCopula, _Marginal

@@ -280,7 +280,10 @@ class TestJobCount:
         import numpy as np
         import pandas as pd
 
-        from spark_bestfit_spark.fitter import DistributionFitter
+        from spark_bestfit_spark.fitter import (
+            DiscreteDistributionFitter,
+            DistributionFitter,
+        )
 
         rng = np.random.default_rng(11)
         n = 20_000  # > fitting_sample_size: both race waves run
@@ -299,6 +302,11 @@ class TestJobCount:
             ),
             "caller-fit-grouped": lambda: fitter.fit_grouped(
                 df, "a", "g", distributions=dists, lazy_metrics=True
+            ),
+            "caller-discrete-fit-grouped": lambda: (
+                DiscreteDistributionFitter(spark).fit_grouped(
+                    df, "a", "g", distributions=["poisson", "geom"]
+                )
             ),
         }
         # the closing marker's count can itself run more than one job
@@ -368,6 +376,42 @@ class TestJobCount:
             for name, call in calls.items():
                 jobs = self._jobs_during(spark, call) - overhead
                 assert jobs == 0, (lazy, name, jobs)
+
+    def test_spearman_and_copula_fit_are_one_job(self, spark):
+        """The copula's correlation is one collect of the complete rows
+        (MLlib's distributed Correlation ran 6 jobs on this table), and
+        after fit() the marginals cost no job, so GaussianCopula.fit is
+        one job too."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark.fitter import DistributionFitter
+        from spark_bestfit_spark.models import GaussianCopula
+        from spark_bestfit_spark.models.copula import spearman_correlation
+
+        rng = np.random.default_rng(13)
+        n = 20_000
+        x = rng.normal(0.0, 1.0, n)
+        df = spark.createDataFrame(pd.DataFrame({
+            "a": np.exp(x), "b": x + rng.normal(0.0, 0.5, n),
+            "c": rng.exponential(2.0, n),
+        })).repartition(4).cache()
+        df.count()
+        cols = ["a", "b", "c"]
+        res = DistributionFitter(spark).fit(
+            df, columns=cols, distributions=["norm", "expon", "lognorm"]
+        )
+        spearman_correlation(df, cols)  # warm the Arrow collect path
+        overhead = self._jobs_during(spark, lambda: None)
+        jobs = self._jobs_during(
+            spark, lambda: spearman_correlation(df, cols)
+        ) - overhead
+        assert jobs == 1, jobs
+        jobs = self._jobs_during(
+            spark, lambda: GaussianCopula.fit(res, df, cols)
+        ) - overhead
+        assert jobs == 1, jobs
+        df.unpersist()
 
     def test_start_reraises_from_result(self, spark):
         from spark_bestfit_spark.fitter import _start
