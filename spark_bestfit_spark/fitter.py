@@ -16,17 +16,20 @@ like inline ones. Everything the executors need is broadcast (~KBs), so
 the fit cost is independent of table size beyond the scan.
 
 A censored fit has no probe: one stats job for all columns, then one
-histogram job for all columns raced against the per-column censored
-samples (value and event mask travel together), then the same fan-out.
+histogram job for all columns raced against one sample job for all
+columns (each value travels with its event mask), then the same fan-out.
 
 Every binning rule — equi-width edges, density, empirical PMF — comes
-from ``operators/histogram.py``; this module holds no bin arithmetic.
+from ``operators/histogram.py``, and every sampling rule from
+``operators/sampling.py``; this module holds no bin or sample
+arithmetic. Results keep each column's valid count with the source
+relation, so a lazy recreation of a sample draws it with the fit's own
+call.
 """
 
 from __future__ import annotations
 
 import warnings
-import zlib
 from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import nullcontext
 
@@ -54,8 +57,8 @@ from spark_bestfit_spark.operators.histogram import (
     sample_histogram,
 )
 from spark_bestfit_spark.operators.sampling import (
-    build_censored_sample,
     build_fitting_samples_multi,
+    grouped_samples,
 )
 from spark_bestfit_spark.operators.stats import (
     multi_column_stats,
@@ -140,24 +143,6 @@ def _ensure_spark_df(spark: SparkSession, df):
     )
 
 
-def _truncate_group_sample(
-    arr: np.ndarray, target: int, seed: int, group
-) -> np.ndarray:
-    """Deterministic over-budget truncation for fit_grouped: value-sort
-    the group's collected rows (erasing Spark's collection order), then
-    subsample WITHOUT replacement using a PER-GROUP generator seeded
-    from (seed, crc32(str(group))). The truncated multiset depends only
-    on the group's value multiset and the seed — never on input
-    partitioning, collection order, or the pandas groupby iteration
-    order (which consumes a shared rng in appearance order)."""
-    if arr.size <= target:
-        return arr
-    rng = np.random.default_rng(
-        [int(seed), zlib.crc32(str(group).encode("utf-8"))]
-    )
-    return rng.choice(np.sort(arr), size=target, replace=False)
-
-
 def _start(spark: SparkSession, fn, *args, **kwargs) -> Future:
     """Run ``fn(*args, **kwargs)`` on its own driver thread and return
     its Future — the one way the fitters race two prelude jobs (Spark
@@ -220,31 +205,6 @@ def _grouped_counts(
             "key first, or raise max_groups deliberately"
         )
     return clean, rows
-
-
-def _grouped_samples(
-    clean: DataFrame, column: str, group_col: str, counts: dict, config
-) -> dict:
-    """Per-group fitting samples from ONE stratified ``sampleBy`` pass:
-    keep fractions sized to ~1.3x the fitting sample (the
-    oversample-then-truncate convention of build_fitting_sample), then
-    the deterministic per-group truncation."""
-    target = config.fitting_sample_size
-    fractions = {
-        g: min(1.0, (target * 1.3) / n) for g, n in counts.items()
-    }
-    pdf = (
-        clean.select(group_col, column)
-        .sampleBy(group_col, fractions, seed=config.random_seed)
-        .toPandas()
-    )
-    samples: dict = {}
-    for g, sub in pdf.groupby(group_col, sort=False):
-        arr = sub[column].to_numpy(dtype=np.float64)
-        samples[g] = _truncate_group_sample(
-            arr[np.isfinite(arr)], target, config.random_seed, g
-        )
-    return samples
 
 
 class _Fitter:
@@ -469,6 +429,7 @@ class DistributionFitter(_Fitter):
         live_cols = [c for c in cols if all_stats[c]["count"] > 0]
         if not live_cols:
             return self._empty_results()
+        counts = {c: int(all_stats[c]["count"]) for c in live_cols}
         # small-data shortcut: when every column's valid count fits in
         # the fitting sample (always true for a complete probe), the
         # sample IS the complete data — the histogram can be counted
@@ -487,8 +448,7 @@ class DistributionFitter(_Fitter):
                 all_stats, config.bins, config.use_rice_rule,
             )
             sample_map = build_fitting_samples_multi(
-                src, live_cols, config,
-                {c: int(all_stats[c]["count"]) for c in live_cols},
+                src, live_cols, config, counts
             )
             if hist_future is not None:
                 histograms = hist_future.result()
@@ -521,7 +481,9 @@ class DistributionFitter(_Fitter):
                 )
         if not plans:
             return self._empty_results()
-        return self._fan_out(plans, samples, config, bounds, (src, config))
+        return self._fan_out(
+            plans, samples, config, bounds, (src, config, counts, False)
+        )
 
     def _plan(self, sample, histogram, distributions, config) -> dict:
         """One column's fan-out plan: its distribution list, sample,
@@ -710,7 +672,7 @@ class DistributionFitter(_Fitter):
             self.spark, compute_histograms_grouped, clean, column,
             group_col, gstats, config.bins, config.use_rice_rule,
         )
-        samples_by_group = _grouped_samples(
+        samples_by_group = grouped_samples(
             clean, column, group_col,
             {g: s["count"] for g, s in gstats.items()}, config,
         )
@@ -736,25 +698,21 @@ class DistributionFitter(_Fitter):
         self, src: DataFrame, cols: list, distributions, config, bounds
     ) -> FitResults:
         """Censored (survival) path: planned like ``fit()`` — one stats
-        job and one histogram job for all columns, the histogram raced
-        against the per-column censored samples (each sample carries
-        its event mask, so it is collected per column) — then ONE
-        fan-out."""
+        job, then one histogram job for all columns raced against one
+        sample job for all columns (each value carries its event mask)
+        — then ONE fan-out."""
         all_stats = multi_column_stats(src, cols)
         live_cols = [c for c in cols if all_stats[c]["count"] > 0]
         if not live_cols:
             return self._empty_results()
+        counts = {c: int(all_stats[c]["count"]) for c in live_cols}
         hist_future = _start(
             self.spark, compute_histograms_multi, src, live_cols,
             all_stats, config.bins, config.use_rice_rule,
         )
-        censored = {
-            c: build_censored_sample(
-                src, c, config.censoring_column, config,
-                int(all_stats[c]["count"]),
-            )
-            for c in live_cols
-        }
+        censored = build_fitting_samples_multi(
+            src, live_cols, config, counts, censor=config.censoring_column
+        )
         histograms = hist_future.result()
         plans: dict = {}
         samples: dict = {}
@@ -768,7 +726,9 @@ class DistributionFitter(_Fitter):
             }
         if not plans:
             return self._empty_results()
-        return self._fan_out(plans, samples, config, bounds, (src, config))
+        return self._fan_out(
+            plans, samples, config, bounds, (src, config, counts, False)
+        )
 
 
 class DiscreteDistributionFitter(_Fitter):
@@ -828,10 +788,8 @@ class DiscreteDistributionFitter(_Fitter):
         live_cols = [c for c in cols if all_stats[c]["count"] > 0]
         if not live_cols:
             return self._empty_results()
-        sample_map = build_fitting_samples_multi(
-            df, live_cols, config,
-            {c: int(all_stats[c]["count"]) for c in live_cols},
-        )
+        counts = {c: int(all_stats[c]["count"]) for c in live_cols}
+        sample_map = build_fitting_samples_multi(df, live_cols, config, counts)
         pmfs = pmfs_future.result()
 
         names = distributions or self._select_distributions(config)
@@ -854,7 +812,7 @@ class DiscreteDistributionFitter(_Fitter):
             }
         if not plans:
             return self._empty_results()
-        return self._fan_out(plans, samples, config, (df, config))
+        return self._fan_out(plans, samples, config, (df, config, counts, True))
 
     def fit_grouped(
         self,
@@ -898,7 +856,7 @@ class DiscreteDistributionFitter(_Fitter):
         pmfs_future = _start(
             self.spark, grouped_pmfs, clean, column, group_col, gcounts
         )
-        samples_by_group = _grouped_samples(
+        samples_by_group = grouped_samples(
             clean, column, group_col, gcounts, config
         )
         pmfs = pmfs_future.result()

@@ -1,41 +1,50 @@
 """Input-side sampling operators (SURVEY §2.7 SA1-SA5).
 
-Strategy re-expressed from the reference (base_fitter.py:243-522):
-
-- below ``sample_threshold`` rows: sample just enough for the fitting
-  sample;
-- above it: pilot-skewness decides UNIFORM vs STRATIFIED;
-- stratified: approxQuantile splits -> width_bucket strata ->
-  ``sampleBy`` with boosted tail fractions (>= tail_min_rows per tail
-  stratum).
-
-Everything stays declarative (``sample`` / ``sampleBy`` are pushed into
-the scan stage by Catalyst); only <= fitting_sample_size rows ever reach
-the driver.
+One rule draws every continuous fitting sample — for ``fit()``, censored
+fits and the lazy recreation alike, so the same relation and seed give
+the same sample (SA5). ONE job draws one ``rand(seed)`` per row; each
+column keeps its valid values whose draw is below its own
+:func:`sample_fraction` (~1.3x the target, from its own valid count, so
+no column's sample depends on its neighbours). ``rand(seed) < frac``
+keeps exactly the rows ``sample(frac, seed)`` keeps. Only a column above
+``sample_threshold`` pays for its own pilot-skewness job, and a skewed
+one for its own stratified ``sampleBy`` (approxQuantile strata, boosted
+tails). The driver truncates each column to the target with
+``default_rng(seed)``. Grouped fits draw all groups in one ``sampleBy``
+pass under the same fraction rule, truncated per group by value.
 """
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as _W
 
 from spark_bestfit_spark.operators.stats import valid_column
 from spark_bestfit_spark.plans.config import FitterConfig
 
-PILOT_SIZE = 5_000
 SKEW_STRATIFIED = 0.5
 SKEW_MORE_BINS = 2.0
-SKEW_WARN = 5.0
+
+
+def sample_fraction(target: int, count: int) -> float:
+    """Keep fraction that draws ~1.3x ``target`` of ``count`` rows:
+    oversample, then truncate to the target on the driver."""
+    return min(1.0, (target * 1.3) / max(count, 1))
 
 
 def pilot_skewness(df: DataFrame, column: str, config: FitterConfig) -> float:
-    """Skewness of a small pilot sample — one cheap job (reference
-    base_fitter.py:311-364 collects <= 5k rows; we use the distributed
-    aggregate on a sampled fraction instead, nothing is collected)."""
+    """Skewness of the valid values in a small pilot sample — one cheap
+    job (reference base_fitter.py:311-364 collects <= 5k rows; we use
+    the distributed aggregate on a sampled fraction instead, nothing is
+    collected). Invalid values are dropped first: one NaN would make
+    the skew NaN."""
     # a fixed small fraction is fine for a pilot — skew estimate only
     row = (
-        df.sample(fraction=0.01, seed=config.random_seed)
+        valid_column(df.sample(fraction=0.01, seed=config.random_seed), column)
         .agg(F.skewness(column).alias("skew"))
         .first()
     )
@@ -60,8 +69,7 @@ def stratified_sample(
     """Quantile-bucketed ``sampleBy`` with tail boost (reference
     base_fitter.py:388-477)."""
     probs = list(np.linspace(0.0, 1.0, n_strata + 1))
-    splits = df.approxQuantile(column, probs, 0.01)
-    splits = sorted(set(splits))
+    splits = sorted(set(df.approxQuantile(column, probs, 0.01)))
     if len(splits) < 3:
         return df.sample(fraction=fraction, seed=config.random_seed)
     lo, hi = splits[0], splits[-1]
@@ -95,111 +103,107 @@ def build_fitting_samples_multi(
     columns: list,
     config: FitterConfig,
     counts: dict,
+    *,
+    censor: str | None = None,
 ) -> dict:
     """Fitting samples for MANY columns in ONE collect job.
 
-    Rows are sampled jointly (the per-column marginals are unchanged);
-    each column then drops its own non-finite values and subsamples to
-    ``fitting_sample_size``. Falls back to per-column jobs when valid
-    counts are so imbalanced that a joint sample would over-collect."""
-    target = config.fitting_sample_size
-    pos_counts = [counts[c] for c in columns if counts[c] > 0]
-    if not pos_counts:
-        return {c: np.empty(0) for c in columns}
-    min_count, max_count = min(pos_counts), max(pos_counts)
-    # imbalance guard: a joint fraction sized for the sparsest column
-    # would collect frac * max_count rows of the densest
-    frac = min(1.0, (target * 1.3) / max(min_count, 1))
-    if frac * max_count > 8.0 * target:
-        return {
-            c: build_fitting_sample(df, c, config, int(counts[c]))
-            for c in columns
-        }
-    proj = df.select(*columns)
-    if max_count <= target:
-        pdf = proj.toPandas()
-    else:
-        pdf = proj.sample(fraction=frac, seed=config.random_seed).toPandas()
+    ``counts`` holds each column's valid count. Every row draws one
+    ``rand(seed)``; a column keeps its valid values whose draw is below
+    its own :func:`sample_fraction`, then the driver truncates it to
+    ``fitting_sample_size``. Returns ``{column: values}``. With
+    ``censor`` (a boolean/integer event column) a column keeps only
+    rows whose event is known and the result is ``{column: (values,
+    observed_mask)}``: the value and its event travel together."""
+    target, seed = config.fitting_sample_size, config.random_seed
+    fracs = {c: sample_fraction(target, counts[c]) for c in columns}
+    obs = [F.col(censor).cast("boolean").alias("_obs")] if censor else []
+    floor = max(config.sample_threshold, target)
+    drawn, shared = {}, []
+    for c in columns:
+        # only a column above the threshold pays for pilot/strata jobs
+        n_strata = 0
+        if config.adaptive_sampling and counts[c] > floor:
+            n_strata = choose_sampling_mode(pilot_skewness(df, c, config))[1]
+        if n_strata:
+            rel = stratified_sample(
+                valid_column(df, c), c, fracs[c], config, n_strata
+            )
+            drawn[c] = rel.select(
+                F.col(c).cast("double").alias(c), *obs
+            ).toPandas()
+        else:
+            shared.append(c)
+    if shared:
+        # a column keeps the rows drawn below its own fraction; invalid
+        # values and unknown events drop on the driver (validity tests
+        # in the plan added ~35 ms of plan building to a ~0.13 s job)
+        u = F.col("_u")
+        rel = df.select(*shared, *obs, F.rand(seed).alias("_u"))
+        pdf = (
+            rel.filter(u < max(fracs[c] for c in shared))
+            .select(
+                *[
+                    F.when(u < fracs[c], F.col(c).cast("double")).alias(c)
+                    for c in shared
+                ],
+                *(["_obs"] if censor else []),
+            )
+            .toPandas()
+        )
+        drawn.update((c, pdf) for c in shared)
     out = {}
     for c in columns:
-        arr = pdf[c].to_numpy(dtype=np.float64)
-        arr = arr[np.isfinite(arr)]
-        if arr.size > target:
-            rng = np.random.default_rng(config.random_seed)
-            arr = rng.choice(arr, size=target, replace=False)
-        out[c] = arr
+        values = drawn[c][c].to_numpy(dtype=np.float64)
+        keep = np.isfinite(values)
+        if censor:
+            keep &= drawn[c]["_obs"].notna().to_numpy()
+        kept = np.flatnonzero(keep)
+        if kept.size > target:
+            rng = np.random.default_rng(seed)
+            kept = kept[rng.choice(kept.size, size=target, replace=False)]
+        out[c] = values[kept]
+        if censor:
+            out[c] = (out[c], drawn[c]["_obs"].to_numpy()[kept].astype(bool))
     return out
 
 
-def build_censored_sample(
-    df: DataFrame,
-    column: str,
-    censor_column: str,
-    config: FitterConfig,
-    total_count: int,
-):
-    """(values, observed_mask) fitting sample for survival fitting — the
-    value and its event indicator must travel together, so this samples
-    rows of both columns in one pass."""
-    clean = (
-        valid_column(df, column)
-        .filter(F.col(censor_column).isNotNull())
-        .select(F.col(column), F.col(censor_column).cast("boolean").alias("_obs"))
-    )
-    target = config.fitting_sample_size
-    if total_count <= target:
-        pdf = clean.toPandas()
-    else:
-        frac = min(1.0, (target * 1.3) / total_count)
-        pdf = (
-            clean.sample(fraction=frac, seed=config.random_seed)
-            .limit(target * 2)
-            .toPandas()
-        )
-    values = pdf[column].to_numpy(dtype=np.float64)
-    mask = pdf["_obs"].to_numpy(dtype=bool)
-    finite = np.isfinite(values)
-    values, mask = values[finite], mask[finite]
-    if values.size > target:
-        rng = np.random.default_rng(config.random_seed)
-        idx = rng.choice(values.size, size=target, replace=False)
-        values, mask = values[idx], mask[idx]
-    return values, mask
-
-
-def build_fitting_sample(
-    df: DataFrame,
-    column: str,
-    config: FitterConfig,
-    total_count: int,
+def truncate_group_sample(
+    arr: np.ndarray, target: int, seed: int, group
 ) -> np.ndarray:
-    """<= fitting_sample_size finite values as an ndarray on the driver
-    (reference base_fitter.py:681-700). One job; collects <= ~12k rows."""
-    clean = valid_column(df, column).select(column)
+    """Over-budget truncation for fit_grouped: value-sort the group's
+    rows (erasing Spark's collection order), then draw WITHOUT
+    replacement from a PER-GROUP generator seeded from (seed,
+    crc32(str(group))). The result depends only on the group's value
+    multiset and the seed — never on partitioning or iteration order."""
+    if arr.size <= target:
+        return arr
+    rng = np.random.default_rng(
+        [int(seed), zlib.crc32(str(group).encode("utf-8"))]
+    )
+    return rng.choice(np.sort(arr), size=target, replace=False)
+
+
+def grouped_samples(
+    clean: DataFrame, column: str, group_col: str, counts: dict, config
+) -> dict:
+    """Per-group fitting samples from ONE stratified ``sampleBy`` pass:
+    each group keeps :func:`sample_fraction` of its count, then the
+    deterministic per-group truncation."""
     target = config.fitting_sample_size
-    if total_count <= target:
-        pdf = clean.toPandas()
-    else:
-        # sample a bit more than needed, then truncate deterministically
-        frac = min(1.0, (target * 1.3) / total_count)
-        if total_count > config.sample_threshold and config.adaptive_sampling:
-            skew = pilot_skewness(df, column, config)
-            mode, n_bins = choose_sampling_mode(skew)
-            if mode == "stratified":
-                sampled = stratified_sample(
-                    valid_column(df, column), column, frac, config, n_bins
-                ).select(column)
-            else:
-                sampled = clean.sample(fraction=frac, seed=config.random_seed)
-        else:
-            sampled = clean.sample(fraction=frac, seed=config.random_seed)
-        pdf = sampled.limit(target * 2).toPandas()
-    arr = pdf[column].to_numpy(dtype=np.float64)
-    arr = arr[np.isfinite(arr)]
-    if arr.size > target:
-        rng = np.random.default_rng(config.random_seed)
-        arr = rng.choice(arr, size=target, replace=False)
-    return arr
+    fractions = {g: sample_fraction(target, n) for g, n in counts.items()}
+    pdf = (
+        clean.select(group_col, column)
+        .sampleBy(group_col, fractions, seed=config.random_seed)
+        .toPandas()
+    )
+    samples: dict = {}
+    for g, sub in pdf.groupby(group_col, sort=False):
+        arr = sub[column].to_numpy(dtype=np.float64)
+        samples[g] = truncate_group_sample(
+            arr[np.isfinite(arr)], target, config.random_seed, g
+        )
+    return samples
 
 
 def neyman_allocation(
@@ -226,9 +230,6 @@ def neyman_allocation(
     can undershoot ``total_n`` only when strata saturate (allocated =
     population).
     """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as _W
-
     if total_n < 1:
         raise ValueError("total_n must be >= 1")
     base = df.filter(
@@ -286,9 +287,6 @@ def neyman_sample(
     one per-stratum window; no driver loop). Returns the sampled rows
     with all input columns.
     """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as _W
-
     from spark_bestfit_spark.operators.curation import _knuth_u
 
     alloc = neyman_allocation(df, stratum_col, value_col, total_n)

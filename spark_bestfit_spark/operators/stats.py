@@ -3090,23 +3090,22 @@ def spearman_corr(
     if group_col:
         base = base.filter(F.col(group_col).isNotNull())
 
+    part = _W.partitionBy(*keys) if keys else _W.partitionBy(F.lit(1))
+
     def _ranked(col, tag):
         per = base.groupBy(*keys, F.col(col).alias(f"_v{tag}")).agg(
             F.count(F.lit(1)).alias(f"_c{tag}")
         )
-        w = (
-            (_W.partitionBy(*keys) if keys else _W.partitionBy(F.lit(1)))
-            .orderBy(f"_v{tag}")
-            .rowsBetween(_W.unboundedPreceding, 0)
-        )
+        w = part.orderBy(f"_v{tag}").rowsBetween(_W.unboundedPreceding, 0)
         return per.withColumn(
             f"_rk{tag}",
             F.sum(f"_c{tag}").over(w)
             - (F.col(f"_c{tag}") - 1) / 2.0,
-        )
+        ).withColumn(f"_nv{tag}", F.count(F.lit(1)).over(part))
+
     def _keyed(rel, tag):
         cols = [F.col(k).alias(f"_g{tag}{i}") for i, k in enumerate(keys)]
-        return rel.select(*cols, f"_v{tag}", f"_rk{tag}")
+        return rel.select(*cols, f"_v{tag}", f"_rk{tag}", f"_nv{tag}")
 
     rx = _keyed(_ranked(x_col, "x"), "x")
     ry = _keyed(_ranked(y_col, "y"), "y")
@@ -3117,9 +3116,16 @@ def spearman_corr(
         F.col(k) == F.col(f"_gy{i}") for i, k in enumerate(keys)
     ]
     joined = base.join(rx, on=cond_x).join(ry, on=cond_y)
+    # a constant column (one distinct value) has no rank variance: keep
+    # its group out of corr, whose streaming update would otherwise
+    # leave a round-off variance (a spurious rho) or divide by zero
+    varies = (F.col("_nvx") > 1) & (F.col("_nvy") > 1)
     return joined.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(F.corr("_rkx", "_rky"), 6).alias("rho"),
+        F.round(
+            F.corr(F.when(varies, F.col("_rkx")), F.when(varies, F.col("_rky"))),
+            6,
+        ).alias("rho"),
     )
 
 

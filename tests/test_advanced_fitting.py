@@ -348,23 +348,105 @@ class TestPrefilter:
         assert res.count() > 10
 
 
+@pytest.fixture(scope="module")
+def messy_df(spark):
+    """30k rows in 3 partitions: ``v`` normal with 5% NaN and ~8% nulls
+    (so its valid count is the lowest), ``w`` gamma, ``k`` Poisson
+    counts, ``obs`` an event flag."""
+    import pyspark.sql.functions as F
+
+    rng = np.random.default_rng(42)
+    n = 30_000
+    v = rng.normal(50, 10, n)
+    v[rng.random(n) < 0.05] = np.nan
+    pdf = pd.DataFrame({
+        "v": v, "w": rng.gamma(2.0, 3.0, n),
+        "k": rng.poisson(4.0, n).astype(float), "obs": rng.random(n) < 0.8,
+    })
+    df = spark.createDataFrame(pdf).withColumn(
+        "v", F.when(F.col("w") < 1.5, F.lit(None)).otherwise(F.col("v"))
+    )
+    df = df.repartition(3).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
 class TestSampleRecreation:
+    """SA5: with the cached samples gone, the lazy recreation redraws
+    each column with the fit's own sampler and valid count, so its
+    bytes equal the fit's sample."""
+
+    DISTS = ["norm", "gamma", "uniform"]
+
+    @staticmethod
+    def _assert_exact(res):
+        cached = {c: np.array(s, copy=True) for c, s in res._samples.items()}
+        assert cached
+        res._samples.clear()  # simulate losing the driver-side cache
+        for c, sample in cached.items():
+            assert res._get_sample(c).tobytes() == sample.tobytes(), c
+
     def test_lazy_metrics_after_sample_loss(self, spark):
-        """SA5: when the cached ndarray is gone, the sample is recreated
-        deterministically from the source relation (same df + seed)."""
         rng = np.random.default_rng(42)
         df = spark.createDataFrame(
             pd.DataFrame({"v": rng.normal(50, 10, 6000)})
         )
         res = DistributionFitter(spark).fit(
-            df, column="v", lazy_metrics=True,
-            distributions=["norm", "gamma", "uniform"],
+            df, column="v", lazy_metrics=True, distributions=self.DISTS,
         )
         with_cache = res.best(1, metric="ks_statistic")
-        res._samples.clear()  # simulate losing the driver-side cache
+        res._samples.clear()
+        res._sorted_samples.clear()
         recreated = res.best(1, metric="ks_statistic")
         assert recreated.distribution == with_cache.distribution
-        assert abs(recreated.ks_statistic - with_cache.ks_statistic) < 0.02
+        assert recreated.ks_statistic == with_cache.ks_statistic
+
+    def test_nan_and_null_column(self, spark, messy_df):
+        res = DistributionFitter(spark).fit(
+            messy_df, column="v", lazy_metrics=True,
+            distributions=self.DISTS,
+        )
+        self._assert_exact(res)
+
+    def test_unbalanced_multi_column(self, spark, messy_df):
+        res = DistributionFitter(spark).fit(
+            messy_df, columns=["v", "w"], lazy_metrics=True,
+            distributions=self.DISTS,
+        )
+        self._assert_exact(res)
+
+    def test_bounded_fit(self, spark, messy_df):
+        res = DistributionFitter(spark).fit(
+            messy_df, columns=["v", "w"], lazy_metrics=True,
+            distributions=self.DISTS, lower_bound=0.5, upper_bound=60.0,
+        )
+        self._assert_exact(res)
+
+    def test_censored_fit(self, spark, messy_df):
+        res = DistributionFitter(spark).fit(
+            messy_df, columns=["v", "w"], lazy_metrics=True,
+            distributions=["norm", "expon"], censoring_column="obs",
+        )
+        self._assert_exact(res)
+
+    def test_discrete_fit(self, spark, messy_df):
+        from spark_bestfit_spark.fitter import DiscreteDistributionFitter
+
+        res = DiscreteDistributionFitter(spark).fit(
+            messy_df, column="k", lazy_metrics=True,
+            distributions=["poisson", "geom"],
+        )
+        self._assert_exact(res)
+
+    def test_sample_independent_of_neighbours(self, spark, messy_df):
+        """A column's sample is sized from its own valid count, so it
+        is the same whether fitted alone or next to a sparser column."""
+        f = DistributionFitter(spark)
+        pair = f.fit(messy_df, columns=["v", "w"], distributions=["norm"])
+        for c in ("v", "w"):
+            alone = f.fit(messy_df, column=c, distributions=["norm"])
+            assert alone._samples[c].tobytes() == pair._samples[c].tobytes()
 
     def test_clear_error_without_source(self, spark):
         from spark_bestfit_spark.operators.fit import FIT_RESULT_SCHEMA
@@ -379,6 +461,121 @@ class TestSampleRecreation:
         )
         with pytest.raises(ValueError, match="no cached sample"):
             fr.best(1, metric="ks_statistic")
+
+
+class TestAdaptiveSampling:
+    """SA2/SA3: only a column above ``sample_threshold`` (with
+    ``adaptive_sampling`` on) pays for its own pilot-skewness job, and a
+    skewed one for its own strata jobs; every other column stays in the
+    one shared sample job."""
+
+    @staticmethod
+    def _spy(monkeypatch):
+        from spark_bestfit_spark.operators import sampling
+
+        calls = {"pilot": [], "strata": []}
+        pilot, strata = sampling.pilot_skewness, sampling.stratified_sample
+
+        def spy_pilot(df, column, config):
+            calls["pilot"].append(column)
+            return pilot(df, column, config)
+
+        def spy_strata(df, column, *args, **kwargs):
+            calls["strata"].append(column)
+            return strata(df, column, *args, **kwargs)
+
+        monkeypatch.setattr(sampling, "pilot_skewness", spy_pilot)
+        monkeypatch.setattr(sampling, "stratified_sample", spy_strata)
+        return calls
+
+    def test_nan_column_pilot_is_uniform(self, spark, monkeypatch):
+        """One NaN made the pilot skew NaN, which chose 'stratified'
+        for a symmetric column: the skew reads valid values only."""
+        from spark_bestfit_spark.operators.sampling import (
+            choose_sampling_mode,
+            pilot_skewness,
+        )
+        from spark_bestfit_spark.plans.config import FitterConfig
+
+        rng = np.random.default_rng(3)
+        n = 40_000
+        v = rng.normal(0.0, 1.0, n)
+        v[rng.random(n) < 0.05] = np.nan
+        df = spark.createDataFrame(pd.DataFrame({"v": v})).cache()
+        skew = pilot_skewness(df, "v", FitterConfig())
+        assert np.isfinite(skew)
+        assert choose_sampling_mode(skew) == ("uniform", 0)
+        calls = self._spy(monkeypatch)
+        DistributionFitter(spark).fit(
+            df, column="v", distributions=["norm"],
+            sample_threshold=20_000, fitting_sample_size=2_000,
+        )
+        assert calls == {"pilot": ["v"], "strata": []}
+        df.unpersist()
+
+    def test_only_column_above_threshold_is_stratified(
+        self, spark, monkeypatch
+    ):
+        rng = np.random.default_rng(5)
+        n = 30_000
+        sparse = rng.normal(5.0, 1.0, n)
+        sparse[rng.random(n) < 0.9] = np.nan  # ~3k valid: below threshold
+        df = spark.createDataFrame(pd.DataFrame({
+            "big": rng.lognormal(0.0, 1.0, n), "sparse": sparse,
+        })).repartition(3).cache()
+        df.count()
+        f = DistributionFitter(spark)
+        opts = dict(
+            distributions=["norm", "lognorm"], sample_threshold=10_000,
+            fitting_sample_size=1_000,
+        )
+        calls = self._spy(monkeypatch)
+        res = f.fit(df, columns=["big", "sparse"], lazy_metrics=True, **opts)
+        assert calls == {"pilot": ["big"], "strata": ["big"]}
+        # the neighbour stays in the shared job: its sample is the one
+        # a fit of it alone draws (which runs no pilot at all)
+        alone = f.fit(df, column="sparse", **opts)
+        assert calls["pilot"] == ["big"]
+        assert (
+            alone._samples["sparse"].tobytes()
+            == res._samples["sparse"].tobytes()
+        )
+        # the stratified sample is recreated exactly, by the same jobs
+        big = np.array(res._samples["big"], copy=True)
+        assert big.size == 1_000
+        res._samples.clear()
+        assert res._get_sample("big").tobytes() == big.tobytes()
+        assert calls["strata"] == ["big", "big"]
+        df.unpersist()
+
+
+class TestPartitionLayout:
+    def test_fit_within_target_is_layout_free(self, spark):
+        """Within the fitting sample a fit reads every valid value, so
+        the same rows in the same order give identical result rows
+        whether they sit in 1, 3 or 7 partitions. (Above the target the
+        sample is Spark's per-partition Bernoulli draw and they do
+        not.)"""
+        rng = np.random.default_rng(12)
+        pdf = pd.DataFrame({
+            "i": np.arange(4000), "a": rng.gamma(2.0, 3.0, 4000),
+            "b": rng.normal(10.0, 2.0, 4000),
+        })
+        fitter = DistributionFitter(spark)
+        outs = []
+        for parts in (1, 3, 7):
+            df = (
+                spark.createDataFrame(pdf)
+                .repartitionByRange(parts, "i")
+                .sortWithinPartitions("i")
+            )
+            assert df.rdd.getNumPartitions() == parts
+            res = fitter.fit(
+                df, columns=["a", "b"],
+                distributions=["norm", "gamma", "expon"],
+            )
+            outs.append(sorted(res._rows))
+        assert outs[0] == outs[1] == outs[2]
 
 
 class TestCustomDistributionFit:
@@ -625,24 +822,26 @@ class TestGroupedFitting:
         """The over-budget truncation must depend only on the group's
         value multiset + seed: shuffled/reversed inputs and different
         groupby appearance orders all yield the same sample."""
-        from spark_bestfit_spark.fitter import _truncate_group_sample
+        from spark_bestfit_spark.operators.sampling import (
+            truncate_group_sample,
+        )
 
         rng = np.random.default_rng(11)
         arr = rng.normal(0, 1, 5000)
-        base = _truncate_group_sample(arr, 500, 42, "a")
+        base = truncate_group_sample(arr, 500, 42, "a")
         assert base.size == 500
         shuffled = arr.copy()
         rng.shuffle(shuffled)
         for variant in (shuffled, arr[::-1].copy()):
-            out = _truncate_group_sample(variant, 500, 42, "a")
+            out = truncate_group_sample(variant, 500, 42, "a")
             np.testing.assert_array_equal(np.sort(out), np.sort(base))
         # different groups draw from independent streams
-        other = _truncate_group_sample(arr, 500, 42, "b")
+        other = truncate_group_sample(arr, 500, 42, "b")
         assert not np.array_equal(np.sort(other), np.sort(base))
         # under-budget arrays pass through untouched
         small = arr[:100]
         np.testing.assert_array_equal(
-            _truncate_group_sample(small, 500, 42, "a"), small
+            truncate_group_sample(small, 500, 42, "a"), small
         )
 
     def test_grouped_fit_stable_across_repartitionings(self, spark):

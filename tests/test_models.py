@@ -135,6 +135,30 @@ class TestSpearman:
                 assert abs(corr[i, j] - rho) <= 5e-7, (a, b)
                 assert corr[j, i] == corr[i, j]
 
+    @pytest.mark.parametrize("pair", [
+        ("a", "i"), ("a", "d"), ("i", "d"), ("i", "c"), ("a", "c"),
+        ("c", "d"),
+    ], ids="".join)
+    def test_sql_spearman_matches_average_rank_reference(self, edge_df,
+                                                         pair):
+        """The in-plan SQL Spearman against the pure-Python reference
+        (pairs without the ±inf column, which the SQL form drops): a
+        constant column gives a null rho, not a round-off residue."""
+        from spark_bestfit_spark.operators.stats import spearman_corr
+
+        rho = spearman_corr(edge_df, *pair).first()["rho"]
+        want = _reference_corr(list(pair), "spearman")[0, 1]
+        if math.isnan(want):
+            assert rho is None
+        else:
+            assert rho == pytest.approx(round(want, 6), abs=1e-12)
+
+    def test_sql_spearman_constant_column_is_null(self, corr_df):
+        from spark_bestfit_spark.operators.stats import spearman_corr
+
+        df = corr_df.selectExpr("round(x, 0) AS x", "1.5 AS k")
+        assert spearman_corr(df, "x", "k").first()["rho"] is None
+
     @pytest.mark.parametrize("rows", [
         [(1.0, 2.0)], [(1.0, None), (2.0, None)], [(1.0, float("nan"))],
     ], ids=["one_row", "all_null_column", "nan_only"])

@@ -243,10 +243,9 @@ class TestJobCount:
         df.unpersist()
 
     def test_censored_fit_plans_all_columns_together(self, spark):
-        """A censored fit runs one stats job and one histogram job for
-        all its columns; only the censored samples (value + event mask)
-        are collected per column, so 3 columns cost at most 4 more
-        jobs than 1 (two more sample collects, plus AQE slack)."""
+        """A censored fit runs one stats job, one histogram job and one
+        sample job (values with their event masks) for all its columns,
+        so 1, 2 and 4 columns cost the same number of jobs."""
         import numpy as np
         import pandas as pd
 
@@ -256,7 +255,8 @@ class TestJobCount:
         n = 20_000
         df = spark.createDataFrame(pd.DataFrame({
             "a": rng.gamma(2.0, 3.0, n), "b": rng.normal(10.0, 2.0, n),
-            "c": rng.exponential(4.0, n), "obs": rng.random(n) < 0.8,
+            "c": rng.exponential(4.0, n), "d": rng.normal(0.0, 1.0, n),
+            "obs": rng.random(n) < 0.8,
         })).repartition(4).cache()
         df.count()
         fitter = DistributionFitter(spark)
@@ -268,9 +268,50 @@ class TestJobCount:
             ).count()
 
         fit(["a"])()  # warm codegen/broadcast paths
+        jobs = [
+            self._jobs_during(spark, fit(cols))
+            for cols in (["a"], ["a", "b"], ["a", "b", "c", "d"])
+        ]
+        assert jobs[0] == jobs[1] == jobs[2], jobs
+        df.unpersist()
+
+    def test_fit_within_target_runs_no_sample_job(self, spark, monkeypatch):
+        """A relation within the fitting sample is read by the limit
+        probe, so the fit calls no sampler. With the raced stats job
+        and the results collect that is at most 4 jobs (the probe may
+        scan its partitions in two rounds), for 1 column as for 3."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark import fitter as fitter_mod
+        from spark_bestfit_spark.fitter import DistributionFitter
+
+        sampled = []
+        monkeypatch.setattr(
+            fitter_mod, "build_fitting_samples_multi",
+            lambda *args, **kwargs: sampled.append(args),
+        )
+
+        rng = np.random.default_rng(9)
+        n = 5_000
+        df = spark.createDataFrame(pd.DataFrame({
+            "a": rng.gamma(2.0, 3.0, n), "b": rng.normal(10.0, 2.0, n),
+            "c": rng.exponential(4.0, n),
+        })).repartition(4).cache()
+        df.count()
+        fitter = DistributionFitter(spark)
+
+        def fit(cols):
+            return lambda: fitter.fit(
+                df, columns=cols, distributions=["norm", "expon"],
+                lazy_metrics=True,
+            ).count()
+
+        fit(["a"])()  # warm codegen/broadcast paths
         j1 = self._jobs_during(spark, fit(["a"]))
         j3 = self._jobs_during(spark, fit(["a", "b", "c"]))
-        assert j3 <= j1 + 4, (j1, j3)
+        assert j1 <= 4 and j3 <= 4, (j1, j3)
+        assert not sampled
         df.unpersist()
 
     def test_prelude_jobs_stay_in_callers_job_group(self, spark):
