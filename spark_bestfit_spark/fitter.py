@@ -9,7 +9,7 @@ Query lifecycle per fit (all columns batched):
 5. fan-out (mapInPandas), collected once        — wave 3
 
 Waves 1 and 2 each run two independent Spark jobs, one of them from a
-helper driver thread (``_start``), so the prelude costs two job
+helper driver thread (``start_job``), so the prelude costs two job
 latencies, not four. The helper thread inherits the caller's job group,
 description and tags, so the racing jobs are attributed to the caller
 like inline ones. Everything the executors need is broadcast (~KBs), so
@@ -30,12 +30,11 @@ call.
 from __future__ import annotations
 
 import warnings
-from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import nullcontext
+from functools import partial
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import NumericType
 
@@ -67,6 +66,7 @@ from spark_bestfit_spark.operators.stats import (
 from spark_bestfit_spark.plans.config import FitterConfig
 from spark_bestfit_spark.progress import ProgressTracker
 from spark_bestfit_spark.results import FitResults
+from spark_bestfit_spark.session import start_job
 
 # P7 prefilter (reference continuous_fitter.py:966-1063 semantics):
 # filter on intrinsic SHAPE properties only — never on support bounds,
@@ -143,22 +143,19 @@ def _ensure_spark_df(spark: SparkSession, df):
     )
 
 
-def _start(spark: SparkSession, fn, *args, **kwargs) -> Future:
-    """Run ``fn(*args, **kwargs)`` on its own driver thread and return
-    its Future — the one way the fitters race two prelude jobs (Spark
-    schedules jobs from separate driver threads in parallel). The
-    thread inherits the caller's local properties (job group,
-    description, tags), so its jobs are attributed to the caller's
-    group exactly like jobs submitted inline. Exceptions surface from
-    ``.result()``."""
-    inherit = inheritable_thread_target(spark)
-    # pyspark hands back the session itself when pinned-thread mode is
-    # off: there are then no per-thread properties to carry over
-    target = fn if inherit is spark else inherit(fn)
-    pool = ThreadPoolExecutor(max_workers=1)
-    future = pool.submit(target, *args, **kwargs)
-    pool.shutdown(wait=False)
-    return future
+def _recreate_sample(
+    src: DataFrame, config, counts: dict, censor, discrete: bool, column
+) -> np.ndarray:
+    """One column's fitting sample drawn again by the fit's own sampler
+    call; results hold it as a ``partial`` over the fit's arguments. A
+    censored sample drops its event mask; a discrete one is floored
+    like the discrete fit's."""
+    sample = build_fitting_samples_multi(
+        src, [column], config, counts, censor=censor
+    )[column]
+    if censor:
+        sample = sample[0]
+    return np.floor(sample) if discrete else sample
 
 
 def _merge_config(config: FitterConfig | None, overrides: dict):
@@ -396,7 +393,7 @@ class DistributionFitter(_Fitter):
         # the complete data — stats, histograms, and samples all derive
         # from it driver-side and the fit needs no further scan.
         #
-        # prelude jobs run CONCURRENTLY (_start): probe races the stats
+        # prelude jobs run CONCURRENTLY (start_job): probe races the stats
         # aggregation, then the sample collect races the histogram —
         # 5 sequential job latencies become 3. The stats job is wasted
         # only when the probe comes back small, i.e. when the relation
@@ -405,7 +402,7 @@ class DistributionFitter(_Fitter):
         # early is pure wall-clock win. Results are unchanged (same
         # seeds, same plans) — only the submission order differs.
         probe_rows = config.fitting_sample_size + 1
-        stats_future = _start(self.spark, multi_column_stats, src, cols)
+        stats_future = start_job(self.spark, multi_column_stats, src, cols)
         probe = src.select(*cols).limit(probe_rows).toPandas()
         sample_map = None
         if len(probe) < probe_rows:
@@ -443,7 +440,7 @@ class DistributionFitter(_Fitter):
             # sample collect and histogram agg are independent given the
             # stats — run them as concurrent Spark jobs (second prelude
             # fusion; wall-clock = max of the two, not the sum)
-            hist_future = None if all_small else _start(
+            hist_future = None if all_small else start_job(
                 self.spark, compute_histograms_multi, src, live_cols,
                 all_stats, config.bins, config.use_rice_rule,
             )
@@ -482,7 +479,8 @@ class DistributionFitter(_Fitter):
         if not plans:
             return self._empty_results()
         return self._fan_out(
-            plans, samples, config, bounds, (src, config, counts, False)
+            plans, samples, config, bounds,
+            partial(_recreate_sample, src, config, counts, None, False),
         )
 
     def _plan(self, sample, histogram, distributions, config) -> dict:
@@ -668,7 +666,7 @@ class DistributionFitter(_Fitter):
         # the sample pass and the histogram scan are independent given
         # the stats — race them (same prelude fusion as fit():
         # wall-clock = max of the two job latencies, not the sum)
-        hist_future = _start(
+        hist_future = start_job(
             self.spark, compute_histograms_grouped, clean, column,
             group_col, gstats, config.bins, config.use_rice_rule,
         )
@@ -706,7 +704,7 @@ class DistributionFitter(_Fitter):
         if not live_cols:
             return self._empty_results()
         counts = {c: int(all_stats[c]["count"]) for c in live_cols}
-        hist_future = _start(
+        hist_future = start_job(
             self.spark, compute_histograms_multi, src, live_cols,
             all_stats, config.bins, config.use_rice_rule,
         )
@@ -727,7 +725,11 @@ class DistributionFitter(_Fitter):
         if not plans:
             return self._empty_results()
         return self._fan_out(
-            plans, samples, config, bounds, (src, config, counts, False)
+            plans, samples, config, bounds,
+            partial(
+                _recreate_sample, src, config, counts,
+                config.censoring_column, False,
+            ),
         )
 
 
@@ -781,9 +783,9 @@ class DiscreteDistributionFitter(_Fitter):
         # all columns in one scan, PMFs in one stacked groupBy, samples
         # in one collect, one (column, distribution) fan-out. The PMF
         # groupBy doesn't depend on the stats, so the two jobs race
-        # (_start, same prelude fusion as the continuous path); only
+        # (start_job, same prelude fusion as the continuous path); only
         # the sample collect needs the counts.
-        pmfs_future = _start(self.spark, empirical_pmfs_multi, df, cols)
+        pmfs_future = start_job(self.spark, empirical_pmfs_multi, df, cols)
         all_stats = multi_column_stats(df, cols)
         live_cols = [c for c in cols if all_stats[c]["count"] > 0]
         if not live_cols:
@@ -812,7 +814,10 @@ class DiscreteDistributionFitter(_Fitter):
             }
         if not plans:
             return self._empty_results()
-        return self._fan_out(plans, samples, config, (df, config, counts, True))
+        return self._fan_out(
+            plans, samples, config,
+            partial(_recreate_sample, df, config, counts, None, True),
+        )
 
     def fit_grouped(
         self,
@@ -853,7 +858,7 @@ class DiscreteDistributionFitter(_Fitter):
         gcounts = {r[group_col]: int(r["n"]) for r in counts}
         # the PMF aggregation and the sample pass are independent given
         # the counts — race them like the continuous fit_grouped
-        pmfs_future = _start(
+        pmfs_future = start_job(
             self.spark, grouped_pmfs, clean, column, group_col, gcounts
         )
         samples_by_group = grouped_samples(

@@ -6,10 +6,12 @@ the same sample (SA5). ONE job draws one ``rand(seed)`` per row; each
 column keeps its valid values whose draw is below its own
 :func:`sample_fraction` (~1.3x the target, from its own valid count, so
 no column's sample depends on its neighbours). ``rand(seed) < frac``
-keeps exactly the rows ``sample(frac, seed)`` keeps. Only a column above
-``sample_threshold`` pays for its own pilot-skewness job, and a skewed
-one for its own stratified ``sampleBy`` (approxQuantile strata, boosted
-tails). The driver truncates each column to the target with
+keeps exactly the rows ``sample(frac, seed)`` keeps. The job filters to
+rows that some column keeps, so it collects ~1.3x the target per column
+however sparse a column is. Only a column above ``sample_threshold``
+pays for its own pilot-skewness job, and a skewed one for its own
+stratified ``sampleBy`` (approxQuantile strata, boosted tails); those
+jobs run concurrently. The driver truncates each column to the target with
 ``default_rng(seed)``. Grouped fits draw all groups in one ``sampleBy``
 pass under the same fraction rule, truncated per group by value.
 """
@@ -23,8 +25,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as _W
 
-from spark_bestfit_spark.operators.stats import valid_column
+from spark_bestfit_spark.operators.stats import (
+    quote,
+    valid_column,
+    valid_sql,
+)
 from spark_bestfit_spark.plans.config import FitterConfig
+from spark_bestfit_spark.session import start_job
 
 SKEW_STRATIFIED = 0.5
 SKEW_MORE_BINS = 2.0
@@ -37,19 +44,13 @@ def sample_fraction(target: int, count: int) -> float:
 
 
 def pilot_skewness(df: DataFrame, column: str, config: FitterConfig) -> float:
-    """Skewness of the valid values in a small pilot sample — one cheap
-    job (reference base_fitter.py:311-364 collects <= 5k rows; we use
-    the distributed aggregate on a sampled fraction instead, nothing is
-    collected). Invalid values are dropped first: one NaN would make
-    the skew NaN."""
-    # a fixed small fraction is fine for a pilot — skew estimate only
-    row = (
-        valid_column(df.sample(fraction=0.01, seed=config.random_seed), column)
-        .agg(F.skewness(column).alias("skew"))
-        .first()
-    )
-    val = row["skew"]
-    return float(val) if val is not None else 0.0
+    """Skewness of the valid values in a 1% pilot sample: one cheap
+    aggregate job, nothing collected (reference base_fitter.py:311-364
+    collects <= 5k rows). Invalid values go first: one NaN makes the
+    skew NaN."""
+    pilot = df.sample(fraction=0.01, seed=config.random_seed)
+    skew = valid_column(pilot, column).agg(F.skewness(column)).first()[0]
+    return float(skew) if skew is not None else 0.0
 
 
 def choose_sampling_mode(skew: float) -> tuple:
@@ -65,37 +66,30 @@ def stratified_sample(
     fraction: float,
     config: FitterConfig,
     n_strata: int = 5,
-) -> DataFrame:
+    carry: list = (),
+):
     """Quantile-bucketed ``sampleBy`` with tail boost (reference
-    base_fitter.py:388-477)."""
+    base_fitter.py:388-477) over ``column``'s valid rows: a sparse
+    stratum keeps at least ``tail_min_rows`` rows. Collects the column
+    as double next to the ``carry`` columns."""
+    df = valid_column(df, column)
     probs = list(np.linspace(0.0, 1.0, n_strata + 1))
     splits = sorted(set(df.approxQuantile(column, probs, 0.01)))
     if len(splits) < 3:
-        return df.sample(fraction=fraction, seed=config.random_seed)
-    lo, hi = splits[0], splits[-1]
-    eps = (hi - lo) * 1e-10 if hi > lo else 1.0
-    n_buckets = len(splits) - 1
-    bucketed = df.withColumn(
-        "_stratum",
-        F.width_bucket(F.col(column), F.lit(lo), F.lit(hi + eps), F.lit(n_buckets)),
-    )
-    counts = {
-        r["_stratum"]: r["cnt"]
-        for r in bucketed.groupBy("_stratum").agg(F.count("*").alias("cnt")).collect()
-    }
-    fractions = {}
-    for b, cnt in counts.items():
-        if b is None:
-            continue
-        f_b = fraction
-        # boost sparse tail strata so each contributes >= tail_min_rows
-        if cnt * f_b < config.tail_min_rows:
-            f_b = min(1.0, config.tail_min_rows / max(cnt, 1))
-        fractions[b] = f_b
-    sampled = bucketed.stat.sampleBy(
-        "_stratum", fractions=fractions, seed=config.random_seed
-    )
-    return sampled.drop("_stratum")
+        rel = df.sample(fraction=fraction, seed=config.random_seed)
+    else:
+        lo, hi = splits[0], splits[-1]
+        df = df.withColumn("_stratum", F.width_bucket(
+            F.col(column), F.lit(lo), F.lit(hi + (hi - lo) * 1e-10),
+            F.lit(len(splits) - 1),
+        ))
+        fractions = {
+            b: max(fraction, min(1.0, config.tail_min_rows / n))
+            for b, n in df.groupBy("_stratum").count().collect()
+            if b is not None
+        }
+        rel = df.stat.sampleBy("_stratum", fractions, config.random_seed)
+    return rel.select(F.col(column).cast("double"), *carry).toPandas()
 
 
 def build_fitting_samples_multi(
@@ -110,48 +104,54 @@ def build_fitting_samples_multi(
 
     ``counts`` holds each column's valid count. Every row draws one
     ``rand(seed)``; a column keeps its valid values whose draw is below
-    its own :func:`sample_fraction`, then the driver truncates it to
-    ``fitting_sample_size``. Returns ``{column: values}``. With
+    its own :func:`sample_fraction`, and only rows some column keeps
+    are collected. The driver truncates each column to
+    ``fitting_sample_size``. Returns ``{column: values}``; with
     ``censor`` (a boolean/integer event column) a column keeps only
-    rows whose event is known and the result is ``{column: (values,
-    observed_mask)}``: the value and its event travel together."""
+    rows whose event is known, as ``{column: (values, observed)}``."""
     target, seed = config.fitting_sample_size, config.random_seed
     fracs = {c: sample_fraction(target, counts[c]) for c in columns}
     obs = [F.col(censor).cast("boolean").alias("_obs")] if censor else []
-    floor = max(config.sample_threshold, target)
-    drawn, shared = {}, []
-    for c in columns:
-        # only a column above the threshold pays for pilot/strata jobs
-        n_strata = 0
-        if config.adaptive_sampling and counts[c] > floor:
-            n_strata = choose_sampling_mode(pilot_skewness(df, c, config))[1]
+    spark, floor = df.sparkSession, max(config.sample_threshold, target)
+    # only a column above the threshold pays for pilot/strata jobs: the
+    # pilots run concurrently, then the strata jobs beside the shared one
+    pilots = {
+        c: start_job(spark, pilot_skewness, df, c, config)
+        for c in columns
+        if config.adaptive_sampling and counts[c] > floor
+    }
+    own = {}
+    for c, pilot in pilots.items():
+        n_strata = choose_sampling_mode(pilot.result())[1]
         if n_strata:
-            rel = stratified_sample(
-                valid_column(df, c), c, fracs[c], config, n_strata
+            own[c] = start_job(
+                spark, stratified_sample, df, c, fracs[c], config,
+                n_strata, obs,
             )
-            drawn[c] = rel.select(
-                F.col(c).cast("double").alias(c), *obs
-            ).toPandas()
-        else:
-            shared.append(c)
+    shared = [c for c in columns if c not in own]
+    drawn = {}
     if shared:
-        # a column keeps the rows drawn below its own fraction; invalid
-        # values and unknown events drop on the driver (validity tests
-        # in the plan added ~35 ms of plan building to a ~0.13 s job)
-        u = F.col("_u")
-        rel = df.select(*shared, *obs, F.rand(seed).alias("_u"))
+        # SQL strings keep plan building to a few calls
+        known = " AND _obs IS NOT NULL" if censor else ""
+        rule = {
+            c: f"_u < {fracs[c]!r}D AND {valid_sql(df, c)}{known}"
+            for c in shared
+        }
         pdf = (
-            rel.filter(u < max(fracs[c] for c in shared))
-            .select(
+            df.select(*shared, *obs, F.rand(seed).alias("_u"))
+            .filter(" OR ".join(f"({r})" for r in rule.values()))
+            .selectExpr(
                 *[
-                    F.when(u < fracs[c], F.col(c).cast("double")).alias(c)
-                    for c in shared
+                    f"CASE WHEN {r} THEN CAST({quote(c)} AS DOUBLE) END"
+                    f" AS {quote(c)}"
+                    for c, r in rule.items()
                 ],
                 *(["_obs"] if censor else []),
             )
             .toPandas()
         )
         drawn.update((c, pdf) for c in shared)
+    drawn.update((c, future.result()) for c, future in own.items())
     out = {}
     for c in columns:
         values = drawn[c][c].to_numpy(dtype=np.float64)

@@ -12,16 +12,30 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def valid_cond(df: DataFrame, column: str):
-    """The valid-value predicate: non-null, non-NaN and finite (reference
-    P6 cleaning: backends/local.py:273-277). The one definition every
-    stats, histogram, PMF and sample pass filters with."""
-    c = F.col(column)
-    cond = c.isNotNull()
+def quote(column: str) -> str:
+    """``column`` as a SQL identifier (backquoted, inner backquotes
+    doubled), for predicates built as one SQL string."""
+    return "`" + column.replace("`", "``") + "`"
+
+
+def valid_sql(df: DataFrame, column: str) -> str:
+    """The valid-value predicate as SQL: non-null, non-NaN and finite
+    (reference P6 cleaning: backends/local.py:273-277). The one
+    definition every stats, histogram, PMF and sample pass filters
+    with; a string so that a sampler can fold many columns' predicates
+    into one expression, parsed once."""
+    c = quote(column)
+    cond = f"{c} IS NOT NULL"
     # isnan only applies to float/double columns
     if dict(df.dtypes)[column] in ("float", "double"):
-        cond = cond & ~F.isnan(c) & (F.abs(c) != float("inf"))
+        inf = "CAST('Infinity' AS DOUBLE)"
+        cond += f" AND NOT isnan({c}) AND abs({c}) != {inf}"
     return cond
+
+
+def valid_cond(df: DataFrame, column: str):
+    """:func:`valid_sql` as a Column."""
+    return F.expr(valid_sql(df, column))
 
 
 def valid_column(df: DataFrame, column: str):

@@ -288,7 +288,7 @@ class FitResults:
         df: DataFrame,
         registry: DistributionRegistry | None = None,
         samples: dict | None = None,
-        source: tuple | None = None,
+        source=None,
     ):
         # the results' one Spark action: every query reads this snapshot
         self._rows = tuple(
@@ -302,9 +302,9 @@ class FitResults:
         self._registry = registry or DistributionRegistry()
         self._samples = samples or {}
         self._sorted_samples: dict = {}
-        # (source DataFrame, FitterConfig, {column: valid count},
-        # discrete) for exact sample recreation (reference SA5: same
-        # df + seed => same sample)
+        # column -> that column's fitting sample, drawn again by the
+        # fit's own sampler call (reference SA5: same df + seed => same
+        # sample)
         self._source = source
 
     def _view(self, rows) -> "FitResults":
@@ -383,9 +383,8 @@ class FitResults:
     def _get_sample(self, column: str):
         """Cached fitting sample, or its recreation from the source
         relation (same df + seed => same sample, reference
-        SA5/collection.py:173-228): the fit's own sampler, called for
-        this one column with the fit's count, redraws exactly the fit's
-        sample."""
+        SA5/collection.py:173-228): the fit's own sampler call, made
+        for this one column, redraws exactly the fit's sample."""
         sample = self._samples.get(column)
         if sample is not None:
             return sample
@@ -396,21 +395,8 @@ class FitResults:
                 "fit's sample (refit with lazy_metrics=False or keep "
                 "the results object)"
             )
-        src_df, config, counts, discrete = self._source
         try:
-            from spark_bestfit_spark.operators.sampling import (
-                build_fitting_samples_multi,
-            )
-
-            censor = config.censoring_column
-            sample = build_fitting_samples_multi(
-                src_df, [column], config, {column: counts[column]},
-                censor=censor,
-            )[column]
-            if censor:
-                sample = sample[0]
-            if discrete:
-                sample = np.floor(sample)
+            sample = self._source(column)
         except Exception as exc:  # noqa: BLE001
             raise ValueError(
                 f"could not recreate the fitting sample for {column!r} "

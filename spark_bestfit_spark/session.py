@@ -9,8 +9,10 @@ pandas-UDF closures that reference this package resolve by import.
 from __future__ import annotations
 
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 _REPO_ROOT = str(Path(__file__).resolve().parent.parent)
@@ -27,6 +29,24 @@ def _export_pythonpath() -> None:
         os.environ["PYTHONPATH"] = (
             _REPO_ROOT + (os.pathsep + existing if existing else "")
         )
+
+
+def start_job(spark: SparkSession, fn, *args, **kwargs) -> Future:
+    """Run ``fn(*args, **kwargs)`` on its own driver thread and return
+    its Future — the one way the fitters and samplers race independent
+    jobs (Spark schedules jobs from separate driver threads in
+    parallel). The thread inherits the caller's local properties (job
+    group, description, tags), so its jobs are attributed to the
+    caller's group exactly like jobs submitted inline. Exceptions
+    surface from ``.result()``."""
+    inherit = inheritable_thread_target(spark)
+    # pyspark hands back the session itself when pinned-thread mode is
+    # off: there are then no per-thread properties to carry over
+    target = fn if inherit is spark else inherit(fn)
+    pool = ThreadPoolExecutor(max_workers=1)
+    future = pool.submit(target, *args, **kwargs)
+    pool.shutdown(wait=False)
+    return future
 
 
 def get_spark(

@@ -439,6 +439,23 @@ class TestSampleRecreation:
         )
         self._assert_exact(res)
 
+    def test_discrete_fit_ignores_censoring(self, spark, messy_df):
+        """A discrete fit samples without the censoring column, so its
+        recreation must too: ``ev`` has unknown events, which a
+        censored draw would drop."""
+        import pyspark.sql.functions as F
+
+        from spark_bestfit_spark.fitter import DiscreteDistributionFitter
+
+        df = messy_df.withColumn(
+            "ev", F.when(F.col("w") > 8.0, None).otherwise(F.col("obs"))
+        )
+        res = DiscreteDistributionFitter(spark).fit(
+            df, column="k", lazy_metrics=True,
+            distributions=["poisson", "geom"], censoring_column="ev",
+        )
+        self._assert_exact(res)
+
     def test_sample_independent_of_neighbours(self, spark, messy_df):
         """A column's sample is sized from its own valid count, so it
         is the same whether fitted alone or next to a sparser column."""
@@ -461,6 +478,47 @@ class TestSampleRecreation:
         )
         with pytest.raises(ValueError, match="no cached sample"):
             fr.best(1, metric="ks_statistic")
+
+
+class TestSampleCollect:
+    def test_sparse_column_bounds_the_collect(self, spark, monkeypatch):
+        """A column with 0.1% valid values keeps every row it has, but
+        the rows of the dense column next to it are not collected for
+        it: the job's filter keeps only rows some column keeps, so the
+        collect stays near 1.3x the target per column."""
+        import pyspark.sql.functions as F
+
+        from spark_bestfit_spark.operators.sampling import (
+            build_fitting_samples_multi,
+        )
+        from spark_bestfit_spark.operators.stats import multi_column_stats
+        from spark_bestfit_spark.plans.config import FitterConfig
+
+        n, target = 100_000, 1_000
+        df = spark.range(n).select(
+            F.randn(1).alias("dense"),
+            F.when(F.col("id") % 1000 == 0, F.randn(2)).alias("sparse"),
+        )
+        stats = multi_column_stats(df, ["dense", "sparse"])
+        counts = {c: int(s["count"]) for c, s in stats.items()}
+        assert counts == {"dense": n, "sparse": n // 1000}
+        collected = []
+        to_pandas = type(df).toPandas
+
+        def spy(self):
+            pdf = to_pandas(self)
+            collected.append(len(pdf))
+            return pdf
+
+        monkeypatch.setattr(type(df), "toPandas", spy)
+        out = build_fitting_samples_multi(
+            df, ["dense", "sparse"],
+            FitterConfig(fitting_sample_size=target), counts,
+        )
+        assert out["dense"].size == target
+        assert out["sparse"].size == n // 1000
+        assert len(collected) == 1
+        assert collected[0] < 1.3 * target * 1.2 + n // 1000
 
 
 class TestAdaptiveSampling:

@@ -455,13 +455,13 @@ class TestJobCount:
         df.unpersist()
 
     def test_start_reraises_from_result(self, spark):
-        from spark_bestfit_spark.fitter import _start
+        from spark_bestfit_spark.session import start_job
 
         def boom(x):
             raise RuntimeError(f"boom {x}")
 
         with pytest.raises(RuntimeError, match="boom 7"):
-            _start(spark, boom, 7).result()
+            start_job(spark, boom, 7).result()
 
 
 class TestRound5PlanShapes:
