@@ -18,6 +18,8 @@ the fit cost is independent of table size beyond the scan.
 A censored fit has no probe: one stats job for all columns, then one
 histogram job for all columns raced against one sample job for all
 columns (each value travels with its event mask), then the same fan-out.
+A discrete fit's prelude is the one PMF job: its sample comes from the
+value counts on the driver.
 
 Every binning rule — equi-width edges, density, empirical PMF — comes
 from ``operators/histogram.py``, and every sampling rule from
@@ -57,7 +59,9 @@ from spark_bestfit_spark.operators.histogram import (
 )
 from spark_bestfit_spark.operators.sampling import (
     build_fitting_samples_multi,
+    group_rng,
     grouped_samples,
+    sample_from_counts,
 )
 from spark_bestfit_spark.operators.stats import (
     multi_column_stats,
@@ -144,18 +148,26 @@ def _ensure_spark_df(spark: SparkSession, df):
 
 
 def _recreate_sample(
-    src: DataFrame, config, counts: dict, censor, discrete: bool, column
+    src: DataFrame, config, counts: dict, censor, column
 ) -> np.ndarray:
     """One column's fitting sample drawn again by the fit's own sampler
     call; results hold it as a ``partial`` over the fit's arguments. A
-    censored sample drops its event mask; a discrete one is floored
-    like the discrete fit's."""
+    censored sample drops its event mask."""
     sample = build_fitting_samples_multi(
         src, [column], config, counts, censor=censor
     )[column]
-    if censor:
-        sample = sample[0]
-    return np.floor(sample) if discrete else sample
+    return sample[0] if censor else sample
+
+
+def _counts_sample(pmfs: dict, config, column) -> np.ndarray:
+    """A discrete column's fitting sample, from its value counts and
+    the seed alone: the discrete fit draws it, and results hold it as a
+    ``partial`` over the kept counts, so recreating it runs no job."""
+    x_values, _, counts = pmfs[column]
+    return sample_from_counts(
+        x_values, counts, config.fitting_sample_size,
+        np.random.default_rng(config.random_seed),
+    )
 
 
 def _merge_config(config: FitterConfig | None, overrides: dict):
@@ -480,7 +492,7 @@ class DistributionFitter(_Fitter):
             return self._empty_results()
         return self._fan_out(
             plans, samples, config, bounds,
-            partial(_recreate_sample, src, config, counts, None, False),
+            partial(_recreate_sample, src, config, counts, None),
         )
 
     def _plan(self, sample, histogram, distributions, config) -> dict:
@@ -728,7 +740,7 @@ class DistributionFitter(_Fitter):
             plans, samples, config, bounds,
             partial(
                 _recreate_sample, src, config, counts,
-                config.censoring_column, False,
+                config.censoring_column,
             ),
         )
 
@@ -745,18 +757,31 @@ class DiscreteDistributionFitter(_Fitter):
             names = names[: config.max_distributions]
         return names
 
-    def _fan_out(self, plans: dict, samples: dict, config, source=None):
-        """ONE (column, distribution) fan-out over the planned columns,
-        collected into the results snapshot."""
+    def _fan_out(self, drawn: dict, distributions, config, source=None):
+        """ONE (key, distribution) fan-out over the ``drawn`` keys
+        ``{key: ((x_values, pmf, counts), sample)}`` whose sample holds
+        at least two values, collected into the results snapshot."""
         from spark_bestfit_spark.operators.discrete_fit import (
             parallel_fit_discrete_columns,
         )
 
+        names = distributions or self._select_distributions(config)
+        plans = {
+            key: {
+                "names": list(names), "sample": sample,
+                "x_values": x_values, "pmf": pmf,
+            }
+            for key, ((x_values, pmf, _), sample) in drawn.items()
+            if sample.size >= 2
+        }
+        if not plans:
+            return self._empty_results()
         broadcasts: list = []
         result_df = parallel_fit_discrete_columns(
             self.spark, plans, config, self.registry,
             broadcast_registry=broadcasts,
         )
+        samples = {key: p["sample"] for key, p in plans.items()}
         return self._results(
             result_df, plans, samples, config, broadcasts, source
         )
@@ -770,6 +795,9 @@ class DiscreteDistributionFitter(_Fitter):
         config: FitterConfig | None = None,
         **kwargs,
     ) -> FitResults:
+        """Fit the discrete library to integer-valued columns. The
+        prelude is ONE job, the stacked PMF aggregation: each column's
+        fitting sample is drawn from its value counts on the driver."""
         if column is None and columns is None:
             raise ValueError("provide column= or columns=")
         df = _ensure_spark_df(self.spark, df)
@@ -778,45 +806,11 @@ class DiscreteDistributionFitter(_Fitter):
         _check_numeric(df, cols)
         if distributions:
             self._validate_names(distributions)
-
-        # batched planning, mirroring the continuous fitter: stats for
-        # all columns in one scan, PMFs in one stacked groupBy, samples
-        # in one collect, one (column, distribution) fan-out. The PMF
-        # groupBy doesn't depend on the stats, so the two jobs race
-        # (start_job, same prelude fusion as the continuous path); only
-        # the sample collect needs the counts.
-        pmfs_future = start_job(self.spark, empirical_pmfs_multi, df, cols)
-        all_stats = multi_column_stats(df, cols)
-        live_cols = [c for c in cols if all_stats[c]["count"] > 0]
-        if not live_cols:
-            return self._empty_results()
-        counts = {c: int(all_stats[c]["count"]) for c in live_cols}
-        sample_map = build_fitting_samples_multi(df, live_cols, config, counts)
-        pmfs = pmfs_future.result()
-
-        names = distributions or self._select_distributions(config)
-        plans: dict = {}
-        samples: dict = {}
-        for c in live_cols:
-            x_values, pmf = pmfs[c]
-            sample = sample_map.get(c)
-            if x_values.size == 0 or sample is None:
-                continue
-            sample = np.floor(sample)
-            if sample.size < 2:
-                continue
-            samples[c] = sample
-            plans[c] = {
-                "names": list(names),
-                "sample": sample,
-                "x_values": x_values,
-                "pmf": pmf,
-            }
-        if not plans:
-            return self._empty_results()
+        pmfs = empirical_pmfs_multi(df, cols)
+        draw = partial(_counts_sample, pmfs, config)
         return self._fan_out(
-            plans, samples, config,
-            partial(_recreate_sample, df, config, counts, None, True),
+            {c: (pmfs[c], draw(c)) for c in cols}, distributions, config,
+            draw,
         )
 
     def fit_grouped(
@@ -837,11 +831,9 @@ class DiscreteDistributionFitter(_Fitter):
           guard, null groups excluded);
         - per-group empirical PMFs: ONE (group, floored-value)
           aggregation — map-side combined, the shuffle carries one row
-          per (group, support point) — raced against the sample pass;
-        - per-group samples: ONE ``sampleBy`` pass, truncated with the
-          same value-based per-group-seeded convention, then floored
-          (floor is monotone and the truncation picks positions by
-          length only, so flooring after truncating is identical);
+          per (group, support point);
+        - per-group samples: no job, drawn from each group's value
+          counts with its own (seed, crc32(str(group))) generator;
         - ONE (group, distribution) fan-out; results address as
           ``column[group]``.
         """
@@ -855,36 +847,20 @@ class DiscreteDistributionFitter(_Fitter):
         clean, counts = _grouped_counts(df, column, group_col, max_groups)
         if not counts:
             return self._empty_results()
-        gcounts = {r[group_col]: int(r["n"]) for r in counts}
-        # the PMF aggregation and the sample pass are independent given
-        # the counts — race them like the continuous fit_grouped
-        pmfs_future = start_job(
-            self.spark, grouped_pmfs, clean, column, group_col, gcounts
+        pmfs = grouped_pmfs(
+            clean, column, group_col, [r[group_col] for r in counts]
         )
-        samples_by_group = grouped_samples(
-            clean, column, group_col, gcounts, config
+        target, seed = config.fitting_sample_size, config.random_seed
+        return self._fan_out(
+            {
+                f"{column}[{g}]": (
+                    (x, pmf, n),
+                    sample_from_counts(x, n, target, group_rng(seed, g)),
+                )
+                for g, (x, pmf, n) in pmfs.items()
+            },
+            distributions, config,
         )
-        pmfs = pmfs_future.result()
-        names = distributions or self._select_distributions(config)
-        plans: dict = {}
-        samples: dict = {}
-        for g in gcounts:
-            x_values, pmf = pmfs[g]
-            sample = samples_by_group.get(g)
-            if x_values.size == 0 or sample is None or sample.size < 2:
-                continue
-            sample = np.floor(sample)
-            label = f"{column}[{g}]"
-            samples[label] = sample
-            plans[label] = {
-                "names": list(names),
-                "sample": sample,
-                "x_values": x_values,
-                "pmf": pmf,
-            }
-        if not plans:
-            return self._empty_results()
-        return self._fan_out(plans, samples, config)
 
     def plot(
         self, result, df=None, column=None,

@@ -215,20 +215,26 @@ def compute_discrete_information_criteria(dist, params, data: np.ndarray):
 
 
 def compute_discrete_ks(dist, params, data: np.ndarray):
-    """Two-sided K-S for a discrete model: D = max(D+, D-) with ECDF jump
-    handling; asymptotic p via the Kolmogorov limit (reference
+    """Two-sided K-S for an integer-lattice model, D = max(D+, D-) over
+    the distinct support points k of the sample, so tied observations
+    are one ECDF jump: D+ = max(ECDF(k) - F(k)) and
+    D- = max(F(k - 1) - ECDF(k-)), the exact sup of |ECDF - F|.
+    Asymptotic p via the Kolmogorov limit at n = sample size (reference
     discrete_fitting.py:256-320)."""
     try:
-        x = np.sort(np.asarray(data, dtype=np.float64))
+        x = np.asarray(data, dtype=np.float64)
         n = x.size
         if n == 0:
             return float("nan"), float("nan")
-        cdf = np.asarray(dist.cdf(x, *params), dtype=np.float64)
-        if not np.all(np.isfinite(cdf)):
+        k, counts = np.unique(x, return_counts=True)
+        cdf = np.asarray(dist.cdf(k, *params), dtype=np.float64)
+        below = np.asarray(dist.cdf(k - 1.0, *params), dtype=np.float64)
+        if not (np.all(np.isfinite(cdf)) and np.all(np.isfinite(below))):
             return float("inf"), 0.0
-        ecdf_hi = np.arange(1, n + 1) / n
-        ecdf_lo = np.arange(0, n) / n
-        d = float(max(np.max(ecdf_hi - cdf), np.max(cdf - ecdf_lo)))
+        cum = np.cumsum(counts)
+        d = float(max(
+            np.max(cum / n - cdf), np.max(below - (cum - counts) / n)
+        ))
         p = float(np.asarray(sp.kolmogorov_sf(np.sqrt(n) * d)).ravel()[0])
         return d, min(max(p, 0.0), 1.0)
     except Exception:  # noqa: BLE001

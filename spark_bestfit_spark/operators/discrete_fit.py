@@ -4,9 +4,11 @@ discrete_fitter.py / discrete_fitting.py capabilities).
 Same spine as the continuous engine: the column is reduced to a
 distributed empirical PMF (``histogram.empirical_pmfs_multi``, one
 stacked ``groupBy(column, floor(value)).count()`` — map-side combined,
-~cardinality rows to the driver) plus a <=10k fitting sample,
-then D optimizer-MLE fits fan out over the cluster. Discrete SSE is
-computed against the PMF, K-S against the ECDF with jump handling.
+~cardinality rows to the driver; the whole prelude), then D
+optimizer-MLE fits fan out over the cluster. The <=10k fitting sample
+is drawn from those counts on the driver (``sample_from_counts``), so
+it ignores partition layout and row order. Discrete SSE is computed
+against the PMF, K-S against the ECDF over the distinct support points.
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ every fitter path calls it:
   over the same edges);
 - ``_densities`` — (key, bin_id, count) rows to per-key densities;
 - ``_pmfs`` — (key, floored value, count) rows to per-key sorted,
-  normalised empirical PMFs.
+  normalised empirical PMFs with their raw counts.
 
 Every relation keeps only valid values (``stats.valid_cond``: non-null,
 non-NaN, finite). Semantics match the reference (spark_bestfit
@@ -255,18 +255,18 @@ def compute_histograms_grouped(
 
 
 def _pmfs(rows, keys) -> dict:
-    """``{key: (x_values, pmf)}`` from collected (key, k, count) rows:
-    the support sorted ascending, the pmf normalised to 1; a key
-    without rows gets two empty arrays."""
+    """``{key: (x_values, pmf, counts)}`` from collected (key, k, count)
+    rows: the support sorted ascending, the pmf normalised to 1 and the
+    raw integer counts; a key without rows gets three empty arrays."""
     pairs: dict = {k: [] for k in keys}
     for key, k, n in rows:
-        pairs[key].append((float(k), float(n)))
+        pairs[key].append((float(k), int(n)))
     out = {}
     for key, p in pairs.items():
         p.sort()
-        x = np.array([v for v, _ in p])
-        counts = np.array([n for _, n in p])
-        out[key] = (x, counts / counts.sum() if p else counts)
+        x = np.array([v for v, _ in p], dtype=np.float64)
+        counts = np.array([n for _, n in p], dtype=np.int64)
+        out[key] = (x, counts / max(counts.sum(), 1), counts)
     return out
 
 
@@ -276,7 +276,7 @@ def empirical_pmfs_multi(df: DataFrame, columns: list) -> dict:
     (column_name, k) rows and aggregated together (map-side combined,
     ~cardinality rows to the driver) — the discrete histogram IR
     (reference discrete_fitting.py:127-149, distributed as SURVEY A5
-    recommends)."""
+    recommends). Returns ``{column: (x_values, pmf, counts)}``."""
     stack_args = []
     for c in columns:
         stack_args += [F.lit(c), F.when(valid_cond(df, c), F.floor(c))]
@@ -299,7 +299,8 @@ def grouped_pmfs(
 ) -> dict:
     """Empirical PMF of floor(column) per group from ONE (group, k)
     aggregation — map-side combined, one shuffled row per (group,
-    support point). ``df`` holds valid values of ``column``."""
+    support point). ``df`` holds valid values of ``column``. Returns
+    ``{group: (x_values, pmf, counts)}``."""
     rows = (
         df.groupBy(group_col, F.floor(column).alias("_k"))
         .agg(F.count("*").alias("cnt"))

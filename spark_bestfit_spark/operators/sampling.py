@@ -14,6 +14,9 @@ stratified ``sampleBy`` (approxQuantile strata, boosted tails); those
 jobs run concurrently. The driver truncates each column to the target with
 ``default_rng(seed)``. Grouped fits draw all groups in one ``sampleBy``
 pass under the same fraction rule, truncated per group by value.
+
+Discrete fits use neither job: :func:`sample_from_counts` draws their
+sample on the driver from the value counts of the empirical PMF.
 """
 
 from __future__ import annotations
@@ -131,23 +134,21 @@ def build_fitting_samples_multi(
     shared = [c for c in columns if c not in own]
     drawn = {}
     if shared:
-        # SQL strings keep plan building to a few calls
+        # SQL strings keep plan building to a few calls; each predicate
+        # is parsed once, nulling what its column does not keep
         known = " AND _obs IS NOT NULL" if censor else ""
-        rule = {
-            c: f"_u < {fracs[c]!r}D AND {valid_sql(df, c)}{known}"
-            for c in shared
-        }
         pdf = (
             df.select(*shared, *obs, F.rand(seed).alias("_u"))
-            .filter(" OR ".join(f"({r})" for r in rule.values()))
             .selectExpr(
                 *[
-                    f"CASE WHEN {r} THEN CAST({quote(c)} AS DOUBLE) END"
+                    f"CASE WHEN _u < {fracs[c]!r}D AND {valid_sql(df, c)}"
+                    f"{known} THEN CAST({quote(c)} AS DOUBLE) END"
                     f" AS {quote(c)}"
-                    for c, r in rule.items()
+                    for c in shared
                 ],
                 *(["_obs"] if censor else []),
             )
+            .filter(" OR ".join(f"{quote(c)} IS NOT NULL" for c in shared))
             .toPandas()
         )
         drawn.update((c, pdf) for c in shared)
@@ -168,20 +169,38 @@ def build_fitting_samples_multi(
     return out
 
 
+def group_rng(seed: int, group) -> np.random.Generator:
+    """A grouped fit's PER-GROUP generator: (seed, crc32(str(group)))."""
+    return np.random.default_rng([int(seed), zlib.crc32(str(group).encode())])
+
+
 def truncate_group_sample(
     arr: np.ndarray, target: int, seed: int, group
 ) -> np.ndarray:
     """Over-budget truncation for fit_grouped: value-sort the group's
     rows (erasing Spark's collection order), then draw WITHOUT
-    replacement from a PER-GROUP generator seeded from (seed,
-    crc32(str(group))). The result depends only on the group's value
-    multiset and the seed — never on partitioning or iteration order."""
+    replacement from the :func:`group_rng` generator. The result
+    depends only on the group's value multiset and the seed — never on
+    partitioning or iteration order."""
     if arr.size <= target:
         return arr
-    rng = np.random.default_rng(
-        [int(seed), zlib.crc32(str(group).encode("utf-8"))]
+    return group_rng(seed, group).choice(
+        np.sort(arr), size=target, replace=False
     )
-    return rng.choice(np.sort(arr), size=target, replace=False)
+
+
+def sample_from_counts(
+    support: np.ndarray, counts: np.ndarray, target: int, rng
+) -> np.ndarray:
+    """A discrete fitting sample drawn from value counts WITHOUT
+    replacement: the whole column in ascending order when its N rows fit
+    in ``target``, else ``target`` sorted positions drawn by ``rng`` and
+    mapped through the cumulative counts (works for any N)."""
+    n = int(counts.sum())
+    if n <= target:
+        return np.repeat(support, counts)
+    pos = np.sort(rng.choice(n, size=target, replace=False))
+    return support[np.searchsorted(np.cumsum(counts), pos, side="right")]
 
 
 def grouped_samples(

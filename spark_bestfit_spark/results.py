@@ -31,6 +31,9 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame
 
+from spark_bestfit_spark.functions.distributions.base import (
+    DiscreteDistribution,
+)
 from spark_bestfit_spark.functions.distributions.registry import (
     DistributionRegistry,
 )
@@ -431,6 +434,12 @@ class FitResults:
 
         dist = self._registry.resolve(result.distribution)
         params = tuple(result.parameters)
+        if isinstance(dist, DiscreteDistribution):
+            # the eager discrete row: K-S over the support, no A-D
+            ks, p = M.compute_discrete_ks(dist, params, sample)
+            result.ks_statistic = ks if np.isfinite(ks) else None
+            result.pvalue = p if np.isfinite(p) else None
+            return
         truncated = (
             result.lower_bound is not None or result.upper_bound is not None
         )

@@ -431,13 +431,21 @@ class TestSampleRecreation:
         self._assert_exact(res)
 
     def test_discrete_fit(self, spark, messy_df):
+        """A discrete sample is drawn again from the kept value counts:
+        byte for byte the fit's, and without a Spark job."""
         from spark_bestfit_spark.fitter import DiscreteDistributionFitter
 
         res = DiscreteDistributionFitter(spark).fit(
             messy_df, column="k", lazy_metrics=True,
             distributions=["poisson", "geom"],
         )
-        self._assert_exact(res)
+        sc = spark.sparkContext
+        sc.setJobGroup("discrete-recreation", "recreation")
+        try:
+            self._assert_exact(res)
+        finally:
+            sc.setJobGroup(None, None)
+        assert not sc.statusTracker().getJobIdsForGroup("discrete-recreation")
 
     def test_discrete_fit_ignores_censoring(self, spark, messy_df):
         """A discrete fit samples without the censoring column, so its
@@ -634,6 +642,36 @@ class TestPartitionLayout:
             )
             outs.append(sorted(res._rows))
         assert outs[0] == outs[1] == outs[2]
+
+    @pytest.mark.parametrize("target", [10_000, 1_000])
+    def test_discrete_fit_is_layout_free(self, spark, target):
+        """A discrete sample is drawn from the value counts, so the
+        same rows in any order and partition layout give identical
+        result rows, within the fitting sample (4,000 rows) and above
+        it, for fit() and fit_grouped() alike."""
+        from spark_bestfit_spark.fitter import DiscreteDistributionFitter
+
+        rng = np.random.default_rng(13)
+        base = spark.createDataFrame(pd.DataFrame({
+            "k": rng.poisson(4.0, 4000), "n": rng.geometric(0.3, 4000),
+            "g": rng.integers(0, 3, 4000),
+        }))
+        fitter = DiscreteDistributionFitter(spark)
+        opts = dict(
+            distributions=["poisson", "geom", "nbinom"],
+            fitting_sample_size=target,
+        )
+        outs, grouped = [], []
+        for parts in (1, 3, 7):
+            df = base.repartition(parts)  # round-robin: a shuffled order
+            assert df.rdd.getNumPartitions() == parts
+            res = fitter.fit(df, columns=["k", "n"], **opts)
+            outs.append(sorted(res._rows))
+            res = fitter.fit_grouped(df, "k", "g", **opts)
+            grouped.append(sorted(res._rows))
+        assert len(outs[0]) == 6 and len(grouped[0]) == 9
+        assert outs[0] == outs[1] == outs[2]
+        assert grouped[0] == grouped[1] == grouped[2]
 
 
 class TestCustomDistributionFit:

@@ -12,7 +12,8 @@ from spark_bestfit_spark.operators.histogram import empirical_pmfs_multi
 
 
 def empirical_pmf(df, column):
-    return empirical_pmfs_multi(df, [column])[column]
+    x, pmf, _ = empirical_pmfs_multi(df, [column])[column]
+    return x, pmf
 
 
 class TestEmpiricalPmf:
@@ -194,6 +195,22 @@ class TestDiscreteFitter:
         rows = res.df.select("ks_statistic").collect()
         assert all(r.ks_statistic is None for r in rows)
 
+    def test_lazy_rows_equal_eager_rows(self, spark):
+        """A lazy discrete result recomputes K-S with the discrete
+        kernel and leaves A-D null, so it materializes to the eager
+        rows."""
+        rng = np.random.default_rng(6)
+        df = spark.createDataFrame(
+            pd.DataFrame({"v": rng.poisson(4.0, 3000).astype(float)})
+        )
+        f = DiscreteDistributionFitter(spark)
+        dists = ["poisson", "geom", "nbinom", "betabinom"]
+        eager = f.fit(df, column="v", distributions=dists)
+        lazy = f.fit(df, column="v", distributions=dists, lazy_metrics=True)
+        assert all(r.ks_statistic is None for r in lazy._rows)
+        assert sorted(lazy.materialize()._rows) == sorted(eager._rows)
+        assert all(r.ad_statistic is None for r in eager._rows)
+
     def test_multi_column(self, spark):
         rng = np.random.default_rng(1)
         df = spark.createDataFrame(pd.DataFrame({
@@ -341,3 +358,77 @@ class TestDiscreteGroupedFitting:
             f.fit_grouped(df, "v", "nope")
         empty = spark.createDataFrame([], "g string, v double")
         assert f.fit_grouped(empty, "v", "g").count() == 0
+
+
+class TestDiscreteKS:
+    @staticmethod
+    def _reference_d(dist, params, data):
+        """sup |ECDF - F| on the integer grid that holds both step
+        functions' jumps, in plain Python."""
+        data = sorted(int(v) for v in data)
+        n, best = len(data), 0.0
+        for x in range(data[0] - 1, data[-1] + 1):
+            ecdf = sum(1 for v in data if v <= x) / n
+            cdf = float(np.asarray(dist.cdf(float(x), *params)).ravel()[0])
+            best = max(best, abs(ecdf - cdf))
+        return best
+
+    @pytest.mark.parametrize(
+        "name", ["poisson", "geom", "binom", "betabinom", "dlaplace"]
+    )
+    def test_matches_plain_python_reference(self, name):
+        from spark_bestfit_spark.functions import metrics as M
+        from spark_bestfit_spark.functions.distributions.registry import (
+            get_discrete,
+        )
+
+        data = np.random.default_rng(0).poisson(4.0, 5000).astype(float)
+        dist = get_discrete(name)
+        params = dist.fit(data)
+        d, p = M.compute_discrete_ks(dist, params, data)
+        assert d == pytest.approx(
+            self._reference_d(dist, params, data), abs=1e-9
+        )
+        # the Kolmogorov limit at n = sample size
+        assert 0.0 <= p <= 1.0
+
+    def test_perfect_fit_is_accepted(self):
+        """Ties are one ECDF jump: a Poisson sample scored against its
+        own fitted Poisson has a small D and a large p-value."""
+        from spark_bestfit_spark.functions import metrics as M
+        from spark_bestfit_spark.functions.distributions.registry import (
+            get_discrete,
+        )
+
+        data = np.random.default_rng(0).poisson(4.0, 5000).astype(float)
+        dist = get_discrete("poisson")
+        d, p = M.compute_discrete_ks(dist, dist.fit(data), data)
+        assert d < 0.01 and p > 0.5
+
+
+class TestSampleFromCounts:
+    def test_within_target_is_the_whole_column(self):
+        from spark_bestfit_spark.operators.sampling import sample_from_counts
+
+        x, counts = np.array([0.0, 2.0, 5.0]), np.array([3, 1, 2])
+        out = sample_from_counts(x, counts, 6, np.random.default_rng(0))
+        assert out.tolist() == [0.0, 0.0, 0.0, 2.0, 5.0, 5.0]
+
+    def test_above_target_draws_without_replacement(self):
+        from spark_bestfit_spark.operators.sampling import sample_from_counts
+
+        x = np.array([1.0, 2.0, 3.0])
+        counts = np.array([4 * 10**11, 3 * 10**11, 3 * 10**11])
+        out = sample_from_counts(x, counts, 10_000, np.random.default_rng(1))
+        again = sample_from_counts(
+            x, counts, 10_000, np.random.default_rng(1)
+        )
+        assert out.tobytes() == again.tobytes()
+        assert out.size == 10_000 and np.all(np.diff(out) >= 0)
+        share = np.array([(out == v).mean() for v in x])
+        np.testing.assert_allclose(share, [0.4, 0.3, 0.3], atol=0.03)
+        # without replacement: never more of a value than its count
+        small = sample_from_counts(
+            x, np.array([2, 50, 1]), 20, np.random.default_rng(2)
+        )
+        assert (small == 1.0).sum() <= 2 and (small == 3.0).sum() <= 1

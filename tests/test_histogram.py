@@ -124,9 +124,10 @@ class TestDiscretePmf:
         rng = np.random.default_rng(42)
         data = rng.poisson(5, 5000)
         df = spark.createDataFrame(pd.DataFrame({"k": data.astype("int32")}))
-        x, pmf = empirical_pmfs_multi(df, ["k"])["k"]
+        x, pmf, raw = empirical_pmfs_multi(df, ["k"])["k"]
         vals, counts = np.unique(data, return_counts=True)
         np.testing.assert_array_equal(x, vals.astype(float))
+        np.testing.assert_array_equal(raw, counts)
         np.testing.assert_allclose(pmf, counts / counts.sum(), rtol=1e-12)
         assert pmf.sum() == pytest.approx(1.0)
 

@@ -314,6 +314,47 @@ class TestJobCount:
         assert not sampled
         df.unpersist()
 
+    def test_discrete_prelude_is_the_pmf_job(self, spark, monkeypatch):
+        """A discrete fit() runs ONE prelude job, the stacked PMF
+        aggregation, for 1 column as for 3, and fit_grouped() two, the
+        group counts and the per-group PMFs: the samples come from the
+        value counts on the driver. The fan-out is stubbed out, so only
+        the prelude is counted, in units of one PMF collect (an
+        aggregation can run as two physical jobs under AQE)."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark.fitter import DiscreteDistributionFitter
+        from spark_bestfit_spark.operators.histogram import (
+            empirical_pmfs_multi,
+        )
+
+        rng = np.random.default_rng(3)
+        n = 20_000  # > fitting_sample_size
+        df = spark.createDataFrame(pd.DataFrame({
+            "a": rng.poisson(4.0, n), "b": rng.geometric(0.3, n),
+            "g": rng.integers(0, 9, n),
+        })).repartition(4).cache()
+        df.count()
+        monkeypatch.setattr(
+            DiscreteDistributionFitter, "_fan_out", lambda *a, **k: None
+        )
+        fitter = DiscreteDistributionFitter(spark)
+        overhead = self._jobs_during(spark, lambda: None)
+
+        def jobs(call):
+            call()  # warm codegen paths
+            return self._jobs_during(spark, call) - overhead
+
+        pmf_job = jobs(lambda: empirical_pmfs_multi(df, ["a"]))
+        assert pmf_job >= 1
+        assert jobs(lambda: fitter.fit(df, column="a")) == pmf_job
+        assert jobs(lambda: fitter.fit(df, columns=["a", "b", "g"])) == (
+            pmf_job
+        )
+        assert jobs(lambda: fitter.fit_grouped(df, "a", "g")) == 2 * pmf_job
+        df.unpersist()
+
     def test_prelude_jobs_stay_in_callers_job_group(self, spark):
         """Every job a fit launches — including the prelude jobs raced
         from helper driver threads — is attributed to the caller's job
