@@ -7,6 +7,7 @@ Query lifecycle per fit (all columns batched):
 3. fitting sample ∥ histogram                   — wave 2 (concurrent jobs)
 4. prefilter + interleave distribution list     — driver
 5. fan-out (mapInPandas), collected once        — wave 3
+   (driver-local when the weighted fit count is small)
 
 Waves 1 and 2 each run two independent Spark jobs, one of them from a
 helper driver thread (``start_job``), so the prelude costs two job
@@ -19,7 +20,10 @@ A censored fit has no probe: one stats job for all columns, then one
 histogram job for all columns raced against one sample job for all
 columns (each value travels with its event mask), then the same fan-out.
 A discrete fit's prelude is the one PMF job: its sample comes from the
-value counts on the driver.
+value counts on the driver. Both fitters then hand their per-column
+plans to the one ``_Fitter._fan_out``, which runs them on the driver or
+over the cluster, and the results snapshot drops the failed-fit
+sentinel rows.
 
 Every binning rule — equi-width edges, density, empirical PMF — comes
 from ``operators/histogram.py``, and every sampling rule from
@@ -218,7 +222,7 @@ def _grouped_counts(
 
 class _Fitter:
     """What the continuous and discrete fitters share: the session and
-    registry, name validation, the collect of a fan-out into results,
+    registry, name validation, the fan-out and its collect into results,
     the empty result and the cached-sample plot data."""
 
     def __init__(
@@ -232,7 +236,7 @@ class _Fitter:
     def _validate_names(self, names: list) -> None:
         """Fail fast on unknown distribution names: a typo'd name would
         otherwise just fan out, hit the resolve failure inside the kernel
-        and vanish as a filtered sentinel row — a silent empty result."""
+        and vanish as a dropped sentinel row — a silent empty result."""
         unknown = []
         for n in names:
             try:
@@ -246,14 +250,43 @@ class _Fitter:
                 "register_distribution() for the available set"
             )
 
+    def _fan_out(
+        self, plans: dict, config, bounds, source=None
+    ) -> FitResults:
+        """ONE (column, distribution) fan-out over the planned columns,
+        collected into the results snapshot; empty results when no
+        column was planned. A tiny plan (weighted fit count at most
+        ``local_fit_threshold``) runs on the driver, unless the fit has
+        a progress callback, which must see its tasks."""
+        if not plans:
+            return self._empty_results()
+        broadcasts: list = []
+        effective = sum(
+            self.registry.effective_count(p["names"]) for p in plans.values()
+        )
+        if (
+            0 < effective <= config.local_fit_threshold
+            and config.progress_callback is None
+        ):
+            result_df = local_fit_columns(
+                self.spark, plans, config, self.registry, bounds=bounds
+            )
+        else:
+            result_df = parallel_fit_columns(
+                self.spark, plans, config, self.registry, bounds=bounds,
+                broadcast_registry=broadcasts,
+            )
+        return self._results(result_df, plans, config, broadcasts, source)
+
     def _results(
-        self, result_df: DataFrame, plans: dict, samples: dict, config,
-        broadcasts: list, source=None,
+        self, result_df: DataFrame, plans: dict, config, broadcasts: list,
+        source=None,
     ) -> FitResults:
         """The fit's one Spark action: collect the fan-out's result
-        relation into the results snapshot — under a ProgressTracker
-        when the config has a progress_callback (reference progress.py
-        role) — then release the broadcasts the fan-out registered."""
+        relation, less its failed-fit sentinel rows (sse = inf), into
+        the results snapshot — under a ProgressTracker when the config
+        has a progress_callback (reference progress.py role) — then
+        release the broadcasts the fan-out registered."""
         track = nullcontext()
         if config.progress_callback is not None:
             n_fits = sum(len(p["names"]) for p in plans.values())
@@ -263,7 +296,9 @@ class _Fitter:
         try:
             with track:
                 return FitResults(
-                    result_df, registry=self.registry, samples=samples,
+                    result_df.filter(F.col("sse") < F.lit(float("inf"))),
+                    registry=self.registry,
+                    samples={c: p["sample"] for c, p in plans.items()},
                     source=source,
                 )
         finally:
@@ -304,15 +339,15 @@ class _Fitter:
     def _plot_sample(self, result, df, column, force_recompute: bool):
         """Raw-sample resolution for the point-wise plots (Q-Q / P-P /
         comparison / discrete PMF need actual observations, not a
-        histogram): the cached sample, else up to 100k non-null rows of
-        ``df``."""
+        histogram): the cached sample, else up to 100k valid (finite,
+        non-null) rows of ``df``."""
         data = self._cached_sample(result, df, force_recompute)
         if data is not None:
             return data
         df = _ensure_spark_df(self.spark, df)
         col = column or result.column_name
         return (
-            df.select(col).dropna().limit(100_000).toPandas()[col]
+            valid_column(df, col).select(col).limit(100_000).toPandas()[col]
             .to_numpy(dtype=np.float64)
         )
 
@@ -471,12 +506,10 @@ class DistributionFitter(_Fitter):
                 )
 
         plans: dict = {}
-        samples: dict = {}
         for c in live_cols:
             sample = sample_map.get(c)
             if sample is None or sample.size < 2 or c not in histograms:
                 continue
-            samples[c] = sample
             plans[c] = self._plan(
                 sample, histograms[c], distributions, config
             )
@@ -488,10 +521,8 @@ class DistributionFitter(_Fitter):
                     f"column {c!r} looks heavy-tailed; using "
                     "maximum-spacing estimation", stacklevel=2
                 )
-        if not plans:
-            return self._empty_results()
         return self._fan_out(
-            plans, samples, config, bounds,
+            plans, config, bounds,
             partial(_recreate_sample, src, config, counts, None),
         )
 
@@ -512,34 +543,6 @@ class DistributionFitter(_Fitter):
             "edges": edges,
             "method": method,
         }
-
-    def _fan_out(
-        self, plans: dict, samples: dict, config, bounds, source=None
-    ) -> FitResults:
-        """ONE (column, distribution) fan-out over the planned columns,
-        collected into the results snapshot. A fit with a progress
-        callback always fans out, so the callback sees its tasks."""
-        broadcasts: list = []
-        effective = sum(
-            self.registry.effective_count(p["names"]) for p in plans.values()
-        )
-        if (
-            0 < effective <= config.local_fit_threshold
-            and config.progress_callback is None
-        ):
-            # tiny plan: kernels run in-process, result is a local
-            # relation — no broadcast/fan-out/shuffle round-trip
-            result_df = local_fit_columns(
-                self.spark, plans, config, self.registry, bounds=bounds
-            )
-        else:
-            result_df = parallel_fit_columns(
-                self.spark, plans, config, self.registry, bounds=bounds,
-                broadcast_registry=broadcasts,
-            )
-        return self._results(
-            result_df, plans, samples, config, broadcasts, source
-        )
 
     # ------------------------------------------------------ instant plotting
     def _plot_data(
@@ -688,20 +691,15 @@ class DistributionFitter(_Fitter):
         )
         hist_by_group = hist_future.result()
         plans: dict = {}
-        samples: dict = {}
         for g in gstats:
             sample = samples_by_group.get(g)
             if sample is None or sample.size < 2 or g not in hist_by_group:
                 continue
-            label = f"{column}[{g}]"
-            samples[label] = sample
-            plans[label] = self._plan(
+            plans[f"{column}[{g}]"] = self._plan(
                 sample, hist_by_group[g], distributions, config
             )
-        if not plans:
-            return self._empty_results()
         return self._fan_out(
-            plans, samples, config, (config.lower_bound, config.upper_bound)
+            plans, config, (config.lower_bound, config.upper_bound)
         )
 
     def _fit_censored(
@@ -724,20 +722,16 @@ class DistributionFitter(_Fitter):
             src, live_cols, config, counts, censor=config.censoring_column
         )
         histograms = hist_future.result()
-        plans: dict = {}
-        samples: dict = {}
-        for c, (sample, censor_mask) in censored.items():
-            if sample.size < 2:
-                continue
-            samples[c] = sample
-            plans[c] = {
+        plans = {
+            c: {
                 **self._plan(sample, histograms[c], distributions, config),
                 "censor_mask": censor_mask,
             }
-        if not plans:
-            return self._empty_results()
+            for c, (sample, censor_mask) in censored.items()
+            if sample.size >= 2
+        }
         return self._fan_out(
-            plans, samples, config, bounds,
+            plans, config, bounds,
             partial(
                 _recreate_sample, src, config, counts,
                 config.censoring_column,
@@ -757,16 +751,11 @@ class DiscreteDistributionFitter(_Fitter):
             names = names[: config.max_distributions]
         return names
 
-    def _fan_out(self, drawn: dict, distributions, config, source=None):
-        """ONE (key, distribution) fan-out over the ``drawn`` keys
-        ``{key: ((x_values, pmf, counts), sample)}`` whose sample holds
-        at least two values, collected into the results snapshot."""
-        from spark_bestfit_spark.operators.discrete_fit import (
-            parallel_fit_discrete_columns,
-        )
-
+    def _plans(self, drawn: dict, distributions, config) -> dict:
+        """Fan-out plans for the ``drawn`` keys ``{key: ((x_values, pmf,
+        counts), sample)}`` whose sample holds at least two values."""
         names = distributions or self._select_distributions(config)
-        plans = {
+        return {
             key: {
                 "names": list(names), "sample": sample,
                 "x_values": x_values, "pmf": pmf,
@@ -774,17 +763,6 @@ class DiscreteDistributionFitter(_Fitter):
             for key, ((x_values, pmf, _), sample) in drawn.items()
             if sample.size >= 2
         }
-        if not plans:
-            return self._empty_results()
-        broadcasts: list = []
-        result_df = parallel_fit_discrete_columns(
-            self.spark, plans, config, self.registry,
-            broadcast_registry=broadcasts,
-        )
-        samples = {key: p["sample"] for key, p in plans.items()}
-        return self._results(
-            result_df, plans, samples, config, broadcasts, source
-        )
 
     def fit(
         self,
@@ -808,10 +786,10 @@ class DiscreteDistributionFitter(_Fitter):
             self._validate_names(distributions)
         pmfs = empirical_pmfs_multi(df, cols)
         draw = partial(_counts_sample, pmfs, config)
-        return self._fan_out(
-            {c: (pmfs[c], draw(c)) for c in cols}, distributions, config,
-            draw,
+        plans = self._plans(
+            {c: (pmfs[c], draw(c)) for c in cols}, distributions, config
         )
+        return self._fan_out(plans, config, (None, None), draw)
 
     def fit_grouped(
         self,
@@ -851,7 +829,7 @@ class DiscreteDistributionFitter(_Fitter):
             clean, column, group_col, [r[group_col] for r in counts]
         )
         target, seed = config.fitting_sample_size, config.random_seed
-        return self._fan_out(
+        plans = self._plans(
             {
                 f"{column}[{g}]": (
                     (x, pmf, n),
@@ -861,6 +839,7 @@ class DiscreteDistributionFitter(_Fitter):
             },
             distributions, config,
         )
+        return self._fan_out(plans, config, (None, None))
 
     def plot(
         self, result, df=None, column=None,

@@ -2,12 +2,17 @@
 
 Dataflow (reference backends/spark.py:76-209, re-expressed Spark-first):
 
-    broadcast (histogram, fitting sample, custom dists, LPT bins)
+    broadcast (histogram or PMF, fitting sample, custom dists, LPT bins)
       -> spark.range(n_bins) task relation, one weight-balanced bin per
          partition (pure JVM — no Python-RDD round-trip)
       -> mapInPandas(fit kernel) with FIT_RESULT_SCHEMA
-      -> filter(sse < inf)        # sentinel failed fits
-      -> collect, once, into the FitResults driver snapshot
+      -> collect, once, into the FitResults driver snapshot, which drops
+         the failed-fit sentinel rows (sse = inf)
+
+Continuous and discrete plans share this fan-out and its driver-local
+twin: a plan that carries an empirical PMF (``x_values``/``pmf``) is
+fitted by ``fit_single_discrete``, every other by
+``fit_single_distribution``.
 
 Why this scales: the raw data is reduced to a ~KB histogram + <=10k-row
 sample ONCE per column (single full scan, map-side combined); the D-way
@@ -36,7 +41,6 @@ from itertools import zip_longest
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -117,8 +121,9 @@ def compute_data_stats(data: np.ndarray) -> dict:
 
 
 def _sentinel_row(column: str, dist_name: str, stats: dict, bounds) -> dict:
-    """Failed-fit sentinel (sse = inf) — filtered after the fan-out, so a
-    single bad kernel can never fail the job (reference O17)."""
+    """Failed-fit sentinel (sse = inf) — dropped where the fitter builds
+    its results snapshot, so a single bad kernel can never fail the job
+    (reference O17)."""
     return {
         "column_name": column,
         "distribution": dist_name,
@@ -219,6 +224,50 @@ def fit_single_distribution(
         return _sentinel_row(column, dist_name, stats, bounds)
 
 
+def fit_single_discrete(
+    dist_name: str,
+    data: np.ndarray,
+    x_values: np.ndarray,
+    pmf: np.ndarray,
+    column: str,
+    stats: dict,
+    config: FitterConfig,
+    registry: DistributionRegistry,
+) -> dict:
+    """Fit one discrete distribution (reference discrete_fitting.py);
+    never raises. SSE is computed against the empirical PMF, K-S against
+    the ECDF over the distinct support points; A-D stays null."""
+    try:
+        dist = registry.resolve(dist_name)
+        params = tuple(float(p) for p in dist.fit(data))
+        sse = M.compute_discrete_sse(dist, params, x_values, pmf)
+        if not np.isfinite(sse):
+            return _sentinel_row(column, dist_name, stats, (None, None))
+        aic, bic = M.compute_discrete_information_criteria(dist, params, data)
+        row = {
+            "column_name": column,
+            "distribution": dist_name,
+            "parameters": list(params),
+            "sse": sse,
+            "aic": aic,
+            "bic": bic,
+            "ks_statistic": None,
+            "pvalue": None,
+            "ad_statistic": None,
+            "ad_pvalue": None,
+            **stats,
+            "lower_bound": None,
+            "upper_bound": None,
+        }
+        if not config.lazy_metrics:
+            ks, p = M.compute_discrete_ks(dist, params, data)
+            row["ks_statistic"] = ks if np.isfinite(ks) else None
+            row["pvalue"] = p if np.isfinite(p) else None
+        return row
+    except Exception:  # noqa: BLE001
+        return _sentinel_row(column, dist_name, stats, (None, None))
+
+
 def _lpt_bins(items: list, weight_fn, n_bins: int) -> list:
     """Greedy longest-processing-time bin packing: heaviest item into the
     currently-lightest bin. Returns non-empty bins; the per-bin weighted
@@ -253,50 +302,39 @@ def _fit_bins(
     return _lpt_bins(pairs, lambda p: registry.weight(p[1]), cores)
 
 
-def _packed_fanout(
-    spark: SparkSession,
-    bins: list,
-    process,
-    schema,
-    broadcast_registry: list | None = None,
-) -> DataFrame:
-    """Run ``process(bin_items) -> list[dict]`` once per weight-balanced
-    bin, one task per bin (``_fit_bins`` sizes the bins to one wave).
-
-    The task relation is ``spark.range(n_bins)`` with exactly one id per
-    partition — a pure-JVM local relation, so each task runs ONE Python
-    runner (the mapInPandas that fits). The previous parallelize-RDD
-    route chained two Python evals per task (RDD pickle pipe feeding
-    ArrowEval), which alone cost ~0.4 s of fixed wall-clock per fan-out
-    wave at any data size. Bin contents ride a broadcast keyed by id, so
-    explicit partition membership survives without an exchange."""
-    sc = spark.sparkContext
-    b_bins = sc.broadcast(bins)
-    if broadcast_registry is not None:
-        broadcast_registry.append(b_bins)
-
-    def run(batches):
-        bb = b_bins.value
-        for pdf in batches:
-            for bid in pdf["id"]:
-                rows = process(bb[int(bid)])
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    n = len(bins)
-    return spark.range(n, numPartitions=n).mapInPandas(run, schema)
-
-
-def _kernel_args(plan: dict) -> tuple:
-    """One column's plan as the fit kernel's per-column arguments:
-    (sample, censor_mask, density, edges, stats, method). A censored
-    plan's provenance stats describe its observed rows only."""
-    sample, mask = plan["sample"], plan.get("censor_mask")
+def _kernel_args(plan: dict, bounds) -> tuple:
+    """One column's plan as (kernel, per-column keyword arguments): a
+    plan that carries an empirical PMF is fitted by
+    ``fit_single_discrete``, every other by ``fit_single_distribution``
+    with its method, censor mask and bounds. A censored plan's
+    provenance stats describe its observed rows only."""
+    sample = plan["sample"]
+    if "pmf" in plan:
+        return fit_single_discrete, {
+            "data": sample, "x_values": plan["x_values"],
+            "pmf": plan["pmf"], "stats": compute_data_stats(sample),
+        }
+    mask = plan.get("censor_mask")
     observed = sample if mask is None else sample[np.asarray(mask, bool)]
-    return (
-        sample, mask, plan["density"], plan["edges"],
-        compute_data_stats(observed), plan.get("method", "mle"),
-    )
+    return fit_single_distribution, {
+        "data": sample, "hist_density": plan["density"],
+        "bin_edges": plan["edges"], "stats": compute_data_stats(observed),
+        "bounds": bounds, "method": plan.get("method", "mle"),
+        "censor_mask": mask,
+    }
+
+
+def _fit_pairs(pairs, kernels: dict, config, registry) -> list:
+    """The one loop of both executors: every (column, distribution) pair
+    through its column's kernel, failed fits as sentinel rows."""
+    rows = []
+    for col, name in pairs:
+        kernel, kwargs = kernels[col]
+        rows.append(
+            kernel(name, column=col, config=config, registry=registry,
+                   **kwargs)
+        )
+    return rows
 
 
 def parallel_fit_columns(
@@ -311,43 +349,48 @@ def parallel_fit_columns(
     distribution) pairs, so C columns x D distributions fill the cluster
     in a single wave instead of C sequential jobs.
 
-    ``plans`` maps column -> dict(names, sample, density, edges, and
-    optionally method and censor_mask). Broadcast payload is all
-    per-column artifacts (~C x 90KB). ``broadcast_registry``: optional
-    list the created broadcast variables are appended to so the caller
-    can release them once the results are collected (reference O2
-    cleanup discipline).
+    ``plans`` maps column -> dict(names, sample, and either density and
+    edges, optionally with method and censor_mask, or the discrete
+    x_values and pmf). Broadcast payload is all per-column artifacts
+    (~C x 90KB) plus the registry's custom distributions.
+    ``broadcast_registry``: optional list the created broadcast variables
+    are appended to so the caller can release them once the results are
+    collected (reference O2 cleanup discipline).
+
+    The task relation is ``spark.range(n_bins)`` with exactly one id per
+    partition — a pure-JVM local relation, so each task runs ONE Python
+    runner (the mapInPandas that fits). The previous parallelize-RDD
+    route chained two Python evals per task (RDD pickle pipe feeding
+    ArrowEval), which alone cost ~0.4 s of fixed wall-clock per fan-out
+    wave at any data size. Bin contents ride a broadcast keyed by id, so
+    explicit partition membership survives without an exchange.
     """
     sc = spark.sparkContext
-    b_plans = sc.broadcast({c: _kernel_args(p) for c, p in plans.items()})
+    b_plans = sc.broadcast(
+        {c: _kernel_args(p, bounds) for c, p in plans.items()}
+    )
     b_custom = sc.broadcast(registry.custom_distributions)
-    if broadcast_registry is not None:
-        broadcast_registry += [b_plans, b_custom]
-    cfg = config
     bins = _fit_bins(
         spark, registry, {c: p["names"] for c, p in plans.items()}
     )
+    b_bins = sc.broadcast(bins)
+    if broadcast_registry is not None:
+        broadcast_registry += [b_plans, b_custom, b_bins]
 
-    def fit_bin(items):
+    def run(batches):
         reg = DistributionRegistry(custom_exclusions=set())
         for name, dist in b_custom.value.items():
             reg.register_distribution(name, dist, overwrite=True)
-        artifacts = b_plans.value
-        rows = []
-        for col, name in items:
-            sample, mask, density, edges, stats, method = artifacts[col]
-            rows.append(
-                fit_single_distribution(
-                    name, sample, density, edges, col, stats, cfg,
-                    reg, bounds, method, mask,
+        for pdf in batches:
+            for bid in pdf["id"]:
+                rows = _fit_pairs(
+                    b_bins.value[int(bid)], b_plans.value, config, reg
                 )
-            )
-        return rows
+                if rows:
+                    yield pd.DataFrame(rows)
 
-    result = _packed_fanout(
-        spark, bins, fit_bin, FIT_RESULT_SCHEMA, broadcast_registry
-    )
-    return result.filter(F.col("sse") < F.lit(float("inf")))
+    n = len(bins)
+    return spark.range(n, numPartitions=n).mapInPandas(run, FIT_RESULT_SCHEMA)
 
 
 def local_fit_columns(
@@ -357,27 +400,19 @@ def local_fit_columns(
     registry: DistributionRegistry,
     bounds=(None, None),
 ) -> DataFrame:
-    """Driver-side execution of a tiny fit plan: same kernels and result
-    schema as ``parallel_fit_columns``, but the (column, distribution)
-    pairs run in-process and the result is a local relation
-    (LocalTableScan — no fan-out job, no broadcast, no shuffle).
+    """Driver-side execution of a tiny fit plan: same kernels, loop and
+    result schema as ``parallel_fit_columns``, but the (column,
+    distribution) pairs run in-process and the result is a local
+    relation (LocalTableScan — no fan-out job, no broadcast, no shuffle).
 
-    Dispatch happens in ``DistributionFitter.fit`` when the weighted fit
-    count is at most ``config.local_fit_threshold``: at that size the
-    per-task overhead of a cluster round-trip exceeds the kernel cost,
-    exactly like Catalyst executing small plans locally."""
-    rows = []
-    for c, p in plans.items():
-        sample, mask, density, edges, stats, method = _kernel_args(p)
-        for name in p["names"]:
-            row = fit_single_distribution(
-                name, sample, density, edges, c, stats, config, registry,
-                bounds, method, mask,
-            )
-            if row["sse"] < float("inf"):
-                rows.append(row)
+    Dispatch happens in ``_Fitter._fan_out`` when the weighted fit count
+    is at most ``config.local_fit_threshold``: at that size the per-task
+    overhead of a cluster round-trip exceeds the kernel cost, exactly
+    like Catalyst executing small plans locally."""
+    kernels = {c: _kernel_args(p, bounds) for c, p in plans.items()}
+    pairs = [(c, name) for c, p in plans.items() for name in p["names"]]
+    rows = _fit_pairs(pairs, kernels, config, registry)
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=[f.name for f in FIT_RESULT_SCHEMA])
-        if rows else pd.DataFrame(columns=[f.name for f in FIT_RESULT_SCHEMA]),
+        pd.DataFrame(rows, columns=[f.name for f in FIT_RESULT_SCHEMA]),
         schema=FIT_RESULT_SCHEMA,
     )

@@ -336,6 +336,20 @@ class TestInstantPlotWrappers:
         with pytest.warns(FutureWarning, match="cached fitting sample"):
             fitter._plot_sample(best, df, "v", False)
 
+    def test_fallback_sample_reads_valid_values_only(self, spark, fit_pack):
+        """Without a cached sample the point-wise plots read the source
+        column's valid values only: ±inf, NaN and null stay out of the
+        Q-Q / P-P / comparison data."""
+        fitter, results, _ = fit_pack
+        best = results.best(1, metric="sse")
+        inf = float("inf")
+        df = spark.createDataFrame(
+            [(v,) for v in (1.0, 2.0, inf, -inf, float("nan"), 3.0, None)],
+            "v double",
+        )
+        data = fitter._plot_sample(best, df, "v", True)
+        assert sorted(data.tolist()) == [1.0, 2.0, 3.0]
+
     def test_results_plot_target_cache_first(self, fit_pack):
         _, results, _ = fit_pack
         res, sample = results._plot_target(None, "sse")

@@ -57,14 +57,15 @@ class TestEmpiricalPmf:
 
 class TestDiscreteFitter:
     def test_fit_releases_fan_out_broadcasts(self, spark, monkeypatch):
-        """The discrete fan-out registers its broadcasts (plans and
-        bins), and the fitter releases them after its one collect."""
+        """The shared fan-out registers its broadcasts for a discrete
+        plan (plans, custom distributions and bins), and the fitter
+        releases them after its one collect."""
         from pyspark.broadcast import Broadcast
 
-        from spark_bestfit_spark.operators import discrete_fit
+        from spark_bestfit_spark import fitter
 
         registered, released = [], []
-        fan_out = discrete_fit.parallel_fit_discrete_columns
+        fan_out = fitter.parallel_fit_columns
 
         def spy_fan_out(*args, broadcast_registry=None, **kwargs):
             df = fan_out(
@@ -79,19 +80,49 @@ class TestDiscreteFitter:
             released.append(self)
             return unpersist(self, blocking)
 
-        monkeypatch.setattr(
-            discrete_fit, "parallel_fit_discrete_columns", spy_fan_out
-        )
+        monkeypatch.setattr(fitter, "parallel_fit_columns", spy_fan_out)
         monkeypatch.setattr(Broadcast, "unpersist", spy_unpersist)
         df = spark.createDataFrame(pd.DataFrame(
             {"v": np.random.default_rng(1).poisson(3.0, 500).astype(float)}
         ))
         res = DiscreteDistributionFitter(spark).fit(
-            df, column="v", distributions=["poisson", "geom"]
+            df, column="v", distributions=["poisson", "geom"],
+            local_fit_threshold=0,
         )
         assert res.count() == 2
-        assert len(registered) == 2
+        assert len(registered) == 3
         assert all(any(b is r for r in released) for b in registered)
+
+    @pytest.mark.parametrize(
+        "executor", [{}, {"local_fit_threshold": 0}], ids=["local", "packed"]
+    )
+    def test_custom_distribution_is_fitted(self, spark, executor):
+        """A custom discrete distribution registered on the fitter's
+        registry is fitted by the driver-local executor and, through the
+        broadcast custom registry, by the packed fan-out. Here it is a
+        renamed Poisson, so its row equals the built-in one."""
+        from spark_bestfit_spark.functions.distributions.discrete import (
+            Poisson,
+        )
+        from spark_bestfit_spark.functions.distributions.registry import (
+            DistributionRegistry,
+        )
+
+        custom = Poisson()
+        custom.name = "mypois"
+        custom.logpdf = custom.logpmf  # registration probes logpdf
+        reg = DistributionRegistry()
+        reg.register_distribution("mypois", custom)
+        df = spark.createDataFrame(pd.DataFrame(
+            {"v": np.random.default_rng(2).poisson(4.0, 2000).astype(float)}
+        ))
+        res = DiscreteDistributionFitter(spark, registry=reg).fit(
+            df, column="v", distributions=["poisson", "mypois"], **executor
+        )
+        rows = {r.distribution: r for r in res.best(2, metric="sse")}
+        assert set(rows) == {"poisson", "mypois"}
+        assert rows["mypois"].parameters == rows["poisson"].parameters
+        assert rows["mypois"].sse == rows["poisson"].sse
 
     @pytest.mark.parametrize("inf", [np.inf, -np.inf])
     def test_infinite_rows_do_not_enter_the_pmf(self, spark, inf):

@@ -6,6 +6,11 @@ or sentinel-free results, never raise out of the public API."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -16,6 +21,32 @@ from spark_bestfit_spark.fitter import (
 )
 
 DISTS = ["norm", "expon", "uniform", "lognorm"]
+
+
+def _record_warnings(setup: str, call: str) -> tuple:
+    """Evaluate ``call`` after ``setup`` in a fresh interpreter with
+    every warning recorded; return (warning messages, the call's value
+    as a list of floats). The session-wide Spark connections of earlier
+    tests live in this process, and their sockets can be finalized from
+    any thread while a window is open (an ``unclosed <socket>``
+    ResourceWarning, seen even with the cyclic collector off); a fresh
+    interpreter holds none, so the window records only the call's own
+    warnings."""
+    script = (
+        "import json, warnings\nimport numpy as np\n" + setup
+        + "with warnings.catch_warnings(record=True) as caught:\n"
+        "    warnings.simplefilter('always')\n"
+        f"    value = {call}\n"
+        "print(json.dumps([[str(w.message) for w in caught],"
+        " [float(v) for v in value]]))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    return tuple(json.loads(proc.stdout.splitlines()[-1]))
 
 
 def _fit(spark, values, **kw):
@@ -168,22 +199,16 @@ class TestExtremeEvaluation:
         """A sample point at a density pole (+inf) next to one outside
         the support (-inf) yields the declared (inf, inf) sentinel
         without numpy's 'invalid value' RuntimeWarning."""
-        import gc
-        import warnings
-
-        from spark_bestfit_spark.functions import metrics as M
-        from spark_bestfit_spark.functions.distributions.registry import (
-            get_continuous,
+        caught, ic = _record_warnings(
+            "from spark_bestfit_spark.functions import metrics as M\n"
+            "from spark_bestfit_spark.functions.distributions.registry"
+            " import get_continuous\n"
+            "gamma = get_continuous('gamma')\n"
+            "data = np.array([0.0, -1.0, 1.0])\n",
+            "M.compute_information_criteria(gamma, (0.5, 0.0, 1.0), data)",
         )
-
-        gamma = get_continuous("gamma")
-        data = np.array([0.0, -1.0, 1.0])
-        gc.collect()  # see test_censored_objective_sentinel_is_silent
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            ic = M.compute_information_criteria(gamma, (0.5, 0.0, 1.0), data)
-        assert ic == (float("inf"), float("inf"))
-        assert [str(w.message) for w in caught] == []
+        assert ic == [float("inf"), float("inf")]
+        assert caught == []
 
     def test_censored_objective_sentinel_is_silent(self):
         """arcsine's censored likelihood at a trial point sums -inf and
@@ -191,24 +216,17 @@ class TestExtremeEvaluation:
         without numpy's 'invalid value' RuntimeWarning. (Warnings are
         recorded rather than raised: the objective's own ``except``
         would map a raised warning to the same sentinel.)"""
-        import gc
-        import warnings
-
-        from spark_bestfit_spark.functions.distributions.registry import (
-            get_continuous,
+        caught, params = _record_warnings(
+            "from spark_bestfit_spark.functions.distributions.registry"
+            " import get_continuous\n"
+            "from spark_bestfit_spark.functions.estimation import"
+            " censored_fit\n"
+            "rng = np.random.default_rng(3)\n"
+            "values = rng.uniform(900, 2100, 2000)\n"
+            "observed = rng.random(2000) < 0.5\n",
+            "censored_fit(get_continuous('arcsine'), values, observed)",
         )
-        from spark_bestfit_spark.functions.estimation import censored_fit
-
-        rng = np.random.default_rng(3)
-        values = rng.uniform(900, 2100, 2000)
-        observed = rng.random(2000) < 0.5
-        # an earlier test's unreachable Spark result socket, freed by a
-        # GC pass inside the window, would record a ResourceWarning
-        gc.collect()
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            params = censored_fit(get_continuous("arcsine"), values, observed)
-        assert [str(w.message) for w in caught] == []
+        assert caught == []
         assert np.all(np.isfinite(params))
 
 

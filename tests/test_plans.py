@@ -355,6 +355,39 @@ class TestJobCount:
         assert jobs(lambda: fitter.fit_grouped(df, "a", "g")) == 2 * pmf_job
         df.unpersist()
 
+    def test_small_discrete_fit_runs_no_fan_out_job(self, spark):
+        """A discrete fit naming 2 distributions is under the weighted
+        ``local_fit_threshold``, like its continuous analogue: its
+        kernels run on the driver, so the whole fit is the PMF job and
+        the collect of a local relation, which runs no job."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark.fitter import DiscreteDistributionFitter
+        from spark_bestfit_spark.operators.histogram import (
+            empirical_pmfs_multi,
+        )
+
+        rng = np.random.default_rng(3)
+        df = spark.createDataFrame(
+            pd.DataFrame({"a": rng.poisson(4.0, 3_000)})
+        ).repartition(4).cache()
+        df.count()
+        fitter = DiscreteDistributionFitter(spark)
+        overhead = self._jobs_during(spark, lambda: None)
+
+        def jobs(call):
+            call()  # warm codegen paths
+            return self._jobs_during(spark, call) - overhead
+
+        pmf_job = jobs(lambda: empirical_pmfs_multi(df, ["a"]))
+        fit = jobs(lambda: fitter.fit(
+            df, column="a", distributions=["poisson", "geom"]
+        ).count())
+        assert pmf_job >= 1
+        assert fit == pmf_job, (fit, pmf_job)
+        df.unpersist()
+
     def test_prelude_jobs_stay_in_callers_job_group(self, spark):
         """Every job a fit launches — including the prelude jobs raced
         from helper driver threads — is attributed to the caller's job
@@ -1232,19 +1265,19 @@ class TestFitFanOut:
 
         self._assert_one_wave(spark, parallel_fit_columns, self.CHEAP, False)
 
-    def test_discrete_fit_is_one_task_wave(self, spark):
-        from spark_bestfit_spark.operators.discrete_fit import (
-            parallel_fit_discrete_columns,
-        )
+    DISCRETE = ["poisson", "geom", "nbinom", "binom", "planck"]
 
-        names = ["poisson", "geom", "nbinom", "binom", "planck"]
+    def test_discrete_fit_is_one_task_wave(self, spark):
+        from spark_bestfit_spark.operators.fit import parallel_fit_columns
+
         self._assert_one_wave(
-            spark, parallel_fit_discrete_columns, names, True
+            spark, parallel_fit_columns, self.DISCRETE, True
         )
 
     def test_results_do_not_depend_on_layout(self, spark):
         """Driver-local and fanned-out runs of the same plans return
-        identical rows: the bins only move kernels."""
+        identical rows, for continuous and discrete plans alike: the
+        bins only move kernels."""
         from spark_bestfit_spark.functions.distributions.registry import (
             DistributionRegistry,
         )
@@ -1268,6 +1301,58 @@ class TestFitFanOut:
             )
             assert len(local) == n_cols * len(self.CHEAP)
             assert local == fanned, n_cols
+            plans = self._plans(n_cols, self.DISCRETE, True, size=500)
+            local = sorted(
+                tuple(r) for r in
+                local_fit_columns(spark, plans, cfg, reg).collect()
+            )
+            fanned = sorted(
+                tuple(r) for r in
+                parallel_fit_columns(spark, plans, cfg, reg).collect()
+            )
+            assert len(local) == n_cols * len(self.DISCRETE)
+            assert local == fanned, n_cols
+
+    def test_failed_fits_are_dropped_by_the_snapshot(self, spark, monkeypatch):
+        """Both executors return a failed fit as its sentinel row
+        (sse = inf); the fitter's results snapshot drops it, whichever
+        executor ran the plan."""
+        import numpy as np
+        import pandas as pd
+
+        from spark_bestfit_spark import fitter as fitter_mod
+        from spark_bestfit_spark.functions.distributions.registry import (
+            DistributionRegistry,
+        )
+        from spark_bestfit_spark.operators.fit import (
+            local_fit_columns,
+            parallel_fit_columns,
+        )
+        from spark_bestfit_spark.plans.config import FitterConfig
+
+        names = ["norm", "no_such_dist"]
+        plans = self._plans(1, names, size=300)
+        for fan_out in (local_fit_columns, parallel_fit_columns):
+            sse = {
+                r.distribution: r.sse for r in fan_out(
+                    spark, plans, FitterConfig(), DistributionRegistry()
+                ).collect()
+            }
+            assert sse["no_such_dist"] == float("inf"), fan_out
+            assert np.isfinite(sse["norm"]), fan_out
+        # a name that passes validation but fails in the kernel
+        monkeypatch.setattr(
+            fitter_mod._Fitter, "_validate_names", lambda self, names: None
+        )
+        df = spark.createDataFrame(pd.DataFrame(
+            {"v": np.random.default_rng(5).normal(size=300)}
+        ))
+        for threshold in (12, 0):
+            res = fitter_mod.DistributionFitter(spark).fit(
+                df, column="v", distributions=names,
+                local_fit_threshold=threshold,
+            )
+            assert [r.distribution for r in res.best(5)] == ["norm"]
 
     def test_censored_plan_runs_alike_locally(self, spark):
         """Both executors honour a plan's censor mask: censored MLE, and

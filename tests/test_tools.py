@@ -109,3 +109,17 @@ def test_slow_manifest_guard_flags_only_wholly_collected_files():
         "tests/a.py::T::test_renamed",
     ]
 
+
+def test_fit_digest_scenario_is_stable_and_row_sensitive(spark):
+    """tools/fit_digest.py: one scenario digests to the same sha256 on
+    a rerun, dropping a result row changes it, and an unknown scenario
+    name fails before any fit runs."""
+    import fit_digest
+
+    fit = fit_digest.SCENARIOS["discrete_2_names"]
+    res = fit(spark)
+    first = fit_digest.digest(res)
+    assert len(first) == 64
+    assert fit_digest.digest(fit(spark)) == first
+    assert fit_digest.digest(res._view(res._rows[1:])) != first
+    assert fit_digest.main(["no_such_scenario"]) == 1
